@@ -338,6 +338,7 @@ def main():
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
         "rows": rows,
         "cpus": CPUS,
+        "nproc": len(os.sched_getaffinity(0)),
         "throughput_rows_per_sec": round(rows / timings["flagship_e2e"], 1),
     }
     if ss_sec is not None:
@@ -393,9 +394,13 @@ def main():
     # SPARK_GRAFT_SCALING="2,8,32" overrides levels; "" disables.
     scaling = os.environ.get("SPARK_GRAFT_SCALING", "1,4,8,32")
     if scaling:
-        levels = [int(x) for x in scaling.split(",")]
+        # a level above SPARK_GRAFT_CPUS oversubscribes the cores: its
+        # pair would measure contention, not scaling
+        levels = [int(x) for x in scaling.split(",") if int(x) <= CPUS]
         reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPLICAS", "30"))
         try:
+            if len(levels) < 2:
+                raise ValueError(f"scaling needs two levels <= {CPUS} cores")
             in_path = materialize_input(reps)
             # STOP the 32-core parent session before measuring: a live
             # local master (worker pool + JVM heap) steals cores from
@@ -586,6 +591,7 @@ def emit(out: dict):
         "sf": out["sf"],
         "rows": out["rows"],
         "cpus": out["cpus"],
+        "nproc": out["nproc"],
         "throughput_rows_per_sec": out["throughput_rows_per_sec"],
     }
     for key in ("steady_state", "steady_state_10m"):

@@ -28,9 +28,12 @@ from __future__ import annotations
 import bisect
 import json
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLE_NOT_FOUND = "TABLE-NOT-FOUND"
 
@@ -110,9 +113,24 @@ class LookupTable:
                      val_col: str = "value") -> DataFrame:
         if self.kind == "sparseArray":
             rows = list(zip(self.keys, self.vals))
-            return spark.createDataFrame(rows, f"{key_col} long, {val_col} string")
+            return local_table(spark, rows, f"{key_col} long, {val_col} string")
         rows = [(str(k), str(v)) for k, v in self.mapping.items()]
-        return spark.createDataFrame(rows, f"{key_col} string, {val_col} string")
+        return local_table(spark, rows, f"{key_col} string, {val_col} string")
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Small dimension data as a JVM-local relation (``LocalTableScan``).
+
+    ``spark.createDataFrame(rows)`` over a Python list plans a scan of a
+    Python RDD, so every query that broadcasts the dimension runs a
+    Python-worker task to rebuild it. An Arrow table is handed to the
+    JVM once, on the driver, and stays there."""
+    st = StructType.fromDDL(schema)
+    names = st.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table, st)
 
 
 class LookupRegistry:

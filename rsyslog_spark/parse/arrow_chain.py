@@ -7,11 +7,12 @@ pyarrow Array end-to-end (RE2 extracts, C++ if_else merges), so no
 PyObject is allocated per row. Only the timestamp component math drops
 to numpy (integer arrays, vectorized).
 
-Control flow is mask-merge instead of subset-scatter: each cascade step
-runs over the full array and its result is gated by the masks of the
-earlier steps — RE2 is cheap enough that the wasted evaluation on
-already-claimed rows costs less than index bookkeeping, and the code
-stays branch-free (the GPU-style formulation of the same cascade).
+Control flow is subset-scatter: each parser runs its regexes only on the
+rows it owns — pmlastmsg's match, then the 5424 version guard, then
+3164 on the rest (parser.c:654-672) — and the parts are concatenated
+and ``take``n back into input order. Running every parser's cascade on
+every row and merging by masks wasted most of the RE2 work: a 3164
+header cascade is five extracts, which the 5424 rows never need.
 
 Validated against the pandas reference chain row-for-row
 (tests/test_arrow_chain.py) and by the DuckDB oracle gate.
@@ -187,65 +188,104 @@ def _ts3164_us(g: dict, recv_us: np.ndarray, ok: np.ndarray) -> np.ndarray:
     return np.where(ok, out, recv_us)
 
 
-def parse_chain_arrow(
-    after_pri: pa.Array,
-    facility: pa.Array,
-    recv_ts: pa.Array,
-    fromhost: pa.Array,
-    has_pri: pa.Array,
-    require_header: bool = False,
-    with_lastmsg: bool = False,
-) -> dict[str, pa.Array]:
-    """Full chain over arrow arrays; returns the PARSED_STRUCT columns.
+_RE_TS5424 = (
+    r"^(?P<y>\d{4})-(?P<mo>\d{2})-(?P<d>\d{2})"
+    r"[Tt](?P<hh>\d{2}):(?P<mi>\d{2}):(?P<sec>\d{2})"
+    r"(?P<frac>\.\d+)?(?P<zone>[Zz]|[+-]\d{2}:\d{2})$"
+)
+_RE_LASTMSG = r"(?i)^ *last message repeated \d+ times$"
 
-    ``with_lastmsg`` puts pmlastmsg on top of the parser stack
-    (plugins/pmlastmsg/pmlastmsg.c:90-130 — 'should be placed on top'):
-    rows matching 'last message repeated N times' take MSG = the whole
-    after-PRI text, TAG '', TS = received time, legacy protocol."""
-    s = _fill(after_pri.cast(pa.string()))
-    fromhost = _fill(fromhost.cast(pa.string()))
-    has_pri = pc.fill_null(has_pri.cast(pa.bool_()), False)
-    n = len(s)
-    recv_us = recv_ts.cast(pa.timestamp("us")).cast(pa.int64()).to_numpy(
-        zero_copy_only=False
-    )
+# PARSED_STRUCT column -> arrow type (timereported travels as epoch µs)
+_OUT_TYPES = {
+    "protocol_version": pa.int32(),
+    "timestamp_text": pa.string(),
+    "hostname": pa.string(),
+    "syslogtag": pa.string(),
+    "app_name": pa.string(),
+    "procid": pa.string(),
+    "msgid": pa.string(),
+    "structured_data": pa.string(),
+    "msg": pa.string(),
+    "parse_success": pa.bool_(),
+    "parser": pa.string(),
+    "timereported": pa.timestamp("us"),
+}
 
-    # ---- pmrfc5424 (guard decides ownership, pmrfc5424.c:224-226) ----
-    use5 = pc.starts_with(s, "1 ")
+
+def _lastmsg(s: pa.Array, fromhost: pa.Array, recv_us: np.ndarray) -> dict:
+    """pmlastmsg accept (pmlastmsg.c:90-130): legacy protocol, TS =
+    received time, MSG = the whole after-PRI text, TAG ''."""
+    return {
+        "protocol_version": 0,
+        "hostname": fromhost,
+        "syslogtag": "",
+        "msg": s,
+        "parse_success": True,
+        "parser": "lastmsg",
+        "timereported": recv_us,
+    }
+
+
+def _rfc5424(s: pa.Array, recv_us: np.ndarray) -> dict:
+    """pmrfc5424 over rows that passed the '1 ' version guard, which is
+    the accept decision (pmrfc5424.c:224-226): a row whose header does
+    not match keeps '-' fields and MSG = the text after the guard."""
     g5 = _extract(s, _RE_5424)
-    matched5 = pc.and_(use5, g5["_ok"])
-    bad5 = pc.and_(use5, pc.invert(g5["_ok"]))
+    ok = g5["_ok"]
     dash = pa.scalar("-", pa.string())
 
-    def _f5(name):
-        return pc.if_else(matched5, _fill(g5[name]), dash)
+    def field(name):
+        return pc.if_else(ok, _fill(g5[name]), dash)
 
-    ts5_txt = _f5("ts")
-    host5 = _f5("host")
-    app5 = _f5("app")
-    procid5 = _f5("procid")
-    msgid5 = _f5("msgid")
-    sd5 = _f5("sd")
-    msg5 = pc.if_else(
-        matched5, _fill(g5["msg"]), pc.utf8_slice_codeunits(s, 2, 2**30)
+    ts_txt = field("ts")
+    app = field("app")
+    procid = field("procid")
+    tag = pc.if_else(
+        pc.equal(procid, dash),
+        app,
+        pc.binary_join_element_wise(app, "[", procid, "]", ""),
     )
-    tag5 = pc.if_else(
-        pc.equal(procid5, dash),
-        app5,
-        pc.binary_join_element_wise(app5, "[", procid5, "]", ""),
-    )
-    gt5 = _extract(ts5_txt, r"^(?P<y>\d{4})-(?P<mo>\d{2})-(?P<d>\d{2})"
-                            r"[Tt](?P<hh>\d{2}):(?P<mi>\d{2}):(?P<sec>\d{2})"
-                            r"(?P<frac>\.\d+)?(?P<zone>[Zz]|[+-]\d{2}:\d{2})$")
-    ts5_us = _ts3339_us(gt5, recv_us, gt5["_ok"].to_numpy(zero_copy_only=False))
+    gt = _extract(ts_txt, _RE_TS5424)
+    return {
+        "protocol_version": 1,
+        "timestamp_text": ts_txt,
+        "hostname": field("host"),
+        "syslogtag": tag,
+        "app_name": app,
+        "procid": procid,
+        "msgid": field("msgid"),
+        "structured_data": field("sd"),
+        "msg": pc.if_else(
+            ok, _fill(g5["msg"]), pc.utf8_slice_codeunits(s, 2, 2**30)
+        ),
+        "parse_success": True,
+        "parser": "rfc5424",
+        "timereported": _ts3339_us(
+            gt, recv_us, gt["_ok"].to_numpy(zero_copy_only=False)
+        ),
+    }
 
-    # ---- pmrfc3164 ----------------------------------------------------
-    fac_invld = pc.equal(facility.cast(pa.int64()), 24)
+
+def _rfc3164(
+    s: pa.Array,
+    facility: pa.Array,
+    fromhost: pa.Array,
+    has_pri: pa.Array,
+    recv_us: np.ndarray,
+    require_header: bool,
+) -> dict:
+    """pmrfc3164 over the rows no earlier parser took. With
+    ``require_header`` a row with no PRI and no timestamp is declined;
+    such rows exhaust the chain and take the discard shape
+    (parser.c:679-687): success false, MSG = the whole text, TAG null."""
+    n = len(s)
+    fac_invld = pc.equal(facility, 24)
     headerless = pc.and_(
         pc.invert(fac_invld),
         pc.match_substring_regex(s, r"^[ \t]*[\{\[]"),
     )
     noheader = pc.or_(fac_invld, headerless)
+    header = pc.invert(noheader)
 
     g39 = _extract(s, _RE_TS3339_HEAD)
     ok39 = g39["_ok"]
@@ -260,7 +300,7 @@ def parse_chain_arrow(
     gh = _extract(rest3, _RE_HOST)
     hfull = _nz(gh["hfull"])
     hsp = _nz(gh["hsp"])
-    host3164 = pc.if_else(
+    host = pc.if_else(
         hfull, _fill(gh["hfull"]),
         pc.if_else(hsp, _fill(gh["hsp"]), fromhost),
     )
@@ -269,18 +309,16 @@ def parse_chain_arrow(
     )
 
     gt = _extract(rest4, _RE_TAG)
-    tag3164 = pc.binary_join_element_wise(
+    tag = pc.binary_join_element_wise(
         _fill(gt["tag"]), _fill(gt["colon"]), ""
     )
-    msg3164 = _fill(gt["mrest"])
-
     # headerless/invalid-PRI rows: whole text is MSG (pmrfc3164.c:190-205)
-    msg3164 = pc.if_else(noheader, s, msg3164)
-    tag3164 = pc.if_else(noheader, _EMPTY, tag3164)
-    host3164 = pc.if_else(noheader, fromhost, host3164)
+    msg = pc.if_else(noheader, s, _fill(gt["mrest"]))
+    tag = pc.if_else(noheader, _EMPTY, tag)
+    host = pc.if_else(noheader, fromhost, host)
 
     # timestamp text + value
-    ts64_txt_np = pc.binary_join_element_wise(
+    ts64_txt = pc.binary_join_element_wise(
         _fill(g64["mon"]), " ", _fill(g64["day"]), " ",
         _fill(g64["h"]), ":", _fill(g64["mi"]), ":", _fill(g64["s"]), "",
     )
@@ -289,90 +327,116 @@ def parse_chain_arrow(
         _fill(ghp["h"]), ":", _fill(ghp["mi"]), ":", _fill(ghp["s"]), "",
     )
     null_str = pa.nulls(n, pa.string())
-    ts_txt3164 = pc.if_else(
-        pc.and_(ok39, pc.invert(noheader)), _fill(g39["all"]),
-        pc.if_else(
-            pc.and_(ok64, pc.invert(noheader)), ts64_txt_np,
-            pc.if_else(pc.and_(okhp, pc.invert(noheader)), tshp_txt,
-                       null_str),
-        ),
+    use39 = pc.and_(ok39, header)
+    use64 = pc.and_(ok64, header)
+    usehp = pc.and_(okhp, header)
+    ts_txt = pc.if_else(
+        use39, _fill(g39["all"]),
+        pc.if_else(use64, ts64_txt, pc.if_else(usehp, tshp_txt, null_str)),
     )
-    np39 = pc.and_(ok39, pc.invert(noheader)).to_numpy(zero_copy_only=False)
-    np64 = pc.and_(ok64, pc.invert(noheader)).to_numpy(zero_copy_only=False)
-    nphp = pc.and_(okhp, pc.invert(noheader)).to_numpy(zero_copy_only=False)
+    np39 = use39.to_numpy(zero_copy_only=False)
+    np64 = use64.to_numpy(zero_copy_only=False)
+    nphp = usehp.to_numpy(zero_copy_only=False)
     us39 = _ts3339_us(g39, recv_us, np39)
     us64 = _ts3164_us(g64, recv_us, np64)
     ushp = _ts3164_us(ghp, recv_us, nphp)
-    ts3164_us = np.where(np39, us39, np.where(np64, us64,
-                         np.where(nphp, ushp, recv_us)))
+    ts_us = np.where(np39, us39, np.where(np64, us64,
+                     np.where(nphp, ushp, recv_us)))
 
-    if require_header:
-        acc3164_pa = pc.or_(
+    if not require_header:
+        acc = pa.array(np.ones(n, dtype=bool))
+    else:
+        acc = pc.or_(
             pc.or_(noheader, has_pri), pc.or_(ok39, pc.or_(ok64, okhp))
         )
-    else:
-        acc3164_pa = pa.array(np.ones(n, dtype=bool))
-
-    # ---- merge chain results (parser.c:654-687) -----------------------
-    if with_lastmsg:
-        ownL = pc.match_substring_regex(
-            s, r"(?i)^ *last message repeated \d+ times$"
-        )
-    else:
-        ownL = pa.array(np.zeros(n, dtype=bool))
-    notL = pc.invert(ownL)
-    own5 = pc.and_(notL, use5)
-    own3164 = pc.and_(pc.and_(notL, pc.invert(own5)), acc3164_pa)
-    failed = pc.and_(
-        pc.and_(notL, pc.invert(own5)), pc.invert(acc3164_pa)
-    )
-
-    def merge_str(v5, v3, vfail):
-        return pc.if_else(own5, v5, pc.if_else(own3164, v3, vfail))
-
-    empty_str = pa.scalar("", pa.string())
-    hostname = merge_str(host5, host3164, fromhost)
-    syslogtag = pc.if_else(
-        ownL, empty_str, merge_str(tag5, tag3164, null_str)
-    )
-    app_name = pc.if_else(own5, app5, null_str)
-    # 3164 has no PROCID header field -> null at chain level; the legacy
-    # TAG-based emulation (msg.c:1495-1542) runs natively after the chain
-    procid = pc.if_else(own5, procid5, null_str)
-    msgid = pc.if_else(own5, msgid5, null_str)
-    sd = pc.if_else(own5, sd5, null_str)
-    msg = pc.if_else(ownL, s, merge_str(msg5, msg3164, s))
-    ts_text = pc.if_else(
-        ownL, null_str, merge_str(ts5_txt, ts_txt3164, null_str)
-    )
-    own5_np = own5.to_numpy(zero_copy_only=False)
-    own3164_np = own3164.to_numpy(zero_copy_only=False)
-    timereported = np.where(own5_np, ts5_us,
-                            np.where(own3164_np, ts3164_us, recv_us))
-    parser = pc.if_else(
-        ownL, pa.scalar("lastmsg", pa.string()),
-        pc.if_else(
-            own5, pa.scalar("rfc5424", pa.string()),
-            pc.if_else(own3164, pa.scalar("rfc3164", pa.string()),
-                       pa.scalar("none", pa.string())),
-        ),
-    )
-    parse_success = pc.invert(failed)
-    protocol_version = pc.if_else(
-        own5, pa.scalar(1, pa.int32()), pa.scalar(0, pa.int32())
-    )
-
     return {
-        "protocol_version": protocol_version,
-        "timestamp_text": ts_text,
-        "hostname": hostname,
-        "syslogtag": syslogtag,
-        "app_name": app_name,
-        "procid": procid,
-        "msgid": msgid,
-        "structured_data": sd,
-        "msg": msg,
-        "parse_success": parse_success,
-        "parser": parser,
-        "timereported": pa.array(timereported).cast(pa.timestamp("us")),
+        "protocol_version": 0,
+        "timestamp_text": pc.if_else(acc, ts_txt, null_str),
+        "hostname": pc.if_else(acc, host, fromhost),
+        "syslogtag": pc.if_else(acc, tag, null_str),
+        # no APP-NAME/PROCID/MSGID/SD fields: null at chain level; the
+        # legacy TAG-based PROCID emulation (msg.c:1495-1542) runs
+        # natively after the chain
+        "msg": pc.if_else(acc, msg, s),
+        "parse_success": acc,
+        "parser": pc.if_else(
+            acc, pa.scalar("rfc3164", pa.string()),
+            pa.scalar("none", pa.string()),
+        ),
+        "timereported": np.where(
+            acc.to_numpy(zero_copy_only=False), ts_us, recv_us
+        ),
+    }
+
+
+def _column(value, n: int, typ: pa.DataType) -> pa.Array:
+    """A part's field as an arrow array: arrays pass through, numpy
+    epoch µs is wrapped, a constant (None for a field the part does not
+    set) is repeated ``n`` times."""
+    if isinstance(value, pa.Array):
+        return value
+    if isinstance(value, np.ndarray):
+        return pa.array(value, typ)
+    return pa.repeat(pa.scalar(value, typ), n)
+
+
+def parse_chain_arrow(
+    after_pri: pa.Array,
+    facility: pa.Array,
+    recv_ts: pa.Array,
+    fromhost: pa.Array,
+    has_pri: pa.Array,
+    require_header: bool = False,
+    with_lastmsg: bool = False,
+) -> dict[str, pa.Array]:
+    """Full chain over arrow arrays; returns the PARSED_STRUCT columns
+    in input row order.
+
+    ``with_lastmsg`` puts pmlastmsg on top of the parser stack
+    (plugins/pmlastmsg/pmlastmsg.c:90-130 — 'should be placed on top'):
+    rows matching 'last message repeated N times' take MSG = the whole
+    after-PRI text, TAG '', TS = received time, legacy protocol."""
+    s = _fill(after_pri.cast(pa.string()))
+    fromhost = _fill(fromhost.cast(pa.string()))
+    has_pri = pc.fill_null(has_pri.cast(pa.bool_()), False)
+    facility = facility.cast(pa.int64())
+    n = len(s)
+    recv_us = recv_ts.cast(pa.timestamp("us")).cast(pa.int64()).to_numpy(
+        zero_copy_only=False
+    )
+
+    # first parser that accepts a row owns it (parser.c:654-672); each
+    # part is (row indices, that parser's columns for those rows)
+    parts = []
+    rest = np.arange(n)
+    if with_lastmsg:
+        own = pc.match_substring_regex(s, _RE_LASTMSG).to_numpy(
+            zero_copy_only=False
+        )
+        idx = rest[own]
+        if len(idx):
+            parts.append(
+                (idx, _lastmsg(s.take(idx), fromhost.take(idx), recv_us[idx]))
+            )
+        rest = rest[~own]
+    own = pc.starts_with(s.take(rest), "1 ").to_numpy(zero_copy_only=False)
+    idx = rest[own]
+    if len(idx):
+        parts.append((idx, _rfc5424(s.take(idx), recv_us[idx])))
+    idx = rest[~own]
+    if len(idx):
+        parts.append((idx, _rfc3164(
+            s.take(idx), facility.take(idx), fromhost.take(idx),
+            has_pri.take(idx), recv_us[idx], require_header,
+        )))
+
+    order = np.concatenate([idx for idx, _ in parts] or [rest])
+    back = np.empty(n, dtype=np.int64)
+    back[order] = np.arange(n)
+    return {
+        f: pa.concat_arrays(
+            [_column(cols.get(f), len(idx), typ) for idx, cols in parts]
+            or [pa.array([], typ)]
+        ).take(back)
+        for f, typ in _OUT_TYPES.items()
     }

@@ -7,10 +7,10 @@ parser.c:646-648); the first parser not returning COULD_NOT_PARSE wins
 rate-limited error (parser.c:679-687) — here: ``parse_success = false``
 and the row is routable to a parse_errors sink instead of being dropped.
 
-Spark shape: ONE Arrow-batched pandas UDF runs the whole chain per batch
-(both parsers are pandas-vectorized inside), so each row crosses the
-JVM<->Python boundary exactly once. PRI decode and sanitize happen
-natively before the UDF; programname/procid derivation happens natively
+Spark shape: ONE ``mapInArrow`` pass (``with_parsed``) does all the
+per-message work of ParseMsg over each Arrow batch — sanitize, PRI
+decode and the parser chain — so each row crosses the JVM<->Python
+boundary exactly once; programname/procid derivation happens natively
 after it. The reference's analog of our Arrow batch is its dequeue batch
 of 128 messages (runtime/queue.c:1534).
 """
@@ -20,15 +20,21 @@ from __future__ import annotations
 from functools import lru_cache
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
 from rsyslog_spark.parse.pm3164 import parse_3164
 from rsyslog_spark.parse.pm5424 import parse_5424
-from rsyslog_spark.parse.sanitize import with_sanitized
+from rsyslog_spark.parse.pri import _pri_len_sql, decode_pri_arrow
+from rsyslog_spark.parse.sanitize import sanitize_arrow
 from rsyslog_spark.schema import PARSED_STRUCT
 
 _FIELDS = [f.name for f in PARSED_STRUCT.fields]
+_PRI_COLS = ["pri", "syslogfacility", "syslogseverity"]
 
 
 def parse_chain_pd(
@@ -198,53 +204,35 @@ def with_parsed(
     parse_success, parser, timereported, timegenerated, programname
     (* only with ``keep_raw=True``).
 
-    The chain runs via ``mapInArrow`` — ONE Arrow round trip per
-    partition, and the MESSAGE TEXT crosses the boundary exactly ONCE:
-    only ``rawmsg`` ships in; ``rawmsg_after_pri`` is re-derived from
-    it with one RE2 pass inside the worker (it used to ride the channel
-    as a second full-text column — r01 shipped the text 3x: rawmsg in,
-    after_pri in, rawmsg out; at 10^12 rows those copies are the
-    memory-bandwidth bill the scaling gate pays). ``keep_raw=False``
-    (the flagship/routing path, which never reads rawmsg downstream)
-    drops the raw text from the RETURN batch too — text crosses once
-    inbound, and only the parsed fields come back. Two rejected
+    ONE ``mapInArrow`` pass per partition does all per-message work,
+    like the reference's one ParseMsg pass per dequeued batch
+    (runtime/parser.c:617-694, queue.c:1534): the raw ``text`` ships in
+    and the worker runs SanitizeMsg (``sanitize_arrow``), ParsePRI
+    (``decode_pri_arrow``) and the parser chain on each Arrow batch, so
+    the JVM evaluates no regex below the crossing and the message text
+    crosses the boundary exactly once inbound. ``keep_raw=False`` (the
+    flagship/routing path, which never reads rawmsg downstream) leaves
+    the sanitized text out of the RETURN batch too — only the parsed
+    fields come back. ``engine="arrow"`` runs the stock parser orders
+    through ``parse_chain_arrow``; other orders fall back to the pandas
+    chain after the same sanitize/PRI prelude. Two rejected
     alternatives, both measured slower at 1M rows: a struct-returning
     pandas UDF (projection collapse duplicates the UDF per extracted
     field — observed 2x ArrowEvalPython), and mapInPandas (object-ifies
     every pass-through column both ways ~2.7x the parse CPU itself).
-    This is the Spark analog of the reference's one ParseMsg pass per
-    dequeued batch (runtime/parser.c:617-694, queue.c:1534).
     """
-    from pyspark.sql import types as T
-
-    df = with_sanitized(df, raw_col=text_col, out="rawmsg")
-    raw = F.col("rawmsg")
-    # PRI ints are computed natively (4-byte columns are channel-cheap;
-    # the TEXT columns are the expensive cargo)
-    from rsyslog_spark.parse.pri import (
-        _pri_len_sql,
-        facility_expr,
-        pri_expr,
-        severity_expr,
+    pre = df.withColumn("_fromhost", F.col(fromhost_col)) if fromhost_col else df
+    made = {text_col, "rawmsg", *_PRI_COLS}
+    passthrough = [f for f in df.schema.fields if f.name not in made]
+    keep = [f.name for f in passthrough]
+    if keep_raw:
+        passthrough.append(T.StructField("rawmsg", T.StringType()))
+    out_schema = T.StructType(
+        passthrough
+        + [T.StructField(c, T.IntegerType()) for c in _PRI_COLS]
+        + list(PARSED_STRUCT.fields)
     )
-
-    df = (
-        df.withColumn("pri", pri_expr(raw))
-        .withColumn("syslogfacility", facility_expr(F.col("pri")))
-        .withColumn("syslogseverity", severity_expr(F.col("pri")))
-    )
-    pre = df.drop(text_col).withColumn("_has_pri", raw.startswith("<"))
-    if fromhost_col:
-        pre = pre.withColumn("_fromhost", F.col(fromhost_col))
-    from rsyslog_spark.schema import PARSED_STRUCT
-
-    drop_out = {"_has_pri", "_fromhost"}
-    if not keep_raw:
-        drop_out.add("rawmsg")
-    out_fields = [
-        f for f in pre.schema.fields if f.name not in drop_out
-    ]
-    out_schema = T.StructType(out_fields + list(PARSED_STRUCT.fields))
+    out_names = [f.name for f in out_schema.fields]
     _PA_TYPES = {
         "protocol_version": "int32",
         "parse_success": "bool",
@@ -260,49 +248,34 @@ def with_parsed(
     with_lastmsg = _ARROW_CHAINS.get(tuple(parsers), False)
     has_fromhost = bool(fromhost_col)
 
-    # offAfterPRI re-derivation (mirrors pri.pri_len_expr): valid
-    # '<0-4 digits>' with value <= 191 consumes the bracket run
-    _AFTER_PRI_RE = r"(?s)^<(?P<d>[0-9]{0,4})>(?P<rest>.*)$"
-
     def _run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from rsyslog_spark.parse.arrow_chain import _extract, _ints
-
         for batch in batches:
-            names = batch.schema.names
-            col = {n: batch.column(i) for i, n in enumerate(names)}
-            keep = [n for n in names if n not in drop_out]
+            col = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
+            rawmsg = sanitize_arrow(col[text_col])
+            ints, after_pri = decode_pri_arrow(rawmsg)
+            has_pri = pc.fill_null(pc.starts_with(rawmsg, "<"), False)
             arrays = [col[n] for n in keep]
-            rawa = pc.fill_null(col["rawmsg"].cast(pa.string()), "")
-            g = _extract(rawa, _AFTER_PRI_RE)
-            valid = pc.and_(g["_ok"], pc.less_equal(
-                pa.array(_ints(g["d"]), pa.int64()), 191
-            ))
-            after_pri = pc.if_else(valid, pc.fill_null(g["rest"], ""), rawa)
+            if keep_raw:
+                arrays.append(rawmsg)
+            arrays += [ints[c] for c in _PRI_COLS]
             fromhost_a = (
                 col["_fromhost"]
                 if has_fromhost
-                else pa.array([""] * len(rawa), pa.string())
+                else pa.array([""] * len(rawmsg), pa.string())
             )
             if engine == "arrow":
                 # zero-object path: strings never leave Arrow
-                from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
-
                 out_a = parse_chain_arrow(
                     after_pri,
-                    col["syslogfacility"],
+                    ints["syslogfacility"],
                     col[recv_ts_col],
                     fromhost_a,
-                    col["_has_pri"],
+                    has_pri,
                     require_header=require_header,
                     with_lastmsg=with_lastmsg,
                 )
                 arrays += [out_a[f] for f in _FIELDS]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=keep + _FIELDS
-                )
+                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
                 continue
             recv = col[recv_ts_col].to_pandas()
             if getattr(recv.dtype, "tz", None) is not None:
@@ -311,10 +284,10 @@ def with_parsed(
                 recv = recv.dt.tz_localize(None)
             out = parse_chain_pd(
                 after_pri.to_pandas(),
-                col["syslogfacility"].to_pandas(),
+                ints["syslogfacility"].to_pandas(),
                 recv,
                 fromhost_a.to_pandas(),
-                col["_has_pri"].to_pandas(),
+                has_pri.to_pandas(),
                 parsers=tuple(parsers),
                 require_header=require_header,
             )
@@ -330,7 +303,7 @@ def with_parsed(
                     )
                 else:
                     arrays.append(pa.array(out[f], type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + _FIELDS)
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     df = pre.mapInArrow(_run, out_schema)
     if keep_raw:

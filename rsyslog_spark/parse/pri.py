@@ -1,4 +1,5 @@
-"""PRI ``<NNN>`` decode as native Column expressions (no UDF).
+"""PRI ``<NNN>`` decode: Column expressions, and the Arrow form the parse
+worker runs (``decode_pri_arrow``).
 
 Reference: ``ParsePRI`` runtime/parser.c:576-609 and ``msgSetPRI``
 runtime/msg.c:1608-1614. Exact semantics replicated:
@@ -17,8 +18,13 @@ severity = pri & 7 (pri2sev, rsyslog.h:237).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from rsyslog_spark.parse.arrow_chain import _extract, _ints
 
 DEFUPRI = 13  # LOG_USER|LOG_NOTICE, parser.c:47
 LOG_PRI_INVLD = 199  # (LOG_FAC_INVLD<<3)|LOG_DEBUG, rsyslog.h:180,218-219
@@ -51,6 +57,37 @@ def pri_len_expr(raw: Column) -> Column:
         raw.startswith("<") & matched & (val <= LOG_MAXPRI),
         F.length(digits) + 2,
     ).otherwise(F.lit(0))
+
+
+# the same rule as _PRI_RE, with the text after the header captured
+_AFTER_PRI_RE = r"(?s)^<(?P<d>[0-9]{0,4})>(?P<rest>.*)$"
+
+
+def decode_pri_arrow(raw: pa.Array) -> tuple[dict[str, pa.Array], pa.Array]:
+    """ParsePRI over an Arrow batch of sanitized messages, in one RE2 pass.
+
+    Returns the int32 ``pri``/``syslogfacility``/``syslogseverity``
+    arrays and the after-PRI text (offAfterPRI, msg.h:70). Same values
+    as ``pri_expr``, including a null message -> LOG_PRI_INVLD; its
+    after-PRI text is ''."""
+    raw = raw.cast(pa.string())
+    # a null message decodes to LOG_PRI_INVLD, like pri_expr
+    lt = pc.fill_null(pc.starts_with(raw, "<"), True)
+    raw = pc.fill_null(raw, "")
+    g = _extract(raw, _AFTER_PRI_RE)
+    digits = _ints(g["d"])
+    valid = g["_ok"].to_numpy(zero_copy_only=False) & (digits <= LOG_MAXPRI)
+    pri = np.where(
+        valid, digits,
+        np.where(lt.to_numpy(zero_copy_only=False), LOG_PRI_INVLD, DEFUPRI),
+    ).astype(np.int32)
+    after_pri = pc.if_else(pa.array(valid), pc.fill_null(g["rest"], ""), raw)
+    ints = {
+        "pri": pri,
+        "syslogfacility": np.minimum(pri >> 3, 24),
+        "syslogseverity": pri & 7,
+    }
+    return {k: pa.array(v, pa.int32()) for k, v in ints.items()}, after_pri
 
 
 def facility_expr(pri: Column) -> Column:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rsyslog_spark.lookup import enrich_join
+from rsyslog_spark.lookup import enrich_join, local_table
 from rsyslog_spark.parse import with_parsed
 from rsyslog_spark.route import Action, If, PropFilt, RouteCompiler, Ruleset, Stop
 from rsyslog_spark.sinks import SinkSpec, fan_out
@@ -47,11 +47,11 @@ ROLE_DIM = [
 
 
 def tool_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_DIM, "tool string, tool_class string, risk int")
+    return local_table(spark, TOOL_DIM, "tool string, tool_class string, risk int")
 
 
 def role_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DIM, "role string, sink_group string")
+    return local_table(spark, ROLE_DIM, "role string, sink_group string")
 
 
 def flagship_ruleset() -> Ruleset:

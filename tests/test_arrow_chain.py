@@ -11,6 +11,7 @@ import pytest
 
 from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
 from rsyslog_spark.parse.chain import parse_chain_pd
+from rsyslog_spark.schema import PARSED_STRUCT
 from rsyslog_spark.sources.transcripts import transcripts_sql_duckdb
 
 RECV = pd.Timestamp("2024-06-15 12:00:00")
@@ -41,9 +42,12 @@ EDGE_CASES = [
 ]
 
 
-def _compare(after, fac, recv, fromhost, has_pri, require_header):
+def _compare(after, fac, recv, fromhost, has_pri, require_header,
+             with_lastmsg=False):
+    parsers = (("lastmsg",) if with_lastmsg else ()) + ("rfc5424", "rfc3164")
     ref = parse_chain_pd(
-        after, fac, recv, fromhost, has_pri, require_header=require_header
+        after, fac, recv, fromhost, has_pri, parsers=parsers,
+        require_header=require_header,
     ).reset_index(drop=True)
     got_arrays = parse_chain_arrow(
         pa.Array.from_pandas(after, type=pa.string()),
@@ -52,6 +56,7 @@ def _compare(after, fac, recv, fromhost, has_pri, require_header):
         pa.Array.from_pandas(fromhost, type=pa.string()),
         pa.Array.from_pandas(has_pri, type=pa.bool_()),
         require_header=require_header,
+        with_lastmsg=with_lastmsg,
     )
     got = pd.DataFrame({k: v.to_pandas() for k, v in got_arrays.items()})
     for col in ref.columns:
@@ -65,6 +70,27 @@ def _compare(after, fac, recv, fromhost, has_pri, require_header):
             f"{mism.idxmax()}: ref={a[mism.idxmax()]!r} "
             f"got={b[mism.idxmax()]!r} input={after[mism.idxmax()]!r}"
         )
+    return got
+
+
+# one parser owns every row of these batches (lastmsg only when it is
+# on the chain; otherwise the lastmsg rows fall to rfc3164)
+ONE_PARSER = {
+    "rfc5424": [t for t in EDGE_CASES if t.startswith("1 ")],
+    "rfc3164": [t for t in EDGE_CASES if not t.startswith("1 ")],
+    "lastmsg": ["last message repeated 3 times",
+                "  last message repeated 12 TIMES",
+                "last message repeated 7 times"],
+}
+MIXED = [
+    "1 - h a p m - first",
+    "last message repeated 2 times",
+    "Jan  5 10:00:00 h a: third",
+    "1 2024-01-05T10:00:00Z h a p m - fourth",
+    "garbage fifth",
+    "  last message repeated 9 times",
+    "Jan  5 10:00:00 h a: seventh",
+]
 
 
 class TestArrowChainEquivalence:
@@ -119,3 +145,130 @@ class TestArrowChainEquivalence:
             pd.Series([True, True]),
             False,
         )
+
+
+class TestOwnedRows:
+    """parse_chain_arrow runs each parser on the rows it owns and
+    scatters the parts back: batches where a parser owns nothing, empty
+    and all-null batches, and input order."""
+
+    @pytest.mark.parametrize("require_header", [True, False])
+    @pytest.mark.parametrize("with_lastmsg", [True, False])
+    @pytest.mark.parametrize("owner", sorted(ONE_PARSER))
+    def test_one_parser_owns_all(self, owner, with_lastmsg, require_header):
+        texts = ONE_PARSER[owner]
+        n = len(texts)
+        got = _compare(
+            pd.Series(texts), pd.Series([1] * n), pd.Series([RECV] * n),
+            pd.Series(["rx"] * n), pd.Series([i % 2 == 0 for i in range(n)]),
+            require_header, with_lastmsg=with_lastmsg,
+        )
+        # 3164 may decline a row (require_header): it then fails
+        fallback = {"rfc3164", "none"}
+        want = {
+            "rfc5424": {"rfc5424"},
+            "rfc3164": fallback,
+            "lastmsg": {"lastmsg"} if with_lastmsg else fallback,
+        }[owner]
+        assert set(got["parser"]) <= want
+
+    @pytest.mark.parametrize("require_header", [True, False])
+    @pytest.mark.parametrize("with_lastmsg", [True, False])
+    def test_mixed_order_kept(self, with_lastmsg, require_header):
+        n = len(MIXED)
+        got = _compare(
+            pd.Series(MIXED), pd.Series([1] * n), pd.Series([RECV] * n),
+            pd.Series([f"rx{i}" for i in range(n)]), pd.Series([False] * n),
+            require_header, with_lastmsg=with_lastmsg,
+        )
+        repeated = "lastmsg" if with_lastmsg else (
+            "none" if require_header else "rfc3164")
+        garbage = "none" if require_header else "rfc3164"
+        assert got["parser"].tolist() == [
+            "rfc5424", repeated, "rfc3164", "rfc5424", garbage, repeated,
+            "rfc3164",
+        ]
+        for i, word in {0: "first", 2: "third", 3: "fourth", 6: "seventh"}.items():
+            assert got["msg"][i].strip() == word
+        # rows that keep the whole text and the received host, each with
+        # its own row's values
+        whole = [i for i, p in enumerate(got["parser"]) if p in ("lastmsg", "none")]
+        assert whole == sorted(
+            ([1, 5] if repeated != "rfc3164" else []) + ([4] if require_header else []))
+        for i in whole:
+            assert got["msg"][i] == MIXED[i]
+            assert got["hostname"][i] == f"rx{i}"
+
+    @pytest.mark.parametrize("with_lastmsg", [True, False])
+    def test_empty_batch(self, with_lastmsg):
+        out = parse_chain_arrow(
+            pa.array([], pa.string()), pa.array([], pa.int64()),
+            pa.array([], pa.timestamp("us")), pa.array([], pa.string()),
+            pa.array([], pa.bool_()), require_header=True,
+            with_lastmsg=with_lastmsg,
+        )
+        assert list(out) == [f.name for f in PARSED_STRUCT.fields]
+        for f in PARSED_STRUCT.fields:
+            assert len(out[f.name]) == 0
+            want = {"protocol_version": pa.int32(), "parse_success": pa.bool_(),
+                    "timereported": pa.timestamp("us")}.get(f.name, pa.string())
+            assert out[f.name].type == want, f.name
+
+    @pytest.mark.parametrize("require_header", [True, False])
+    def test_all_null_text(self, require_header):
+        # a null after-PRI text parses as '' (the worker never sends
+        # one: decode_pri_arrow maps a null message to '')
+        n = 3
+        args = [pa.array([1] * n, pa.int64()),
+                pa.array([RECV] * n, pa.timestamp("us")),
+                pa.array(["rx"] * n), pa.array([False] * n)]
+        nulls = parse_chain_arrow(pa.nulls(n, pa.string()), *args,
+                                  require_header=require_header)
+        empty = parse_chain_arrow(pa.array([""] * n), *args,
+                                  require_header=require_header)
+        assert {k: v.to_pylist() for k, v in nulls.items()} == {
+            k: v.to_pylist() for k, v in empty.items()}
+        _compare(pd.Series([""] * n), pd.Series([1] * n),
+                 pd.Series([RECV] * n), pd.Series(["rx"] * n),
+                 pd.Series([False] * n), require_header)
+
+    @pytest.mark.parametrize(
+        "parsers",
+        [("rfc5424", "rfc3164"), ("lastmsg", "rfc5424", "rfc3164")],
+    )
+    def test_with_parsed_rows_aligned(self, spark, parsers):
+        # pass-through columns (i, ts) must stay on the row whose text
+        # each parser part parsed
+        def text(i):
+            return [f"<13>1 - h a p m - tok{i}",
+                    f"<13>Jan  5 10:00:00 h a: tok{i}",
+                    f"last message repeated {i} times",
+                    None][i % 4]
+
+        def ts(i):
+            return (RECV + pd.Timedelta(seconds=i)).to_pydatetime()
+
+        df = spark.createDataFrame(
+            [(i, text(i), ts(i)) for i in range(80)],
+            "i int, text string, ts timestamp",
+        ).repartition(3)
+        from rsyslog_spark.parse import with_parsed
+
+        rows = with_parsed(df, parsers=parsers, require_header=True).collect()
+        assert sorted(r["i"] for r in rows) == list(range(80))
+        for r in rows:
+            i, kind = r["i"], r["i"] % 4
+            assert r["timegenerated"] == ts(i)
+            assert r["rawmsg"] == text(i)
+            if kind == 0:
+                assert (r["parser"], r["msg"]) == ("rfc5424", f"tok{i}")
+            elif kind == 1:
+                assert (r["parser"], r["msg"]) == ("rfc3164", f" tok{i}")
+            elif kind == 2:
+                want = "lastmsg" if "lastmsg" in parsers else "none"
+                assert (r["parser"], r["msg"]) == (want, text(i))
+                assert r["timereported"] == r["timegenerated"]
+            else:
+                # a null message: LOG_PRI_INVLD -> headerless 3164
+                assert (r["pri"], r["syslogfacility"], r["parser"]) == (
+                    199, 24, "rfc3164")

@@ -136,3 +136,26 @@ def test_chain_differential(require_header, texts):
 def test_chain_differential_lastmsg(texts):
     pd_out, ar_out = _run_both(texts, False, with_lastmsg=True)
     _assert_equal(pd_out, ar_out, texts)
+
+
+_LASTMSG = st.builds(
+    lambda sp, k, word: f"{sp}last message repeated {k} {word}",
+    st.sampled_from(["", " ", "  "]), st.integers(0, 999),
+    st.sampled_from(["times", "TIMES", "time"]),
+)
+# batches one parser (or none) owns entirely, next to mixed ones
+_BATCHES = st.one_of(
+    st.lists(_msg5424(), min_size=1, max_size=12),
+    st.lists(_msg3164(), min_size=1, max_size=12),
+    st.lists(_LASTMSG, min_size=1, max_size=12),
+    st.lists(st.one_of(_ANY, _LASTMSG), min_size=1, max_size=12),
+)
+
+
+@pytest.mark.parametrize("with_lastmsg", [False, True])
+@pytest.mark.parametrize("require_header", [False, True])
+@given(texts=_BATCHES)
+@settings(max_examples=40, deadline=None)
+def test_chain_differential_owned_rows(require_header, with_lastmsg, texts):
+    pd_out, ar_out = _run_both(texts, require_header, with_lastmsg)
+    _assert_equal(pd_out, ar_out, texts)

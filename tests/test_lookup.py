@@ -65,3 +65,18 @@ class TestSparseAsOf:
             typ="long",
         )
         assert got == ["none", "low", "low", "mid", "mid", "high", "high"]
+
+
+class TestAsDataFrame:
+    def test_jvm_local_relation(self, spark):
+        # a LocalTableScan, not a scan of a Python RDD: joining or
+        # broadcasting the table starts no Python worker
+        for t in (LookupTable("tools", "string", {"bash": "exec", "x": "read"}),
+                  LookupTable("sev", "sparseArray", {0: "low", 4: "high"})):
+            df = t.as_dataframe(spark)
+            assert sorted(tuple(r) for r in df.collect()) == sorted(
+                (k, v) if t.kind == "sparseArray" else (str(k), v)
+                for k, v in (t.mapping.items() if t.kind == "string"
+                             else zip(t.keys, t.vals)))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from rsyslog_spark.parse.chain import parse_chain_pd
 
@@ -159,8 +162,25 @@ class TestRFC5424:
         assert r["timereported"] == pd.Timestamp("2024-01-05 13:30:00")
 
 
+def _sanitize_reference(raw):
+    """The JVM form of SanitizeMsg: Java regex strips and a chain of 32
+    single-char replaces. ``\\z`` is Java's end of input; its ``$`` also
+    matches before a final line terminator."""
+    s = F.regexp_replace(raw, "\\x00\\z", "")
+    s = F.regexp_replace(s, "\\n\\z", "")
+    for c in range(0x20):
+        s = F.replace(s, F.lit(chr(c)), F.lit("#%03o" % c))
+    return F.when(raw.rlike("[\\x00-\\x1f]"), s).otherwise(raw)
+
+
+_CTRL_TEXT = st.text(
+    alphabet=st.sampled_from([chr(c) for c in range(0x20)] + list("ab #<>\u00e9")),
+    max_size=12,
+)
+
+
 class TestSanitize:
-    """sanitize is 100% native expressions now; exercise via Spark."""
+    """with_sanitized runs the parse worker's Arrow SanitizeMsg."""
 
     def _san(self, spark, vals):
         from rsyslog_spark.parse.sanitize import with_sanitized
@@ -171,11 +191,30 @@ class TestSanitize:
     def test_sanitize_semantics(self, spark):
         got = self._san(
             spark,
-            ["ab\x07cd", "a\tb", "hello\n", "a\nb\n", "plain text"],
+            ["ab\x07cd", "a\tb", "hello\n", "a\nb\n", "plain text",
+             "x\n\n", "x\x00\n", "x\n\x00", None],
         )
-        # octal '#NNN' escapes (parser.c:528-534); ONE trailing LF
-        # dropped (parser.c:415-421), inner LF escaped; clean untouched
-        assert got == ["ab#007cd", "a#011b", "hello", "a#012b", "plain text"]
+        # octal '#NNN' escapes (parser.c:528-534); ONE trailing NUL, then
+        # ONE trailing LF dropped (parser.c:404-421), inner LF and NUL
+        # escaped; clean untouched
+        assert got == ["ab#007cd", "a#011b", "hello", "a#012b", "plain text",
+                       "x#012", "x#000", "x", None]
+
+    @given(texts=st.lists(_CTRL_TEXT, min_size=1, max_size=30))
+    @settings(max_examples=15, deadline=None)
+    def test_matches_jvm_reference(self, spark, texts):
+        from rsyslog_spark.parse.sanitize import with_sanitized
+
+        df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+        rows = (
+            with_sanitized(df)
+            .withColumn("ref", _sanitize_reference(F.col("text")))
+            .orderBy("i")
+            .collect()
+        )
+        bad = [(r["text"], r["rawmsg"], r["ref"]) for r in rows
+               if r["rawmsg"] != r["ref"]]
+        assert not bad, bad[:3]
 
 
 class TestChain:

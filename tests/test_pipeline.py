@@ -195,3 +195,43 @@ class TestFlagshipPlanShape:
         assert plan.count("BroadcastNestedLoopJoin") == 0
         # raw text does not ride back through the barrier on this path
         assert "rawmsg" not in ann.columns
+
+    def test_count_plan_one_python_pass(self, spark, transcripts, tmp_path):
+        """build_flagship's per-sink count plan over a stored table: the
+        parse worker is the only Python in it, the dimension tables are
+        JVM-local, and no regex runs in the JVM below the worker
+        (sanitize and PRI run inside it)."""
+        table = str(tmp_path / "transcripts")
+        transcripts.write.parquet(table)
+        ann, actions = build_flagship(spark.read.parquet(table))
+        agg = ann.agg(*[F.sum(F.col(a.pred_col).cast("long")).alias(a.sink)
+                        for a in actions])
+        agg.collect()
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("MapInArrow") == 1
+        exchanges = _subtrees(final, "BroadcastExchange")
+        assert len(exchanges) == 2
+        for sub in exchanges:
+            assert "LocalTableScan" in sub and "ExistingRDD" not in sub, sub
+        (below,) = _subtrees(final, "MapInArrow")
+        for fn in ("RLIKE", "regexp_extract", "replace("):
+            assert fn not in below, (fn, below)
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """Text of each subtree of a tree-string plan whose root node is
+    ``node``: the root line and the lines indented deeper than it."""
+    import re
+
+    lines = plan.splitlines()
+    depth = [len(re.match(r"^[\s:|+\-]*", ln).group(0)) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if not re.match(rf"(\*\(\d+\) )?{node}\b", ln[depth[i]:]):
+            continue
+        j = i + 1
+        while j < len(lines) and depth[j] > depth[i]:
+            j += 1
+        out.append("\n".join(lines[i:j]))
+    return out

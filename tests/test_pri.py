@@ -3,10 +3,12 @@ runtime/msg.c:1608-1614, runtime/rsyslog.h:178-237)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from rsyslog_spark.parse.pri import (
+    decode_pri_arrow,
     facility_expr,
     pri_expr,
     pri_len_expr,
@@ -45,6 +47,19 @@ def test_pri_truth_table(spark):
     got = {r["raw"]: (r["pri"], r["fac"], r["sev"], r["plen"]) for r in rows}
     for raw, pri, fac, sev, plen in CASES:
         assert got[raw] == (pri, fac, sev, plen), (raw, got[raw])
+
+
+def test_pri_truth_table_arrow():
+    """The parse worker's decode: the same table, and the after-PRI text
+    is the message without the consumed header."""
+    ints, after = decode_pri_arrow(pa.array([c[0] for c in CASES]))
+    got = [
+        (ints["pri"][k].as_py(), ints["syslogfacility"][k].as_py(),
+         ints["syslogseverity"][k].as_py(), after[k].as_py())
+        for k in range(len(CASES))
+    ]
+    assert got == [(pri, fac, sev, raw[plen:])
+                   for raw, pri, fac, sev, plen in CASES]
 
 
 def test_all_200_fac_sev_pairs(spark):
