@@ -29,12 +29,24 @@ The iterative loop is genuinely non-SQL-expressible in one query, but
 its RESULT is: the DuckDB oracle recomputes components via a recursive
 reachability CTE (__spark_entry__ ``dup_clusters``), so the driver gate
 still value-checks every label.
+
+Graphs of at most ``SMALL_GRAPH_THRESHOLD`` canonical edges skip the
+rounds: one bounded collect, union-find on the driver, and the labels
+go back to the JVM as a local relation (``LocalTableScan``).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rsyslog_spark.lookup import local_table
+
+# edges up to which components are labeled on the driver (union-find)
+SMALL_GRAPH_THRESHOLD = 1_000_000
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -72,7 +84,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     return via_nbrs.unionByName(via_self)
 
 
-def _union_find_labels(edges: list) -> dict:
+def _union_find_labels(edges: Iterable[tuple]) -> dict:
     """Driver-side union-find: node -> min reachable node id."""
     parent: dict = {}
 
@@ -97,55 +109,31 @@ def _union_find_labels(edges: list) -> dict:
     return {x: find(x) for x in parent}
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    max_iter: int = 25,
-    small_graph_threshold: int = 1_000_000,
-) -> DataFrame:
-    """(node, component): component = min node id reachable from node.
+def _driver_labels(e: DataFrame, threshold: int) -> dict | None:
+    """node -> component by driver union-find, or None when the
+    canonical edge set ``e`` has more than ``threshold`` edges.
 
-    ``pairs`` is any DataFrame of undirected edges. Only nodes that
-    appear in an edge are returned (isolated nodes are the caller's
-    no-op case). Convergence is detected on (edge count, bit_xor of
-    per-edge xxhash64) over the canonical edge set — two cheap
-    aggregates per round, no edge data on the driver. The canonical
-    set is DISTINCT, so the xor is a set fingerprint; a harmful
-    collision needs consecutive DIFFERENT sets with equal counts AND
-    equal xors — astronomically unlikely (tests pin exact labels on
-    known graphs).
-    """
-    e = _canon(pairs.select(F.col(a).alias("u"), F.col(b).alias("v")))
-    spark = pairs.sparkSession
+    Size-gated fast path: a graph under the gate fits the driver
+    trivially (1M int64 pairs = 16 MB — the TakeOrdered discipline:
+    bounded rows cross, never the corpus), and the iterative rounds'
+    fixed cost (checkpoint job + convergence aggregates + 4 shuffles
+    per round) dwarfs the work: measured 3.6 s for 262 edges at sf0.1
+    vs ~0.5 s via union-find. One bounded collect (``limit(threshold +
+    1)`` as Arrow) both sizes the graph and fetches it. At 100 TB the VERIFIED near-dup edge set is still ~0.1-1%
+    of the corpus; when it exceeds the gate, the alternating-star rounds
+    are the shape that scales (differential-tested equal)."""
+    if not threshold or threshold <= 0:
+        return None
+    t = e.limit(threshold + 1).toArrow()
+    if t.num_rows > threshold:
+        return None
+    return _union_find_labels(
+        zip(t.column("u").to_pylist(), t.column("v").to_pylist())
+    )
 
-    # Size-gated fast path: a graph under ``small_graph_threshold``
-    # edges fits the driver trivially (1M int64 pairs = 16 MB — the
-    # TakeOrdered discipline: bounded rows cross, never the corpus),
-    # and the iterative machinery's per-round fixed cost (checkpoint
-    # job + convergence aggregates + 4 shuffles) dwarfs the work:
-    # measured 3.6 s for 262 edges at sf0.1 vs ~0.5 s via union-find.
-    # At 100 TB the VERIFIED near-dup edge set is still ~0.1-1% of the
-    # corpus; when it exceeds the gate, the alternating-star rounds
-    # below are the shape that scales (differential-tested equal).
-    if small_graph_threshold and small_graph_threshold > 0:
-        e = e.persist()
-        n_edges = e.count()
-        if n_edges <= small_graph_threshold:
-            labels = _union_find_labels(
-                [(r["u"], r["v"]) for r in e.collect()]
-            )
-            e.unpersist()
-            schema = (
-                e.select(
-                    F.col("u").alias("node"),
-                    F.col("v").alias("component"),
-                ).schema
-            )
-            return spark.createDataFrame(
-                sorted(labels.items()), schema
-            )
-        e.unpersist()
+
+def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
+    """(node, component) by alternating large/small-star rounds."""
 
     def _sig(d: DataFrame):
         r = d.agg(
@@ -185,6 +173,39 @@ def connected_components(
     return out.select(F.col("u").alias("node"), "component")
 
 
+def connected_components(
+    pairs: DataFrame,
+    a: str = "a",
+    b: str = "b",
+    max_iter: int = 25,
+    small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
+) -> DataFrame:
+    """(node, component): component = min node id reachable from node.
+
+    ``pairs`` is any DataFrame of undirected edges. Only nodes that
+    appear in an edge are returned (isolated nodes are the caller's
+    no-op case). Up to ``small_graph_threshold`` canonical edges the
+    labels come from driver union-find and return as a JVM-local
+    relation (``LocalTableScan``, the input's id type). Above it the
+    star rounds run; their convergence is detected on (edge count,
+    bit_xor of per-edge xxhash64) over the canonical edge set — two
+    cheap aggregates per round, no edge data on the driver. The
+    canonical set is DISTINCT, so the xor is a set fingerprint; a
+    harmful collision needs consecutive DIFFERENT sets with equal
+    counts AND equal xors — astronomically unlikely (tests pin exact
+    labels on known graphs).
+    """
+    e = _canon(pairs.select(F.col(a).alias("u"), F.col(b).alias("v")))
+    labels = _driver_labels(e, small_graph_threshold)
+    if labels is None:
+        return _star_components(e, max_iter)
+    t = e.schema["u"].dataType.simpleString()
+    return local_table(
+        pairs.sparkSession, sorted(labels.items()),
+        f"node {t}, component {t}",
+    )
+
+
 def dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
@@ -197,8 +218,20 @@ def dup_clusters(
     cluster_id = min doc id in the group; csize = group size; keep =
     the canonical representative flag (doc_id == cluster_id) — the row
     a dedup pass retains. Docs in no pair are singletons and omitted
-    (they are all trivially keep=true)."""
-    cc = connected_components(pairs, a=a, b=b)
+    (they are all trivially keep=true). Under the small-graph gate all
+    four columns come from the driver's labels (no join); above it the
+    sizes join back onto the star-round labels."""
+    e = _canon(pairs.select(F.col(a).alias("u"), F.col(b).alias("v")))
+    labels = _driver_labels(e, SMALL_GRAPH_THRESHOLD)
+    if labels is not None:
+        csize = Counter(labels.values())
+        t = e.schema["u"].dataType.simpleString()
+        return local_table(
+            pairs.sparkSession,
+            [(n, c, csize[c], n == c) for n, c in sorted(labels.items())],
+            f"{id_col} {t}, cluster_id {t}, csize bigint, keep boolean",
+        )
+    cc = _star_components(e, max_iter=25)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
     return (
         cc.join(sizes, on="component")

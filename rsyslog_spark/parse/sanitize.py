@@ -4,8 +4,9 @@ Semantics replicated (defaults as in the reference):
 
 - drop ONE trailing NUL byte (parser.c:404-408)
 - then drop ONE trailing LF (parser.c:415-421); bDropTrailingLF default on
-- escape control characters as '#' + 3-digit OCTAL of the char code
-  (parser.c:489-535, default mode with cCCEscapeChar '#'); TAB is a
+- escape control characters (``iscntrl``: 0x00-0x1f and DEL 0x7f) as
+  '#' + 3-digit OCTAL of the char code (parser.c:489-535, default mode
+  with cCCEscapeChar '#'; DEL -> '#177'); TAB is a
   control char and is escaped too, and so is a NUL that is not the
   last byte (the reference escapes '\\0' whatever the escape setting).
 - 8-bit escaping and LF->space rewriting are off by default -> not applied.
@@ -30,9 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-_CTRL_RE = r"[\x00-\x1f]"
+# iscntrl(): 0x00-0x1f and DEL (0x7f)
+_CTRL_RE = r"[\x00-\x1f\x7f]"
 # control char c -> '#%03o' % c (parser.c:528-534, octal mode with '#')
-_ESCAPES = [(chr(c), "#%03o" % c) for c in range(0x20)]
+_ESCAPES = [(chr(c), "#%03o" % c) for c in [*range(0x20), 0x7f]]
 
 
 def sanitize_arrow(raw: pa.Array) -> pa.Array:

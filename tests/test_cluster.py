@@ -13,7 +13,13 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from rsyslog_spark.dataops import cluster
 from rsyslog_spark.dataops.cluster import connected_components, dup_clusters
+
+
+def _plan(df):
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _labels(spark, edges, threshold=1_000_000):
@@ -89,7 +95,7 @@ class TestConnectedComponents:
             assert got_fast == expected, f"trial {trial} fast"
             assert got_iter == expected, f"trial {trial} iterative"
 
-    def test_dup_clusters_shape(self, spark):
+    def _shape_rows(self, spark):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (8, 9)], "a long, b long"
         )
@@ -102,6 +108,56 @@ class TestConnectedComponents:
             (1, 1, 3, True), (2, 1, 3, False), (3, 1, 3, False),
             (8, 8, 2, True), (9, 8, 2, False),
         }
+        return out
+
+    def test_dup_clusters_shape(self, spark):
+        self._shape_rows(spark)
+
+    def test_dup_clusters_iterative_branch(self, spark, monkeypatch):
+        monkeypatch.setattr(cluster, "SMALL_GRAPH_THRESHOLD", 0)
+        assert "LocalTableScan" not in _plan(self._shape_rows(spark))
+
+    def test_small_path_is_local_table_scan(self, spark):
+        # the labels come back JVM-local: no Python-RDD scan, and
+        # dup_clusters takes csize/keep from the same labels (no join)
+        pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+        for df in (connected_components(pairs), dup_clusters(pairs)):
+            plan = _plan(df)
+            assert "LocalTableScan" in plan, plan
+            assert "ExistingRDD" not in plan and "Python" not in plan, plan
+            assert "Join" not in plan, plan
+
+    @pytest.mark.parametrize("threshold", [1_000_000, 0])
+    def test_int_ids_stay_int(self, spark, threshold, monkeypatch):
+        monkeypatch.setattr(cluster, "SMALL_GRAPH_THRESHOLD", threshold)
+        pairs = spark.createDataFrame([(1, 2), (3, 2)], "a int, b int")
+        cc = connected_components(pairs, small_graph_threshold=threshold)
+        dc = dup_clusters(pairs)
+        assert [f.dataType.simpleString() for f in cc.schema] == [
+            "int", "int"]
+        assert [f.dataType.simpleString() for f in dc.schema] == [
+            "int", "int", "bigint", "boolean"]
+        assert sorted(tuple(r) for r in dc.collect()) == [
+            (1, 1, 3, True), (2, 1, 3, False), (3, 1, 3, False)]
+
+    def test_threshold_boundary_branches_agree(self, spark):
+        # 12 canonical edges behind reversed, duplicate and self-loop
+        # rows: the gate counts CANONICAL edges, so threshold 12 stays
+        # on the driver and 11 runs the star rounds
+        edges = [(1, 2), (2, 3), (4, 3), (5, 6), (6, 7), (7, 8), (9, 10),
+                 (11, 10), (12, 13), (13, 14), (14, 15), (20, 21),
+                 (2, 1), (3, 2), (1, 2), (5, 5), (9, 9)]
+        pairs = spark.createDataFrame(edges, "a long, b long")
+        results = {}
+        for threshold in (12, 11):
+            cc = connected_components(pairs, small_graph_threshold=threshold)
+            results[threshold] = (
+                "LocalTableScan" in _plan(cc),
+                {r["node"]: r["component"] for r in cc.collect()},
+            )
+        assert results[12][0] and not results[11][0]
+        assert results[12][1] == results[11][1] == _uf_labels(
+            [e for e in edges if e[0] != e[1]])
 
     def test_empty_pairs(self, spark):
         pairs = spark.createDataFrame([], "a long, b long")

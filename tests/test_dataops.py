@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +27,37 @@ def docs(spark):
         (4, "ab"),  # shorter than one shingle
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _jaccard_all_pairs(sh):
+    """Exact Jaccard of EVERY pair that shares a shingle (a < b), by the
+    all-shingle self-join: sum(df^2) rows, so small corpora only. The
+    differential reference for the candidate-first ``jaccard_pairs``."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    co = (
+        sh.select(F.col("id").alias("a"), "sh")
+        .join(sh.select(F.col("id").alias("b"), "sh"), on="sh")
+        .filter(F.col("a") < F.col("b"))
+    )
+    union_n = F.col("sza") + F.col("szb") - F.col("inter")
+    return (
+        co.groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
+        .join(sizes.toDF("a", "sza"), on="a")
+        .join(sizes.toDF("b", "szb"), on="b")
+        .select("a", "b", "inter", union_n.alias("union_n"),
+                F.round(F.col("inter") / union_n, 4).alias("jac"))
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(
+        "a", "b", "inter", "union_n", "jac").collect())
+
+
+def _restricted(ref, pairs):
+    """The reference rows whose (a, b) is one of ``pairs``."""
+    want = set(pairs)
+    return sorted(r for r in ref if (r[0], r[1]) in want)
 
 
 class TestDedup:
@@ -54,10 +88,58 @@ class TestDedup:
     def test_jaccard_exact_values(self, docs):
         sh = dedup.shingles(docs)
         jac = {(r["a"], r["b"]): r
-               for r in dedup.jaccard_pairs(sh, allow_unfiltered=True).collect()}
+               for r in _jaccard_all_pairs(sh).collect()}
         assert jac[(0, 3)]["jac"] == 1.0
         r = jac[(0, 1)]
         assert r["inter"] == 6 and r["union_n"] == 8 and r["jac"] == 0.75
+        pairs = sh.sparkSession.createDataFrame(
+            [(0, 1), (0, 3)], "a long, b long")
+        assert _rows(dedup.jaccard_pairs(sh, pairs)) == [
+            (0, 1, 6, 8, 0.75), (0, 3, 7, 7, 1.0)]
+
+    def test_jaccard_candidates_match_reference(self, spark, docs):
+        # reversed (a > b) and self pairs name no row, as the reference
+        # emits a < b only; duplicates give one row; zero-overlap pairs
+        # and ids with no shingles (4: shorter than k, 99: absent) none
+        sh = dedup.shingles(docs)
+        ref = _rows(_jaccard_all_pairs(sh))
+        pairs = [(0, 1), (0, 1), (1, 0), (3, 0), (0, 3), (1, 3), (0, 2),
+                 (2, 4), (0, 99), (1, 1)]
+        got = _rows(dedup.jaccard_pairs(
+            sh, spark.createDataFrame(pairs, "a long, b long")))
+        assert got == _restricted(ref, pairs)
+        assert [r[:2] for r in got] == [(0, 1), (0, 3), (1, 3)]
+
+    def test_jaccard_random_candidates_match_reference(self, spark):
+        rng = random.Random(11)
+        words = "a b c".split()
+        rows = [(i, " ".join(rng.choice(words)
+                             for _ in range(rng.randint(2, 12))))
+                for i in range(30)]
+        sh = dedup.shingles(spark.createDataFrame(
+            rows, "doc_id long, text string"))
+        ref = _rows(_jaccard_all_pairs(sh))
+        pairs = [(rng.randint(-2, 32), rng.randint(-2, 32))
+                 for _ in range(150)]
+        got = _rows(dedup.jaccard_pairs(
+            sh, spark.createDataFrame(pairs, "a long, b long"),
+            threshold=0.2))
+        assert got == [r for r in _restricted(ref, pairs) if r[4] >= 0.2]
+        assert len(got) > 5
+
+    def test_jaccard_plan_has_no_shingle_self_join(self, spark, docs):
+        out = dedup.jaccard_pairs(
+            dedup.shingles(docs),
+            spark.createDataFrame([(0, 1)], "a long, b long"))
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        keys = [
+            sorted(re.sub(r"#\d+L?", "", k).strip() for k in ks.split(","))
+            for ks in re.findall(
+                r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
+                r" \[([^\]]*)\]", plan)
+        ]
+        assert keys and ["sh"] not in keys, keys
 
     def test_simhash_shape_and_identity(self, docs):
         sim = {r["id"]: r["simhash"]

@@ -163,18 +163,19 @@ class TestRFC5424:
 
 
 def _sanitize_reference(raw):
-    """The JVM form of SanitizeMsg: Java regex strips and a chain of 32
-    single-char replaces. ``\\z`` is Java's end of input; its ``$`` also
-    matches before a final line terminator."""
+    """The JVM form of SanitizeMsg: Java regex strips and a chain of 33
+    single-char replaces (0x00-0x1f and DEL). ``\\z`` is Java's end of
+    input; its ``$`` also matches before a final line terminator."""
     s = F.regexp_replace(raw, "\\x00\\z", "")
     s = F.regexp_replace(s, "\\n\\z", "")
-    for c in range(0x20):
+    for c in [*range(0x20), 0x7f]:
         s = F.replace(s, F.lit(chr(c)), F.lit("#%03o" % c))
-    return F.when(raw.rlike("[\\x00-\\x1f]"), s).otherwise(raw)
+    return F.when(raw.rlike("[\\x00-\\x1f\\x7f]"), s).otherwise(raw)
 
 
 _CTRL_TEXT = st.text(
-    alphabet=st.sampled_from([chr(c) for c in range(0x20)] + list("ab #<>\u00e9")),
+    alphabet=st.sampled_from(
+        [chr(c) for c in [*range(0x20), 0x7f]] + list("ab #<>\u00e9")),
     max_size=12,
 )
 
@@ -199,6 +200,12 @@ class TestSanitize:
         # escaped; clean untouched
         assert got == ["ab#007cd", "a#011b", "hello", "a#012b", "plain text",
                        "x#012", "x#000", "x", None]
+
+    def test_sanitize_escapes_del(self, spark):
+        # DEL is iscntrl() like 0x00-0x1f (parser.c:489-535): '#177'
+        # wherever it sits, and it is not a trailing char to drop
+        assert self._san(spark, ["a\x7fb", "\x7f", "x\x7f\n", "~\x80"]) == [
+            "a#177b", "#177", "x#177", "~\x80"]
 
     @given(texts=st.lists(_CTRL_TEXT, min_size=1, max_size=30))
     @settings(max_examples=15, deadline=None)

@@ -11,6 +11,10 @@ materialized 30x table (3M rows) for flagship.
 
 Usage: python tools/scale_rehearsal.py [replicas] [dup_factor]
 
+Runs on ``local[min(nproc, SPARK_GRAFT_CPUS)]`` (all usable cores when
+SPARK_GRAFT_CPUS is unset) and records the core count as ``cores``.
+``per_pair_ms`` is the ``minhash_pairs`` wall time per verified pair.
+
 ``dup_factor`` (default = replicas) caps the duplication multiplicity:
 replica i's text is Caesar-shifted by ``i // dup_factor`` alphabet
 positions, so each variant family shares ZERO shingles with the others
@@ -64,8 +68,12 @@ def jvm_peak_rss_gb() -> float:
 def main():
     from rsyslog_spark.session import get_spark
 
-    spark = get_spark(cores=32)
-    out = {"replicas": REPLICAS, "sf_base": SF_DIR}
+    cores = len(os.sched_getaffinity(0))
+    cap = os.environ.get("SPARK_GRAFT_CPUS")
+    if cap:
+        cores = min(cores, int(cap))
+    spark = get_spark(cores=cores)
+    out = {"replicas": REPLICAS, "sf_base": SF_DIR, "cores": cores}
 
     out["dup_factor"] = DUP_FACTOR
     base = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -118,6 +126,8 @@ def main():
     timed("minhash_pairs", lambda: jaccard_pairs(
         sh, pairs=minhash_candidate_pairs(sigs), threshold=0.5
     ).count())
+    mp = out["minhash_pairs"]
+    out["per_pair_ms"] = round(1000 * mp["sec"] / max(mp["result"], 1), 4)
 
     def clusters():
         pairs = jaccard_pairs(
