@@ -9,9 +9,13 @@ Cluster usage (the north-rule packaging contract):
         --lineage /tmp/lineage --run-id run-2024-06-01 [--replicas 1]
 
 Local fallback (no spark-submit): ``python jobs/flagship_job.py ...``
-creates its own local session. The run is idempotent per (run-id,
-partition): re-submit after a crash and only uncommitted partitions
-re-process (rsyslog .qi checkpoint analog, runtime/queue.c:176).
+creates its own local session. The run is exactly-once per (run-id,
+partition): every sink table is partitioned by the lineage bucket
+``partition_id`` and written with dynamic partition overwrite, so a
+re-submit after a crash re-processes only uncommitted partitions and
+replaces exactly their rows, keeping the committed ones (rsyslog .qi
+checkpoint analog, runtime/queue.c:176). An output path belongs to one
+run id; the printed ``sink_counts`` cover this submission's partitions.
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ def main(argv=None):
     counts: dict = {}
 
     def process(df):
-        counts.update(run_flagship(df, base_path=args.output))
+        counts.update(run_flagship(df, args.output, key="partition_id"))
 
     result = run_with_resume(
         spark, t, args.run_id, args.lineage, process,

@@ -6,7 +6,8 @@ queue.c:2866; checkpoint modes queue.c:1682). Our batch-first analog is a
 LINEAGE TABLE keyed by (run_id, partition_id): each partition of the
 input commits a row with its row_count and parse_failure count once its
 sink writes succeed; a re-run of the same run_id SKIPS partitions that
-already committed — exactly-once at partition granularity.
+already committed — exactly-once at partition granularity, as the sink
+writes are keyed by the same ``partition_id`` (see run_with_resume).
 
 Partition identity must be stable across runs, so it is derived from the
 DATA (hash-bucket of conv_id), not from Spark task ids.
@@ -104,7 +105,13 @@ def run_with_resume(
     n_buckets: int = 256,
 ) -> dict:
     """Drive one resumable run: bucket -> skip committed -> process ->
-    commit lineage. Returns {'processed_partitions': n, 'skipped': m}."""
+    commit lineage. Returns {'processed_partitions': n, 'skipped': m}.
+
+    Exactly-once holds when ``process`` writes with ``fan_out``'s
+    ``key="partition_id"``: a resume (or a re-run after a crash between
+    the writes and the commit) replaces only its own buckets' partitions.
+    An output path belongs to one run id, as a streaming sink path
+    belongs to one checkpoint."""
     log = LineageLog(spark, lineage_path)
     bucketed = with_partition_id(df, n_buckets=n_buckets)
     before = set(log.committed_partitions(run_id))

@@ -199,78 +199,51 @@ def jaccard_pairs(
     return out
 
 
-def simhash(sh: DataFrame, bits: int = 32, engine: str = "explode") -> DataFrame:
+def simhash(sh: DataFrame, bits: int = 32) -> DataFrame:
     """(id, simhash) with simhash as a ``bits``-char '0'/'1' string.
 
     Bit k comes from hex digit k//4 of md5(shingle): majority vote of
     (2*bit-1) across the doc's shingles (Charikar). A bitstring output
     keeps the value engine-portable (no 64-bit unsigned pitfalls).
 
-    engine='explode' (default): per-shingle digest exploded to an
-    (id, k) vote plane. The x``bits`` row inflation LOOKS like a scale
-    bug but is not: whole-stage codegen pipelines the explode straight
-    into the map-side partial aggregate, so the shuffle carries only
-    docs x bits combined rows and the final collect_list groups are
-    bounded at exactly ``bits`` elements. engine='agg' is the
-    single-groupBy(id) formulation with one sum expression per bit —
-    O(bits) agg state per doc and no row inflation, but MEASURED ~2x
-    SLOWER at sf0.1 (1.12 s vs 0.53 s warm): the ``bits`` independent
-    aggregate expressions each re-evaluate the nibble extraction with
-    no cross-aggregate subexpression elimination. Kept as the
-    differential reference and as evidence the explode plan was chosen
-    by measurement, not by default."""
+    Per-shingle digest exploded to an (id, k) vote plane. The x``bits``
+    row inflation LOOKS like a scale bug but is not: whole-stage codegen
+    pipelines the explode straight into the map-side partial aggregate,
+    so the shuffle carries only docs x bits combined rows and the final
+    collect_list groups are bounded at exactly ``bits`` elements. The
+    single-groupBy(id) form with one sum expression per bit (no row
+    inflation) MEASURED ~2x SLOWER at sf0.1 (1.12 s vs 0.53 s warm): the
+    ``bits`` aggregate expressions each re-evaluate the nibble extraction
+    with no cross-aggregate subexpression elimination. It is kept in the
+    tests as the differential reference."""
     assert bits <= 128 and bits % 4 == 0
-    h = F.md5(F.col("sh"))
-    if engine == "explode":
-        k = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("k")
-        digits = sh.select("id", h.alias("h"), k)
-        # SQL-expr form: shiftright() needs a literal shift amount in the
-        # Column API, but `>>` takes a column operand in SQL
-        bit = F.expr(
-            "((instr('0123456789abcdef', substring(h, cast(k/4 as int)+1, 1))"
-            " - 1) >> (3 - k % 4)) & 1"
+    k = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("k")
+    digits = sh.select("id", F.md5(F.col("sh")).alias("h"), k)
+    # SQL-expr form: shiftright() needs a literal shift amount in the
+    # Column API, but `>>` takes a column operand in SQL
+    bit = F.expr(
+        "((instr('0123456789abcdef', substring(h, cast(k/4 as int)+1, 1))"
+        " - 1) >> (3 - k % 4)) & 1"
+    )
+    votes = (
+        digits.select("id", "k", (bit * 2 - 1).alias("v"))
+        .groupBy("id", "k")
+        .agg(F.sum("v").alias("s"))
+    )
+    ch = F.when(F.col("s") > 0, F.lit("1")).otherwise(F.lit("0"))
+    ordered = votes.select(
+        "id", F.struct(F.col("k"), ch.alias("c")).alias("kc")
+    )
+    return (
+        ordered.groupBy("id")
+        .agg(F.sort_array(F.collect_list("kc")).alias("arr"))
+        .select(
+            "id",
+            F.concat_ws(
+                "", F.transform(F.col("arr"), lambda x: x["c"])
+            ).alias("simhash"),
         )
-        votes = (
-            digits.select("id", "k", (bit * 2 - 1).alias("v"))
-            .groupBy("id", "k")
-            .agg(F.sum("v").alias("s"))
-        )
-        ch = F.when(F.col("s") > 0, F.lit("1")).otherwise(F.lit("0"))
-        ordered = votes.select(
-            "id", F.struct(F.col("k"), ch.alias("c")).alias("kc")
-        )
-        return (
-            ordered.groupBy("id")
-            .agg(F.sort_array(F.collect_list("kc")).alias("arr"))
-            .select(
-                "id",
-                F.concat_ws(
-                    "", F.transform(F.col("arr"), lambda x: x["c"])
-                ).alias("simhash"),
-            )
-        )
-    if engine != "agg":
-        raise ValueError(f"unknown simhash engine {engine!r}")
-    hframe = sh.select("id", h.alias("h"))
-
-    def _nib(d: int):
-        return F.expr(
-            f"instr('0123456789abcdef', substring(h, {d + 1}, 1)) - 1"
-        )
-
-    votes = [
-        F.sum(
-            F.shiftright(_nib(k // 4), 3 - k % 4)
-            .bitwiseAND(F.lit(1)) * 2 - 1
-        ).alias(f"s{k}")
-        for k in range(bits)
-    ]
-    per_doc = hframe.groupBy("id").agg(*votes)
-    chars = [
-        F.when(F.col(f"s{k}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for k in range(bits)
-    ]
-    return per_doc.select("id", F.concat(*chars).alias("simhash"))
+    )
 
 
 def hamming_pairs(sim: DataFrame, max_dist: int = 3, bits: int = 32) -> DataFrame:

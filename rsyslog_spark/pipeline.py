@@ -112,8 +112,10 @@ def build_flagship(
 def run_flagship(
     transcripts: DataFrame,
     base_path: str | None = None,
+    key: str | None = None,
 ) -> dict[str, int]:
-    """Execute the flagship pipeline; write sinks when base_path given.
+    """Execute the flagship pipeline; write sinks when base_path given,
+    idempotently per ``key`` value when set (see ``sinks.fan_out``).
     Returns exact per-sink counts."""
     annotated, actions = build_flagship(transcripts)
     return fan_out(
@@ -122,4 +124,5 @@ def run_flagship(
         base_path or "/tmp/rsyslog_spark_sinks",
         SINK_SPECS,
         write=base_path is not None,
+        key=key,
     )

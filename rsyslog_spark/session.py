@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Cores this process may run on (its CPU affinity), capped by
+    ``SPARK_GRAFT_CPUS`` when that is set."""
+    n = len(os.sched_getaffinity(0))
+    cap = os.environ.get("SPARK_GRAFT_CPUS")
+    return min(n, int(cap)) if cap else n
+
+
 def get_spark(
     app_name: str = "rsyslog_spark",
     cores: int | None = None,
@@ -28,7 +36,7 @@ def get_spark(
     - Broadcast threshold raised: lookup/dimension tables are always
       broadcast (reference lookup tables are in-memory hashes, lookup.c).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.appName(app_name)

@@ -1,4 +1,4 @@
-"""Sink fan-out: N filtered writes over one annotated DataFrame.
+"""Sink fan-out, the one sink writer: N filtered writes over one frame.
 
 Reference machinery: action.c (2360 LoC) — per-action queues, the
 transaction interface beginTransaction/doAction/commitTransaction
@@ -15,6 +15,12 @@ Spark mapping (SURVEY §2.10):
 - per-sink counts (our north rule) are computed in ONE aggregation pass
   over the annotated frame (sum of each action's predicate), not N
   count() jobs.
+
+Batch, resume and streaming all write through ``fan_out``. With ``key``
+(a micro-batch's ``batch_id`` or a lineage bucket's ``partition_id``)
+each sink is partitioned by ``key`` first and written with dynamic
+partition overwrite: a replayed batch or bucket replaces exactly its own
+partitions, so replay + idempotent write = exactly-once sink tables.
 
 Scale notes: the annotated frame is persisted before fan-out so the
 source is scanned once for N sinks + metrics; each write is a pure
@@ -39,8 +45,6 @@ class SinkSpec:
     """Physical sink config (omfile/omfwd params analog, omfile.c:234-280)."""
     name: str
     partition_by: list[str] = field(default_factory=list)  # dynafile keys
-    columns: list[str] | None = None  # projection; None -> parsed core
-    mode: str = "overwrite"
     format: str = "parquet"  # 'iceberg' on a real cluster
     # omfile zip/veryRobustZip analog: output codec (omfile.c zip
     # support); None = table format default
@@ -61,12 +65,13 @@ def fan_out(
     base_path: str,
     sink_specs: dict[str, SinkSpec] | None = None,
     write: bool = True,
+    key: str | None = None,
 ) -> dict[str, int]:
     """Write every action's rows to its sink table; return per-sink counts.
 
     Counts come from a single aggregation job (one pass), mirroring the
     reference's per-action counters (statsobj, runtime/statsobj.c) but
-    exact-per-batch instead of sampled.
+    exact-per-batch instead of sampled. ``key``: see the module doc.
     """
     sink_specs = sink_specs or {}
     annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
@@ -96,20 +101,19 @@ def fan_out(
                 # matching rows pay the template cost and the persisted
                 # annotated frame holds no rendered strings
                 out = a.output(annotated)
+                parts = ([key] if key else []) + spec.partition_by
                 if a.out_col is not None:
-                    cols = [F.col(a.out_col).alias("line")]
-                    cols += [F.col(c) for c in (spec.partition_by or [])]
-                    out = out.select(*cols)
+                    cols = [F.col(a.out_col).alias("line"), *parts]
                 else:
-                    cols = spec.columns or [
-                        c for c in DEFAULT_SINK_COLUMNS if c in out.columns
-                    ]
-                    out = out.select(*cols)
-                w = out.write.mode(spec.mode).format(spec.format)
+                    cols = [c for c in DEFAULT_SINK_COLUMNS if c in out.columns]
+                    cols += [c for c in parts if c not in cols]
+                w = out.select(*cols).write.mode("overwrite").format(spec.format)
+                if key:
+                    w = w.option("partitionOverwriteMode", "dynamic")
                 if spec.compression:
                     w = w.option("compression", spec.compression)
-                if spec.partition_by:
-                    w = w.partitionBy(*spec.partition_by)
+                if parts:
+                    w = w.partitionBy(*parts)
                 w.save(os.path.join(base_path, a.sink))
         return counts
     finally:

@@ -1,19 +1,22 @@
 """Streaming parse → enrich → route → sink pipeline.
 
 Shape: ``readStream`` on the transcript table directory → the SAME
-batch operators (with_parsed / enrich / RouteCompiler are all
-streaming-compatible column transforms) → ``foreachBatch`` fan-out.
+batch pipeline (``run_flagship``: with_parsed / enrich / RouteCompiler /
+``sinks.fan_out``) per micro-batch via ``foreachBatch``.
 
 foreachBatch is deliberate, not a fallback: rsyslog's action commit is
 per dequeued batch (actionCommitAllDirect, runtime/action.c:1617-1635,
 called at batch end ruleset.c:672-675), so micro-batch = the reference's
-transaction unit. Sink writes are made IDEMPOTENT per micro-batch: every
-write is partitioned by ``batch_id`` and uses dynamic partition
+transaction unit. Each micro-batch is tagged with its ``batch_id`` and
+written by the batch writer with ``key="batch_id"``: every sink table is
+partitioned by ``batch_id`` first and written with dynamic partition
 overwrite, so a batch replayed after a crash (some sinks written, the
 checkpoint not yet committed) overwrites its own partitions instead of
 appending duplicates — replay + idempotent write = effective
 exactly-once for the sink tables; the streaming checkpoint (WAL +
 offsets) plays the role of the disk queue's .qi file (queue.c:176).
+The sink tables are the batch run's tables plus ``batch_id``; a sink
+path belongs to one checkpoint.
 """
 
 from __future__ import annotations
@@ -21,9 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rsyslog_spark.pipeline import build_flagship
+from rsyslog_spark.pipeline import run_flagship
 from rsyslog_spark.schema import TRANSCRIPT_SCHEMA
-from rsyslog_spark.sinks import DEFAULT_SINK_COLUMNS, SinkSpec
 
 
 def read_transcript_stream(
@@ -45,44 +47,22 @@ def stream_flagship(
     stream: DataFrame,
     base_path: str,
     checkpoint_dir: str,
-    sink_specs: dict[str, SinkSpec] | None = None,
     await_termination: bool = True,
 ):
     """Run the flagship ruleset over a stream; one parquet dir per sink
     plus a ``metrics`` table of per-batch per-sink counts."""
 
     def _one_batch(batch_df: DataFrame, batch_id: int):
-        annotated, actions = build_flagship(batch_df)
-        annotated = annotated.persist()
-        try:
-            rows = []
-            for a in actions:
-                out = annotated.filter(F.col(a.pred_col))
-                spec = (sink_specs or {}).get(a.sink, SinkSpec(a.sink))
-                cols = [
-                    c for c in DEFAULT_SINK_COLUMNS if c in out.columns
-                ]
-                n = out.count()
-                # batch_id partition + dynamic overwrite = idempotent
-                # replay (a re-run batch replaces exactly its own data)
-                w = (
-                    out.select(*cols)
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .format(spec.format)
-                    .partitionBy("batch_id", *spec.partition_by)
-                )
-                w.save(f"{base_path}/{a.sink}")
-                rows.append((batch_id, a.sink, n))
-            spark = batch_df.sparkSession
-            spark.createDataFrame(
-                rows, "batch_id long, sink string, n long"
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("batch_id").parquet(f"{base_path}/metrics")
-        finally:
-            annotated.unpersist()
+        counts = run_flagship(
+            batch_df.withColumn("batch_id", F.lit(batch_id)), base_path,
+            key="batch_id",
+        )
+        batch_df.sparkSession.createDataFrame(
+            [(batch_id, sink, n) for sink, n in counts.items()],
+            "batch_id long, sink string, n long",
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(f"{base_path}/metrics")
 
     q = (
         stream.writeStream.foreachBatch(_one_batch)

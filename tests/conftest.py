@@ -17,6 +17,11 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def sf_test_dir():
+    return SF_TEST
+
+
+@pytest.fixture(scope="session")
 def transcripts(spark):
     from rsyslog_spark.sources.transcripts import transcripts_spark
 

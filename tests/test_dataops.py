@@ -49,6 +49,26 @@ def _jaccard_all_pairs(sh):
     )
 
 
+def _simhash_agg_reference(sh, bits=32):
+    """SimHash as one groupBy(id) with one sum expression per bit: no
+    row inflation, ~2x slower than ``dedup.simhash``'s exploded vote
+    plane. The differential reference for ``dedup.simhash``."""
+    def nib(d):
+        return F.expr(
+            f"instr('0123456789abcdef', substring(h, {d + 1}, 1)) - 1")
+
+    votes = [
+        F.sum(F.shiftright(nib(k // 4), 3 - k % 4).bitwiseAND(F.lit(1))
+              * 2 - 1).alias(f"s{k}")
+        for k in range(bits)
+    ]
+    per_doc = (sh.select("id", F.md5(F.col("sh")).alias("h"))
+               .groupBy("id").agg(*votes))
+    chars = [F.when(F.col(f"s{k}") > 0, F.lit("1")).otherwise(F.lit("0"))
+             for k in range(bits)]
+    return per_doc.select("id", F.concat(*chars).alias("simhash"))
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.select(
         "a", "b", "inter", "union_n", "jac").collect())
@@ -150,13 +170,10 @@ class TestDedup:
 
     def test_simhash_engines_differential(self, docs):
         sh = dedup.shingles(docs)
-        a = {r["id"]: r["simhash"]
-             for r in dedup.simhash(sh, engine="explode").collect()}
+        a = {r["id"]: r["simhash"] for r in dedup.simhash(sh).collect()}
         b = {r["id"]: r["simhash"]
-             for r in dedup.simhash(sh, engine="agg").collect()}
+             for r in _simhash_agg_reference(sh).collect()}
         assert a == b and len(a) > 0
-        with pytest.raises(ValueError):
-            dedup.simhash(sh, engine="nope")
 
     def test_hamming_pairs(self, docs):
         out = dedup.hamming_pairs(

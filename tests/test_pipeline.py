@@ -4,6 +4,10 @@ verify per-sink sequence, tests/diag.sh seq_check)."""
 
 from __future__ import annotations
 
+import importlib.util
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,6 +152,53 @@ class TestCheckpoint:
         # all 16 buckets now committed -> full resume is a no-op
         assert sorted(log.committed_partitions("runP")) == list(range(16))
 
+    def test_resume_keeps_committed_sink_rows(self, transcripts, tmp_path,
+                                              spark):
+        """Buckets 0-7 of 16 written and committed, then a resume: every
+        sink holds all of its rows, not only the resumed buckets'."""
+        base = str(tmp_path / "sinks")
+        lineage = str(tmp_path / "lineage")
+        first = with_partition_id(transcripts, n_buckets=16).filter(
+            F.col("partition_id") < 8)
+        run_flagship(first, base, key="partition_id")
+        LineageLog(spark, lineage).commit(first, "runR")
+        r = run_with_resume(
+            spark, transcripts, "runR", lineage,
+            lambda df: run_flagship(df, base, key="partition_id"),
+            n_buckets=16,
+        )
+        assert r == {"processed_partitions": 8, "skipped": 8}
+        full = run_flagship(transcripts)
+        assert _disk_counts(spark, base, full) == full
+
+    def test_crash_before_commit_does_not_duplicate(self, transcripts,
+                                                    tmp_path, spark):
+        """A run that writes its buckets and dies before the lineage
+        commit: the next run writes the same buckets again, and the sinks
+        hold each row once."""
+        base = str(tmp_path / "sinks")
+        lineage = str(tmp_path / "lineage")
+        first = with_partition_id(transcripts, n_buckets=16).filter(
+            F.col("partition_id") < 8)
+        run_flagship(first, base, key="partition_id")
+        LineageLog(spark, lineage).commit(first, "runC")
+
+        def crash(df):
+            run_flagship(df, base, key="partition_id")
+            raise RuntimeError("crash before the lineage commit")
+
+        with pytest.raises(RuntimeError):
+            run_with_resume(spark, transcripts, "runC", lineage, crash,
+                            n_buckets=16)
+        r = run_with_resume(
+            spark, transcripts, "runC", lineage,
+            lambda df: run_flagship(df, base, key="partition_id"),
+            n_buckets=16,
+        )
+        assert r == {"processed_partitions": 8, "skipped": 8}
+        full = run_flagship(transcripts)
+        assert _disk_counts(spark, base, full) == full
+
     def test_lineage_carries_parse_failures(self, parsed, tmp_path, spark):
         lineage = str(tmp_path / "lineage3")
         log = LineageLog(spark, lineage)
@@ -158,6 +209,47 @@ class TestCheckpoint:
             .first()[0]
         )
         assert total_pf == 100  # the i%10==9 garbage class
+
+
+class TestFlagshipJob:
+    def test_job_rerun_same_run_id(self, spark, transcripts, sf_test_dir,
+                                   tmp_path, capsys):
+        """jobs/flagship_job.py end to end, submitted twice with one run
+        id: the second submission processes nothing and the sink tables
+        on disk hold the full run's counts."""
+        path = os.path.join(os.path.dirname(__file__), "..", "jobs",
+                            "flagship_job.py")
+        spec = importlib.util.spec_from_file_location("flagship_job", path)
+        job = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(job)
+        out = str(tmp_path / "sinks")
+        argv = ["--input", sf_test_dir, "--output", out,
+                "--lineage", str(tmp_path / "lineage"), "--run-id", "job1",
+                "--n-buckets", "16"]
+        reports = []
+        for _ in range(2):
+            assert job.main(argv) == 0
+            reports.append(json.loads(capsys.readouterr().out.splitlines()[-1]))
+        full = run_flagship(transcripts)
+        assert {k: full[k] for k in EXPECTED} == EXPECTED
+        assert reports[0]["run"] == {"processed_partitions": 16, "skipped": 0}
+        assert reports[0]["sink_counts"] == full
+        assert reports[1]["run"] == {"processed_partitions": 0, "skipped": 16}
+        assert _disk_counts(spark, out, full) == full
+
+
+class TestDefaultCores:
+    def test_affinity_capped_by_env(self, monkeypatch):
+        from rsyslog_spark import session
+
+        monkeypatch.setattr(session.os, "sched_getaffinity",
+                            lambda pid: {0, 1, 2, 3})
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        assert session.default_cores() == 4
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+        assert session.default_cores() == 4
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+        assert session.default_cores() == 2
 
 
 class TestSkew:
@@ -217,6 +309,11 @@ class TestFlagshipPlanShape:
         (below,) = _subtrees(final, "MapInArrow")
         for fn in ("RLIKE", "regexp_extract", "replace("):
             assert fn not in below, (fn, below)
+
+
+def _disk_counts(spark, base: str, sinks) -> dict[str, int]:
+    """Rows on disk in each named sink table under ``base``."""
+    return {s: spark.read.parquet(f"{base}/{s}").count() for s in sinks}
 
 
 def _subtrees(plan: str, node: str) -> list[str]:

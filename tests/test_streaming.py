@@ -3,9 +3,13 @@ exactly-once, and cross-batch stateful repeat suppression."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from rsyslog_spark.pipeline import run_flagship
+from rsyslog_spark.schema import TRANSCRIPT_SCHEMA
 from rsyslog_spark.sources.transcripts import transcripts_spark
 from rsyslog_spark.streaming import (
     read_transcript_stream,
@@ -52,6 +56,36 @@ class TestStreamFlagship:
                                          max_files_per_trigger=1)
         stream_flagship(stream2, base, ckpt)
         assert spark.read.parquet(f"{base}/archive").count() == 900
+
+
+class TestStreamEqualsBatch:
+    def test_sink_tables_equal_batch(self, spark, stream_src, tmp_path):
+        """Streaming and batch share one writer: each streamed sink table
+        minus ``batch_id`` equals the batch run's table over the same
+        source, rendered templates and dynafile split included."""
+        sbase = str(tmp_path / "stream")
+        bbase = str(tmp_path / "batch")
+        stream_flagship(
+            read_transcript_stream(spark, stream_src, max_files_per_trigger=1),
+            sbase, str(tmp_path / "ckpt"),
+        )
+        counts = run_flagship(
+            spark.read.schema(TRANSCRIPT_SCHEMA).parquet(stream_src), bbase)
+        assert len(counts) == 5
+        for sink in counts:
+            s = spark.read.parquet(f"{sbase}/{sink}").drop("batch_id")
+            b = spark.read.parquet(f"{bbase}/{sink}")
+            assert sorted(s.columns) == sorted(b.columns), sink
+            b = b.select(*s.columns)
+            assert s.count() == counts[sink], sink
+            assert s.exceptAll(b).count() == 0, sink
+            assert b.exceptAll(s).count() == 0, sink
+        batches = [d for d in os.listdir(f"{sbase}/by_app")
+                   if d.startswith("batch_id=")]
+        assert len(batches) >= 2
+        for d in batches:
+            assert any(p.startswith("programname=")
+                       for p in os.listdir(f"{sbase}/by_app/{d}")), d
 
 
 class TestStatefulRepeat:

@@ -66,12 +66,9 @@ def jvm_peak_rss_gb() -> float:
 
 
 def main():
-    from rsyslog_spark.session import get_spark
+    from rsyslog_spark.session import default_cores, get_spark
 
-    cores = len(os.sched_getaffinity(0))
-    cap = os.environ.get("SPARK_GRAFT_CPUS")
-    if cap:
-        cores = min(cores, int(cap))
+    cores = default_cores()
     spark = get_spark(cores=cores)
     out = {"replicas": REPLICAS, "sf_base": SF_DIR, "cores": cores}
 
