@@ -8,23 +8,17 @@ the ONLY viable shape is asymmetric: the eval side is tiny (benchmarks
 are at most millions of grams), the corpus side is the 100 TB — so the
 eval grams travel to the corpus, never the reverse.
 
-Two engines, same results:
+Eval grams are md5-hashed to int64, collected to the driver as a
+SORTED numpy int64 array (8 bytes per gram exactly: 20 M grams =
+160 MB — a Python frozenset of the same ints would be ~1.5-2 GB of
+boxed objects and per-slot overhead), broadcast to executors, and the
+corpus makes ONE mapInPandas pass that shingles + hashes + counts hits
+per doc via vectorized ``np.searchsorted`` membership. ZERO corpus-side
+shuffle — the whole operator is a single scan. This is the plan you
+want at 10^12 docs. (The broadcast-hash-join form, which pays a
+groupBy(id) shuffle, is the differential reference in the tests.)
 
-- ``engine='set'`` (default): eval grams are md5-hashed to int64,
-  collected to the driver as a SORTED numpy int64 array (8 bytes per
-  gram exactly: 20 M grams = 160 MB — a Python frozenset of the same
-  ints would be ~1.5-2 GB of boxed objects and per-slot overhead),
-  broadcast to executors, and the corpus makes ONE mapInPandas pass
-  that shingles + hashes + counts hits per doc via vectorized
-  ``np.searchsorted`` membership. ZERO corpus-side shuffle — the whole
-  operator is a single scan. This is the plan you want at 10^12 docs.
-- ``engine='join'``: corpus shingle frame broadcast-hash-joined against
-  the eval gram-hash frame, one groupBy(id) for the per-doc counts.
-  For the (unrealistic) case where the eval gram set exceeds driver
-  memory; still no corpus-vs-corpus shuffle, but pays a groupBy(id)
-  shuffle of (id, hit) pairs. Used by tests as the differential twin.
-
-Both hash grams with md5[:8 bytes] via hashlib (engine-independent,
+Grams hash with md5[:8 bytes] via hashlib (engine-independent,
 deterministic); a collision would need ~2^32 grams per 50%% birthday
 chance — irrelevant at benchmark scale, and it could only ever
 OVER-count a hit, never miss one.
@@ -87,7 +81,6 @@ def kgram_contamination(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "set",
 ) -> DataFrame:
     """One row per corpus doc: (id, n_grams, n_hit, frac, contaminated).
 
@@ -98,71 +91,49 @@ def kgram_contamination(
     - frac: n_hit / n_grams (0.0 when n_grams = 0), rounded to 6 dp.
     - contaminated: frac >= threshold.
     """
+    import numpy as np
     import pandas as pd
 
     id_type = corpus.schema[id_col].dataType.simpleString()
 
-    if engine == "set":
-        import numpy as np
+    # eval side: per-doc gram hashes -> global distinct (eval-sized
+    # shuffle, tiny) -> driver SORTED int64 array -> executor
+    # broadcast. 8 bytes/gram flat (the r3 frozenset was ~28 bytes
+    # per boxed int plus hash-table slots); membership below is a
+    # vectorized binary search instead of a per-gram Python lookup.
+    ev = [
+        r.gh
+        for r in gram_hashes(eval_df, k, text_col, id_col)
+        .select("gh").distinct().collect()
+    ]
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        np.sort(np.array(ev, dtype=np.int64))
+    )
 
-        # eval side: per-doc gram hashes -> global distinct (eval-sized
-        # shuffle, tiny) -> driver SORTED int64 array -> executor
-        # broadcast. 8 bytes/gram flat (the r3 frozenset was ~28 bytes
-        # per boxed int plus hash-table slots); membership below is a
-        # vectorized binary search instead of a per-gram Python lookup.
-        ev = [
-            r.gh
-            for r in gram_hashes(eval_df, k, text_col, id_col)
-            .select("gh").distinct().collect()
-        ]
-        bc = corpus.sparkSession.sparkContext.broadcast(
-            np.sort(np.array(ev, dtype=np.int64))
-        )
+    def _gen(pdfs):
+        evarr = bc.value
+        for pdf in pdfs:
+            ids: list = []
+            ng: list = []
+            nh: list = []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                ghs = _doc_gram_hashes(t, k)
+                ids.append(i)
+                ng.append(len(ghs))
+                if ghs and evarr.size:
+                    g = np.fromiter(ghs, dtype=np.int64, count=len(ghs))
+                    pos = np.searchsorted(evarr, g)
+                    inb = pos < evarr.size
+                    nh.append(int(np.count_nonzero(
+                        inb & (evarr[np.where(inb, pos, 0)] == g)
+                    )))
+                else:
+                    nh.append(0)
+            yield pd.DataFrame({"id": ids, "n_grams": ng, "n_hit": nh})
 
-        def _gen(pdfs):
-            evarr = bc.value
-            for pdf in pdfs:
-                ids: list = []
-                ng: list = []
-                nh: list = []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    ghs = _doc_gram_hashes(t, k)
-                    ids.append(i)
-                    ng.append(len(ghs))
-                    if ghs and evarr.size:
-                        g = np.fromiter(
-                            ghs, dtype=np.int64, count=len(ghs)
-                        )
-                        pos = np.searchsorted(evarr, g)
-                        inb = pos < evarr.size
-                        nh.append(int(np.count_nonzero(
-                            inb & (evarr[np.where(inb, pos, 0)] == g)
-                        )))
-                    else:
-                        nh.append(0)
-                yield pd.DataFrame({"id": ids, "n_grams": ng, "n_hit": nh})
-
-        counts = corpus.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            _gen, f"id {id_type}, n_grams long, n_hit long"
-        )
-    elif engine == "join":
-        cg = gram_hashes(corpus, k, text_col, id_col)
-        eg = gram_hashes(eval_df, k, text_col, id_col).select("gh").distinct()
-        hit = cg.join(
-            F.broadcast(eg.withColumn("_hit", F.lit(1))), "gh", "left"
-        )
-        per_doc = hit.groupBy("id").agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.count("_hit").alias("n_hit"),
-        )
-        # docs shorter than k tokens emit no grams; restore them as 0/0
-        counts = (
-            corpus.select(F.col(id_col).alias("id"))
-            .join(per_doc, "id", "left")
-            .na.fill({"n_grams": 0, "n_hit": 0})
-        )
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
+    counts = corpus.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        _gen, f"id {id_type}, n_grams long, n_hit long"
+    )
 
     frac = F.when(
         F.col("n_grams") > 0,

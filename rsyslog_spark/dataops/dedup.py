@@ -46,39 +46,19 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text",
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-             k: int = 3, out: str = "sh", engine: str = "arrow") -> DataFrame:
+             k: int = 3, out: str = "sh") -> DataFrame:
     """Distinct word k-gram shingles, exploded: (id, sh).
 
-    engine='arrow' (default): ONE mapInPandas pass builds each doc's
-    gram set locally — per-doc dedup needs NO shuffle at all (shingle
-    uniqueness is per document by definition), and the python loop
-    beats the Column-HOF formulation by ~4x (transform over sequence
-    with 3 element_at per gram is interpreted per element; measured
-    4.6 s -> ~1 s at sf0.1). engine='sql' keeps the pure-Column form
-    (used by tests as the differential reference).
+    ONE mapInPandas pass builds each doc's gram set locally — per-doc
+    dedup needs NO shuffle at all (shingle uniqueness is per document by
+    definition), and the python loop beats the Column-HOF formulation
+    by ~4x (transform over sequence with 3 element_at per gram is
+    interpreted per element; measured 4.6 s -> ~1 s at sf0.1; the
+    Column form is the differential reference in the tests).
 
-    Either way the output shape is the scale-relevant one: every
-    downstream op is a groupBy/join on (id) or (sh) — plain shuffles,
-    no row blowup beyond tokens x1."""
-    if engine == "sql":
-        toks = F.split(F.col(text_col), " ")
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
-            ),
-        )
-        # guard: Spark sequence(0, n) DESCENDS when n < 0 (doc shorter
-        # than k tokens) — emit no shingles instead
-        grams = F.when(F.size(toks) >= k, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-        # dedupe AFTER the explode: array_distinct is O(len^2) per doc
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.explode(grams).alias(out),
-        ).distinct()
-
+    The output shape is the scale-relevant one: every downstream op is
+    a groupBy/join on (id) or (sh) — plain shuffles, no row blowup
+    beyond tokens x1."""
     import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()

@@ -6,9 +6,10 @@
   broadcast the queries, scan the corpus once. This is the correct
   100 TB plan when |queries| is small — one pass, no shuffle of the
   corpus, per-partition top-k via window over the broadcast side.
-- ``sign_lsh_buckets`` / ``topk_lsh``: the scale path for large query
-  sets — deterministic sign-LSH buckets (bit = sign of coordinate
-  projections summed per band), candidates only within a bucket.
+- ``lsh_bucket_table`` / ``topk_lsh`` / ``neardup_lsh``: the scale
+  path for large query sets — deterministic sign-LSH buckets (bit =
+  sign of an integer projection onto a Rademacher hyperplane, one
+  numpy matmul per Arrow batch), candidates only within a bucket.
 """
 
 from __future__ import annotations
@@ -114,58 +115,6 @@ def rademacher_plane(table: int, bit: int, dim: int) -> list[int]:
     ]
 
 
-def _quantized(vec_col: str) -> Column:
-    """float32 embedding -> exact integer vector (x1000, half-up).
-
-    Quantizing makes every LSH projection EXACT int64 math: no float
-    summation-order ties, so Spark and any oracle engine compute
-    byte-identical bucket ids (the r01 axis-aligned family compared
-    float sums >= 0 — a sign flip one ulp from zero would diverge)."""
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"),
-    )
-
-
-def sign_lsh_buckets(
-    df: DataFrame,
-    n_bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out: str = "bucket",
-    table: int = 0,
-    dim: int = 64,
-) -> DataFrame:
-    """Seeded sign-LSH bucket id (bitstring) for ONE hash table.
-
-    Bit j = sign of <quantized(v), rademacher_plane(table, j)> — a
-    proper random-hyperplane family (replaces the r01 axis-aligned
-    projections, whose bits were correlated through the coordinate
-    distribution and hurt recall).
-
-    REFERENCE FORMULATION ONLY (not on the query surface): the Column
-    higher-order functions are interpreted per element and measured
-    ~10x slower than ``lsh_bucket_table``'s single numpy matmul, which
-    computes the identical grouping. Retained as the engine-independent
-    spec the tests compare the fast path against."""
-    q = _quantized(vec_col)
-    bits = []
-    for j in range(n_bits):
-        w = rademacher_plane(table, j, dim)
-        # slice the plane to the vector's length: zip_with null-pads the
-        # SHORTER side, which would poison the integer sum
-        w_arr = F.slice(
-            F.array(*[F.lit(x).cast("long") for x in w]), F.lit(1), F.size(q)
-        )
-        proj = F.aggregate(
-            F.zip_with(q, w_arr, lambda x, ww: x * ww),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.withColumn(out, F.concat(*bits))
-
-
 def lsh_bucket_table(
     df: DataFrame,
     n_tables: int = 16,
@@ -203,9 +152,8 @@ def lsh_bucket_table(
             [np.asarray(v, dtype=np.float64) for v in vecs], dtype=np.float64
         )
         q = np.floor(m * 1000.0 + 0.5).astype(np.int64)
-        # planes sliced to the actual vector length (same rule as
-        # sign_lsh_buckets' F.slice — shorter vectors just use the
-        # leading plane coordinates)
+        # planes sliced to the actual vector length — shorter vectors
+        # just use the leading plane coordinates
         bits = (q @ W[:, : q.shape[1]].T) >= 0  # exact int64
         ids = (
             bits.reshape(len(q), n_tables, n_bits).astype(np.int64) * pow2
@@ -393,10 +341,10 @@ def topk_lsh(
     re-attached (the ``neardup_lsh`` discipline: shuffling id pairs is
     ~100x lighter than shuffling duplicate embedding payloads).
     Buckets come from the same ONE-matmul Arrow path as
-    ``neardup_lsh``: the interpreted Column-HOF formulation
-    (``sign_lsh_buckets``) computes identical groupings but was
-    measured ~10x slower at 5k x 128 projections (PERF.md) and is kept
-    only as the cross-engine reference."""
+    ``neardup_lsh``: the interpreted Column-HOF formulation computes
+    identical groupings but was measured ~10x slower at 5k x 128
+    projections (PERF.md); it lives in the tests as the cross-engine
+    reference."""
     cb = lsh_bucket_table(corpus, n_tables, n_bits, id_col, vec_col, dim)
     qb = lsh_bucket_table(queries, n_tables, n_bits, id_col, vec_col, dim)
     q = qb.select("tbl", "bucket", F.col(id_col).alias("qid"))

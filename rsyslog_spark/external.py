@@ -274,7 +274,7 @@ def mm_external(
     output: str | None = None,
     force_single_instance: bool = False,
     vars_col: str = "vars",
-    active_col: str | None = None,
+    active: Column | None = None,
 ) -> DataFrame:
     """action(type="mmexternal" binary=... interface.input=...):
     modify messages through an external program (mmexternal.c).
@@ -290,9 +290,10 @@ def mm_external(
     (the reference serializes doAction on a mutex, :507-521) — a
     deliberate scale bottleneck, exactly like the original.
 
-    ``active_col`` names a boolean column: rows where it is false are
-    passed through without touching the child (the routing path gate —
-    doAction only sees messages on the action's path).
+    ``active`` is the routing-path gate: rows where it is not true are
+    passed through without touching the child (doAction only sees
+    messages on the action's path). It rides to the worker as a
+    scratch column that is dropped from the result.
 
     Embedded LFs in the input would desync the line protocol in the
     reference too (callExtProg writes msg + '\\n' blindly); the parse
@@ -314,6 +315,10 @@ def mm_external(
                 F.array().cast("array<string>"),
             ),
         )
+    gated = active is not None
+    ac = "_mmexternal_active"
+    if gated:
+        df = df.withColumn(ac, active)
     if force_single_instance:
         df = df.coalesce(1)
     schema = df.schema
@@ -367,9 +372,7 @@ def mm_external(
             for pdf in batches:
                 rows = pdf.to_dict("records")
                 for row in rows:
-                    if active_col is not None and not row.get(
-                        active_col
-                    ):
+                    if gated and not row.get(ac):
                         continue
                     if mode == "msg":
                         line = row.get("msg") or ""
@@ -394,7 +397,8 @@ def mm_external(
             if outfd is not None:
                 outfd.close()
 
-    return df.mapInPandas(_proc, schema=schema)
+    out = df.mapInPandas(_proc, schema=schema)
+    return out.drop(ac) if gated else out
 
 
 # --------------------------------------------------------------------------
@@ -561,6 +565,10 @@ def om_prog(
                                 continue
                             break
                         row[status_col] = st
+                        if st == "previous_committed":
+                            # the program committed every record before
+                            # this one (INTERFACE.md): a partial commit
+                            flush_bracket(True, "")
                         if st in ("defer_commit", "previous_committed"):
                             # resolved when the bracket commits
                             deferred.append(row)

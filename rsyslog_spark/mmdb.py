@@ -109,7 +109,11 @@ class MMDBReader:
         if typ in (_T_U16, _T_U32, _T_U64, _T_U128):
             return int.from_bytes(b[p:p + size], "big"), p + size
         if typ == _T_I32:
+            # libmaxminddb's (int32_t) cast of the uint: only a 4-byte
+            # field can be negative; shorter fields are always positive
             v = int.from_bytes(b[p:p + size], "big")
+            if v >= 1 << 31:
+                v -= 1 << 32
             return v, p + size
         if typ == _T_DOUBLE:
             return struct.unpack(">d", b[p:p + 8])[0], p + 8
@@ -171,8 +175,11 @@ class MMDBReader:
             # v4 lives under ::/96 in a v6 tree
             for _ in range(96):
                 node = self._record(node, 0)
-                if node >= self.node_count:
+                if node == self.node_count:
                     return None
+                if node > self.node_count:
+                    # a record covering the v4 space, e.g. ::/8
+                    return self._data_at_ptr(node)
         for i in range(nbits - 1, -1, -1):
             node = self._record(node, (bits >> i) & 1)
             if node == self.node_count:
@@ -257,7 +264,9 @@ def write_mmdb(
 ) -> None:
     """Write a minimal spec-conformant MMDB: ``networks`` maps CIDR
     strings to record dicts. Same shape as the reference fixture
-    (record_size 24, depth-exact tree, records inline, no pointers)."""
+    (record_size 24, depth-exact tree, records inline, no pointers).
+    Nested networks may come in any order: the more specific one wins
+    inside it, and the enclosing record covers the rest."""
     nbits = 32 if ip_version == 4 else 128
     # data section: one encoded record per unique network
     data = b""
@@ -281,12 +290,16 @@ def write_mmdb(
             else:
                 nxt = nodes[node][bit]
                 if not (isinstance(nxt, tuple) and nxt[0] == "node"):
-                    nodes.append([None, None])
+                    # an enclosing record (or nothing) moves down into
+                    # both children of the new node
+                    nodes.append([nxt, nxt])
                     nxt = ("node", len(nodes) - 1)
                     nodes[node][bit] = nxt
                 node = nxt[1]
 
-    for start, plen, cidr in items:
+    # shortest prefix first: a nested network always lands below the
+    # record that encloses it
+    for start, plen, cidr in sorted(items, key=lambda t: t[1]):
         insert(start, plen, cidr)
 
     node_count = len(nodes)

@@ -695,6 +695,7 @@ def mm_taghostname(
     tag: str | None = None,
     force_localhostname: bool = False,
     localhostname: str = "localhost",
+    active: Column | None = None,
 ) -> DataFrame:
     """Retag / re-hostname a message (contrib/mmtaghostname/
     mmtaghostname.c:160-178 doAction).
@@ -709,20 +710,26 @@ def mm_taghostname(
       (tests/mmtaghostname_server.sh), deterministic "localhost" when
       unset (a machine hostname would break golden tests).
 
-    Pure column expressions, no UDF.
+    ``active`` is the routing-path gate: rows where it is not true keep
+    every column. Pure column expressions, no UDF; one projection, so
+    the gate reads the columns as they were before the action.
     """
     from rsyslog_spark.parse.chain import _PROGNAME_RE
 
+    if active is None:
+        active = F.lit(True)
+    new: dict[str, Column] = {}
     if tag is not None:
-        df = df.withColumn("syslogtag", F.lit(tag))
+        new["syslogtag"] = F.lit(tag)
         if "programname" in df.columns:
-            df = df.withColumn(
-                "programname",
-                F.regexp_extract(F.col("syslogtag"), _PROGNAME_RE, 1),
+            new["programname"] = F.regexp_extract(
+                F.lit(tag), _PROGNAME_RE, 1
             )
     if force_localhostname:
-        df = df.withColumn("hostname", F.lit(localhostname))
-    return df
+        new["hostname"] = F.lit(localhostname)
+    return df.withColumns(
+        {c: F.when(active, v).otherwise(F.col(c)) for c, v in new.items()}
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -780,10 +787,15 @@ def mm_dblookup(
     semantics; container default "!iplocation", :46). Subtree values
     flatten with the bag's ``a!b`` convention; scalars stringify.
 
+    ``active`` is the routing-path gate: both UDF inputs are null on
+    rows where it is not true, so those rows cross the Arrow boundary
+    as nulls and keep their bag.
+
     100 TB shape: the database is ENUMERATED ONCE (driver-side) into
     sorted network intervals via the pure-Python MMDB reader
     (rsyslog_spark.mmdb — the format spec is public) and shipped to
-    executors as two int lists + records inside the UDF closure; each
+    executors as a ``SparkContext.broadcast`` of two int lists +
+    records (once per executor, not inside every task's closure); each
     batch does an O(log n) bisect per row — no per-row tree pointer
     walk, no join, no shuffle. The reference links libmaxminddb and
     walks the tree per message; same contract, batch-friendly plan.
@@ -796,9 +808,11 @@ def mm_dblookup(
 
     reader = MMDBReader.open(mmdbfile)  # config-time: bad file is loud
     nets = reader.networks()
-    starts = [a for a, _, _ in nets]
-    ends = [b for _, b, _ in nets]
-    recs = [r for _, _, r in nets]
+    bc = df.sparkSession.sparkContext.broadcast((
+        [a for a, _, _ in nets],
+        [b for _, b, _ in nets],
+        [r for _, _, r in nets],
+    ))
     specs = _dblookup_fields(fields, container)
 
     if key.startswith(("$!", "$.")):
@@ -821,7 +835,7 @@ def mm_dblookup(
                 v if isinstance(v, str) else _json.dumps(v)
             )
 
-    def _enrich_one(bag, ip):
+    def _enrich_one(bag, ip, starts, ends, recs):
         import ipaddress as _ipa
 
         if ip is None:
@@ -854,16 +868,20 @@ def mm_dblookup(
 
     @F.pandas_udf("map<string,string>")
     def _walk(bags: pd.Series, ips: pd.Series) -> pd.Series:
+        starts, ends, recs = bc.value
         return pd.Series(
-            [_enrich_one(b, i) for b, i in zip(bags, ips)],
+            [
+                _enrich_one(b, i, starts, ends, recs)
+                for b, i in zip(bags, ips)
+            ],
             index=bags.index,
         )
 
-    new_bag = _walk(F.col(vars_col), key_expr)
+    if active is None:
+        active = F.lit(True)
     cur = F.col(vars_col)
-    if active is not None:
-        new_bag = F.when(active, new_bag).otherwise(cur)
-    return df.withColumn(vars_col, new_bag)
+    new_bag = _walk(F.when(active, cur), F.when(active, key_expr))
+    return df.withColumn(vars_col, F.when(active, new_bag).otherwise(cur))
 
 
 # ---------------------------------------------------------------------------
@@ -1114,6 +1132,7 @@ def mm_audit(
     df: DataFrame,
     msg_col: str = "msg",
     vars_col: str = "vars",
+    active: Column | None = None,
 ) -> DataFrame:
     """Detect Linux audit records in MSG and parse them into the
     ``$!audit`` subtree (plugins/mmaudit/mmaudit.c, 344 LoC).
@@ -1123,6 +1142,9 @@ def mm_audit(
     vars untouched and parse_success false (MsgSetParseSuccess with
     bSuccess 0/1, :272). The ``hdr.type`` int renders as its decimal
     string — engine-wide map<string,string> coercion convention.
+
+    ``active`` is the routing-path gate: off-path rows cross the UDF as
+    null MSGs and keep vars and parse_success unchanged.
 
     Arrow-batched pandas UDF: the walk is a stateful per-char scan with
     quote rules the reference itself runs per message; no column-
@@ -1134,8 +1156,10 @@ def mm_audit(
     def _walk(texts: pd.Series) -> pd.Series:
         return texts.map(audit_record_fields)
 
+    if active is None:
+        active = F.lit(True)
     hit = f"_audit_{msg_col}"
-    df = df.withColumn(hit, _walk(F.col(msg_col)))
+    df = df.withColumn(hit, _walk(F.when(active, F.col(msg_col))))
     got = F.col(hit).isNotNull()
     if vars_col not in df.columns:
         df = df.withColumn(
@@ -1148,11 +1172,18 @@ def mm_audit(
         ),
         F.col(hit),
     )
-    df = df.withColumn(vars_col, F.when(got, merged).otherwise(cur))
+    prev = (
+        F.col("parse_success")
+        if "parse_success" in df.columns
+        else F.lit(None).cast("boolean")
+    )
     # MsgSetParseSuccess(pMsg, bSuccess) runs on EVERY message the
-    # action sees (:272) — unconditional overwrite, 0 and 1 alike
-    df = df.withColumn("parse_success", got)
-    return df.drop(hit)
+    # action sees (:272) — unconditional overwrite, 0 and 1 alike; one
+    # projection, so the gate reads vars as they were before the merge
+    return df.withColumns({
+        vars_col: F.when(got, merged).otherwise(cur),
+        "parse_success": F.when(active, got).otherwise(prev),
+    }).drop(hit)
 
 
 # ---------------------------------------------------------------------------
@@ -1222,6 +1253,7 @@ def mm_rfc5424addhmac(
     sd_id: str = "hmac@0",
     rawmsg_col: str = "rawmsg",
     sd_col: str = "structured_data",
+    active: Column | None = None,
 ) -> DataFrame:
     """Append an HMAC-of-rawmsg SD element to RFC5424 messages
     (contrib/mmrfc5424addhmac/mmrfc5424addhmac.c, 382 LoC).
@@ -1231,6 +1263,10 @@ def mm_rfc5424addhmac(
     digest name follows hashlib (sha1/sha256/sha512/md5... — the
     EVP_get_digestbyname surface); unknown names raise at plan build,
     the module's config-time abort.
+
+    ``active`` is the routing-path gate: the UDF gets rawmsg only on
+    on-path RFC5424 rows (a null rawmsg there hashes as ""); every
+    other row crosses as nulls and keeps its structured data.
     """
     import hashlib as _hashlib
 
@@ -1246,17 +1282,21 @@ def mm_rfc5424addhmac(
     def _hm(raw: pd.Series, sd: pd.Series) -> pd.Series:
         return pd.Series(
             [
-                hmac_sd_element(r, s, kb, algo, sd_id)
+                None if r is None
+                else hmac_sd_element(r, s, kb, algo, sd_id)
                 for r, s in zip(raw, sd)
             ]
         )
 
-    is5424 = F.col("protocol_version") == 1
-    new_sd = _hm(F.col(rawmsg_col), F.col(sd_col))
-    return df.withColumn(
-        sd_col,
-        F.when(is5424 & new_sd.isNotNull(), new_sd).otherwise(F.col(sd_col)),
+    if active is None:
+        active = F.lit(True)
+    gate = active & (F.col("protocol_version") == 1)
+    sd = F.col(sd_col)
+    new_sd = _hm(
+        F.when(gate, F.coalesce(F.col(rawmsg_col), F.lit(""))),
+        F.when(gate, sd),
     )
+    return df.withColumn(sd_col, F.coalesce(new_sd, sd))
 
 
 # ---------------------------------------------------------------------------
@@ -1453,6 +1493,7 @@ def mm_grok(
     patterns: dict[str, str] | None = None,
     source_col: str = "msg",
     vars_col: str = "vars",
+    active: Column | None = None,
 ) -> DataFrame:
     """contrib/mmgrok: grok-parse MSG into the ``target`` subtree.
 
@@ -1460,7 +1501,8 @@ def mm_grok(
     "$!x"/"!x"/"$.x" paths (msgAddJSON target). The C's ``source``
     action parameter is parsed but then OVERWRITTEN with the MSG
     pointer in doAction (mmgrok.c:336-346) — parity: the source is
-    always the message column."""
+    always the message column. ``active`` is the routing-path gate:
+    off-path rows see a null source and keep their vars."""
     from rsyslog_spark.templates import var_key
 
     regex, keys = grok_compile(match, patterns)
@@ -1469,7 +1511,9 @@ def mm_grok(
     root = prefix in ("", ".")  # bare $! / $. roots
     if not root:
         prefix += "!"
-    gm = grok_map_expr(F.col(source_col), regex, keys)
+    if active is None:
+        active = F.lit(True)
+    gm = grok_map_expr(F.when(active, F.col(source_col)), regex, keys)
     nc = f"_grok_{source_col}"
     df = df.withColumn(nc, gm)
     got = F.col(nc).isNotNull()

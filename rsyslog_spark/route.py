@@ -67,6 +67,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rsyslog_spark import mods
+from rsyslog_spark.external import mm_external
 from rsyslog_spark.filters import prifilt_predicate, propfilt_predicate
 from rsyslog_spark.templates import compile_template
 
@@ -147,8 +149,9 @@ class Normalize:
 class TagHostname:
     """action(type="mmtaghostname"): replace TAG and/or force the
     hostname to the daemon's localhostname (contrib/mmtaghostname/
-    mmtaghostname.c:160-178 doAction; the localhostname value comes
-    from ``global(localhostname=...)`` at compile)."""
+    mmtaghostname.c:160-178 doAction; executed by mods.mm_taghostname;
+    the localhostname value comes from ``global(localhostname=...)`` at
+    compile)."""
     tag: str | None = None
     force_localhostname: bool = False
 
@@ -157,15 +160,16 @@ class TagHostname:
 class Audit:
     """action(type="mmaudit"): detect a Linux audit record in MSG and
     graft the parsed name=value pairs into ``$!audit``
-    (plugins/mmaudit/mmaudit.c:203-272 doAction); parse_success is set
-    0/1 on every message the action sees."""
+    (plugins/mmaudit/mmaudit.c:203-272 doAction; executed by
+    mods.mm_audit); parse_success is set 0/1 on every message the
+    action sees."""
 
 
 @dataclass
 class Grok:
     """action(type="mmgrok"): grok-parse MSG into the ``target``
-    subtree (contrib/mmgrok/mmgrok.c doAction :330-352; compiled match
-    regex + key->group table prepared at config time)."""
+    subtree (contrib/mmgrok/mmgrok.c doAction :330-352; executed by
+    mods.mm_grok)."""
     match: str
     target: str = "!"
     patterns: dict | None = None
@@ -175,7 +179,8 @@ class Grok:
 class AddHmac:
     """action(type="mmrfc5424addhmac"): HMAC the raw message and append
     it as an SD element to RFC5424 messages (contrib/mmrfc5424addhmac/
-    mmrfc5424addhmac.c:337-354 doAction gate + :317-334 hashMsg)."""
+    mmrfc5424addhmac.c:337-354 doAction gate + :317-334 hashMsg;
+    executed by mods.mm_rfc5424addhmac)."""
     key: str
     hashfunction: str
     sd_id: str
@@ -618,17 +623,7 @@ class RouteCompiler:
             elif isinstance(st, External):
                 self._apply_external(st, path & ~stopped)
             elif isinstance(st, DbLookup):
-                from rsyslog_spark.mods import mm_dblookup
-
-                self._df = mm_dblookup(
-                    self._df,
-                    key=st.key,
-                    mmdbfile=st.mmdbfile,
-                    fields=st.fields,
-                    container=st.container,
-                    vars_col=self._vars_col,
-                    active=path & ~stopped,
-                )
+                self._apply_dblookup(st, path & ~stopped)
             elif isinstance(st, Audit):
                 self._apply_audit(path & ~stopped)
             elif isinstance(st, AddHmac):
@@ -671,7 +666,6 @@ class RouteCompiler:
         )
 
     def _apply_normalize(self, st: Normalize, active: Column):
-        from rsyslog_spark.mods import rulebase_map_expr
         from rsyslog_spark.templates import resolve_property
 
         if st.use_rawmsg:
@@ -692,7 +686,7 @@ class RouteCompiler:
         nc = f"_norm{self._n}"
         self._df = self._df.withColumn(
             nc,
-            rulebase_map_expr(
+            mods.rulebase_map_expr(
                 F.coalesce(src, F.lit("")), st.rules, st.prefix
             ),
         )
@@ -721,176 +715,39 @@ class RouteCompiler:
                 ),
             )
 
+    # -- mm* actions: each statement's fields are its mods function's
+    # parameters; the routing path is the function's ``active`` gate --
     def _apply_taghostname(self, st: TagHostname, active: Column):
-        """mmtaghostname doAction (contrib/mmtaghostname/
-        mmtaghostname.c:160-178): MsgSetTAG replaces the syslogtag
-        wholesale (programname re-derived — the reference invalidates
-        its cache); forcelocalhostname sets HOSTNAME to the
-        global(localhostname=...) value."""
-        import re as _re
-
-        if st.tag is not None:
-            self._df = self._df.withColumn(
-                "syslogtag",
-                F.when(active, F.lit(st.tag)).otherwise(F.col("syslogtag")),
-            )
-            if "programname" in self._df.columns:
-                from rsyslog_spark.parse.chain import _PROGNAME_RE
-
-                prog = _re.match(_PROGNAME_RE, st.tag).group(1)
-                self._df = self._df.withColumn(
-                    "programname",
-                    F.when(active, F.lit(prog)).otherwise(
-                        F.col("programname")
-                    ),
-                )
-        if st.force_localhostname:
-            self._df = self._df.withColumn(
-                "hostname",
-                F.when(active, F.lit(self.localhostname)).otherwise(
-                    F.col("hostname")
-                ),
-            )
-
-    def _apply_snmptrapd(self, st: SnmpTrapd, active: Column):
-        """mmsnmptrapd doAction (plugins/mmsnmptrapd/mmsnmptrapd.c:
-        228-265) — the whole rewrite lives in mods.mm_snmptrapd (pure
-        columns); the routing path gates which rows the action sees."""
-        from rsyslog_spark.mods import mm_snmptrapd
-
-        self._df = mm_snmptrapd(
-            self._df,
-            tag=st.tag,
-            severity_mapping=st.severity_mapping,
+        self._df = mods.mm_taghostname(
+            self._df, **vars(st), localhostname=self.localhostname,
             active=active,
         )
 
-    def _apply_external(self, st: External, active: Column):
-        """mmexternal doAction (plugins/mmexternal/mmexternal.c:504-522)
-        — the child-process round trip lives in external.mm_external;
-        the routing path is materialized into a scratch bool column so
-        off-path rows pass through without touching the child."""
-        from rsyslog_spark.external import mm_external
+    def _apply_snmptrapd(self, st: SnmpTrapd, active: Column):
+        self._df = mods.mm_snmptrapd(self._df, **vars(st), active=active)
 
-        ac = self._fresh("extact")
-        self._df = self._df.withColumn(ac, active)
+    def _apply_dblookup(self, st: DbLookup, active: Column):
+        self._df = mods.mm_dblookup(
+            self._df, **vars(st), vars_col=self._vars_col, active=active
+        )
+
+    def _apply_external(self, st: External, active: Column):
         self._df = mm_external(
-            self._df,
-            binary=st.binary,
-            interface_input=st.interface_input,
-            output=st.output,
-            force_single_instance=st.force_single_instance,
-            vars_col=self._vars_col,
-            active_col=ac,
-        ).drop(ac)
+            self._df, **vars(st), vars_col=self._vars_col, active=active
+        )
 
     def _apply_audit(self, active: Column):
-        """mmaudit doAction (plugins/mmaudit/mmaudit.c:203-272): parse
-        a Linux audit record into the $!audit subtree + set
-        parse_success 0/1 on every row the action sees (byte-exact walk
-        in mods.audit_record_fields — Arrow-batched, the scan is
-        inherently per-char)."""
-        from rsyslog_spark.mods import audit_record_fields
-
-        @F.pandas_udf("map<string,string>")
-        def _walk(texts):
-            return texts.map(audit_record_fields)
-
-        nc = self._fresh("audit")
-        self._df = self._df.withColumn(nc, _walk(F.col("msg")))
-        got = active & F.col(nc).isNotNull()
-        v = self._vars_col
-        cur = F.col(v)
-        merged = F.map_concat(
-            F.map_filter(
-                cur,
-                lambda k, _: ~F.array_contains(F.map_keys(F.col(nc)), k),
-            ),
-            F.col(nc),
+        self._df = mods.mm_audit(
+            self._df, vars_col=self._vars_col, active=active
         )
-        self._df = self._df.withColumn(
-            v, F.when(got, merged).otherwise(cur)
-        )
-        prev = (
-            F.col("parse_success")
-            if "parse_success" in self._df.columns
-            else F.lit(None).cast("boolean")
-        )
-        self._df = self._df.withColumn(
-            "parse_success", F.when(active, got).otherwise(prev)
-        ).drop(nc)
 
     def _apply_addhmac(self, st: AddHmac, active: Column):
-        """mmrfc5424addhmac doAction (contrib/mmrfc5424addhmac/
-        mmrfc5424addhmac.c:337-354): RFC5424 rows without the SD-ID get
-        ``[<sd_id> hash="<hmac-of-rawmsg>"]`` appended to their
-        structured data; everything else passes through."""
-        import pandas as pd
-
-        from rsyslog_spark.mods import hmac_sd_element
-
-        kb = st.key.encode("utf-8")
-        algo, sdid = st.hashfunction.lower(), st.sd_id
-
-        @F.pandas_udf("string")
-        def _hm(raw, sd):
-            return pd.Series(
-                [
-                    hmac_sd_element(r, s, kb, algo, sdid)
-                    for r, s in zip(raw, sd)
-                ]
-            )
-
-        nc = self._fresh("hmac")
-        self._df = self._df.withColumn(
-            nc, _hm(F.col("rawmsg"), F.col("structured_data"))
-        )
-        take = (
-            active
-            & (F.col("protocol_version") == 1)
-            & F.col(nc).isNotNull()
-        )
-        self._df = self._df.withColumn(
-            "structured_data",
-            F.when(take, F.col(nc)).otherwise(F.col("structured_data")),
-        ).drop(nc)
+        self._df = mods.mm_rfc5424addhmac(self._df, **vars(st), active=active)
 
     def _apply_grok(self, st: Grok, active: Column):
-        """mmgrok doAction (contrib/mmgrok/mmgrok.c:330-352): grok the
-        MSG lines, msgAddJSON the LAST matching line's captures to the
-        target subtree (replace semantics). Pure column expressions."""
-        from rsyslog_spark.mods import grok_compile, grok_map_expr
-        from rsyslog_spark.templates import var_key
-
-        regex, keys = grok_compile(st.match, st.patterns)
-        t = st.target if st.target.startswith("$") else "$" + st.target
-        prefix = var_key(t)
-        root = prefix in ("", ".")  # bare $! / $. roots
-        if not root:
-            prefix += "!"
-        nc = self._fresh("grok")
-        self._df = self._df.withColumn(
-            nc, grok_map_expr(F.col("msg"), regex, keys)
+        self._df = mods.mm_grok(
+            self._df, **vars(st), vars_col=self._vars_col, active=active
         )
-        got = active & F.col(nc).isNotNull()
-        v = self._vars_col
-        cur = F.col(v)
-        prefixed = F.transform_keys(
-            F.col(nc), lambda k, _: F.concat(F.lit(prefix), k)
-        )
-        if root:
-            # root target: the incoming keys replace per-key
-            keep = F.map_filter(
-                cur,
-                lambda k, _: ~F.array_contains(F.map_keys(prefixed), k),
-            )
-        else:
-            # subtree target: msgAddJSON replaces the whole subtree
-            keep = F.map_filter(cur, lambda k, _: ~k.startswith(prefix))
-        merged = F.map_concat(keep, prefixed)
-        self._df = self._df.withColumn(
-            v, F.when(got, merged).otherwise(cur)
-        ).drop(nc)
 
     def _apply_unset(self, st: Unset, active: Column):
         v = self._vars_col

@@ -69,6 +69,87 @@ def _simhash_agg_reference(sh, bits=32):
     return per_doc.select("id", F.concat(*chars).alias("simhash"))
 
 
+def _shingles_sql_reference(df, k=3):
+    """Distinct word k-gram shingles (id, sh) as pure Column
+    expressions: transform over a sequence, explode, distinct. ~4x
+    slower than ``dedup.shingles``' one Python pass. The differential
+    reference for ``dedup.shingles``."""
+    toks = F.split(F.col("text"), " ")
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - k),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
+        ),
+    )
+    # sequence(0, n) DESCENDS when n < 0 (doc shorter than k tokens)
+    grams = F.when(F.size(toks) >= k, grams).otherwise(
+        F.array().cast("array<string>")
+    )
+    return df.select(
+        F.col("doc_id").alias("id"), F.explode(grams).alias("sh")
+    ).distinct()
+
+
+def _kgram_contamination_join(corpus, eval_df, k, threshold):
+    """k-gram contamination by a broadcast hash join of the corpus gram
+    frame against the distinct eval grams, then one groupBy(id). The
+    differential reference for ``decontam.kgram_contamination``."""
+    cg = decontam.gram_hashes(corpus, k)
+    eg = decontam.gram_hashes(eval_df, k).select("gh").distinct()
+    per_doc = (
+        cg.join(F.broadcast(eg.withColumn("_hit", F.lit(1))), "gh", "left")
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_grams"),
+             F.count("_hit").alias("n_hit"))
+    )
+    # docs shorter than k tokens emit no grams; restore them as 0/0
+    counts = (
+        corpus.select(F.col("doc_id").alias("id"))
+        .join(per_doc, "id", "left")
+        .na.fill({"n_grams": 0, "n_hit": 0})
+    )
+    frac = F.when(
+        F.col("n_grams") > 0, F.round(F.col("n_hit") / F.col("n_grams"), 6)
+    ).otherwise(F.lit(0.0))
+    return counts.select(
+        "id", "n_grams", "n_hit", frac.alias("frac"),
+        ((F.col("n_grams") > 0) & (frac >= threshold)).alias("contaminated"),
+    )
+
+
+_CONTAMINATION = {
+    "set": decontam.kgram_contamination,
+    "join": _kgram_contamination_join,
+}
+
+
+def _sign_lsh_buckets_reference(df, n_bits, dim, table=0):
+    """Sign-LSH bucket bitstring for ONE hash table as Column
+    higher-order functions: bit j = sign of <quantized(v),
+    rademacher_plane(table, j)>, integer math on the x1000 half-up
+    quantized vector. ~10x slower than ``lsh_bucket_table``'s one numpy
+    matmul. The cross-engine reference for ``lsh_bucket_table``."""
+    q = F.transform(
+        F.col("embedding"),
+        lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("long"),
+    )
+    bits = []
+    for j in range(n_bits):
+        w = similarity.rademacher_plane(table, j, dim)
+        # slice the plane to the vector's length: zip_with null-pads the
+        # SHORTER side, which would poison the integer sum
+        w_arr = F.slice(
+            F.array(*[F.lit(x).cast("long") for x in w]), F.lit(1), F.size(q)
+        )
+        proj = F.aggregate(
+            F.zip_with(q, w_arr, lambda x, ww: x * ww),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return df.withColumn("bucket", F.concat(*bits))
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.select(
         "a", "b", "inter", "union_n", "jac").collect())
@@ -238,11 +319,11 @@ class TestSimilarity:
 
     def test_lsh_topk_matches_reference_buckets(self, vecs):
         # topk_lsh now computes buckets via the one-matmul Arrow path;
-        # sign_lsh_buckets is the engine-independent reference spec —
-        # the two must induce the SAME bucket partition of the corpus
+        # the Column-HOF sign-LSH is the engine-independent reference
+        # spec — the two must induce the SAME bucket partition
         ref = {
             r["vec_id"]: r["bucket"]
-            for r in similarity.sign_lsh_buckets(
+            for r in _sign_lsh_buckets_reference(
                 vecs, n_bits=2, dim=3
             ).select("vec_id", "bucket").collect()
         }
@@ -472,7 +553,7 @@ class TestImageHeaderKernel:
 class TestShingleEngines:
     def test_arrow_matches_sql(self, docs):
         a = dedup.shingles(docs)
-        b = dedup.shingles(docs, engine="sql")
+        b = _shingles_sql_reference(docs)
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
 
@@ -497,9 +578,7 @@ class TestDecontam:
 
     def _run(self, corpus, engine):
         ev = corpus.filter("doc_id = 10")
-        out = decontam.kgram_contamination(
-            corpus, ev, k=4, threshold=0.8, engine=engine
-        )
+        out = _CONTAMINATION[engine](corpus, ev, k=4, threshold=0.8)
         return {r["id"]: r for r in out.collect()}
 
     @pytest.mark.parametrize("engine", ["set", "join"])
@@ -523,9 +602,7 @@ class TestDecontam:
         # contaminated=False (0.0 >= 0.0 is true, but the contract and
         # the oracle's CASE WHEN n_grams > 0 say never-flagged)
         ev = corpus.filter("doc_id = 10")
-        out = decontam.kgram_contamination(
-            corpus, ev, k=4, threshold=0.0, engine=engine
-        )
+        out = _CONTAMINATION[engine](corpus, ev, k=4, threshold=0.0)
         by = {r["id"]: r for r in out.collect()}
         assert not by[23]["contaminated"]
         assert by[22]["contaminated"]  # 0 hits but frac 0.0 >= 0.0
@@ -538,7 +615,7 @@ class TestDecontam:
     def test_set_engine_corpus_side_has_no_shuffle(self, corpus):
         ev = corpus.filter("doc_id = 10")
         plan = decontam.kgram_contamination(
-            corpus, ev, k=4, engine="set"
+            corpus, ev, k=4
         )._jdf.queryExecution().executedPlan().toString()
         # the corpus side is one scan + one mapInPandas: no Exchange
         assert "Exchange" not in plan
@@ -607,9 +684,7 @@ class TestDecontamFuzz:
             k = 3
             got = {}
             for eng in ("set", "join"):
-                out = decontam.kgram_contamination(
-                    df, ev, k=k, threshold=0.5, engine=eng
-                )
+                out = _CONTAMINATION[eng](df, ev, k=k, threshold=0.5)
                 got[eng] = {
                     r["id"]: (r["n_grams"], r["n_hit"], r["contaminated"])
                     for r in out.collect()

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import hashlib
 import hmac as hmaclib
+import ipaddress
+import re
 
 import pytest
 
@@ -1148,3 +1150,265 @@ ruleset(name="r") {{
         r = MMDBReader.open(str(p))
         assert r.lookup("2001:db8::1") == {"net": "doc"}
         assert r.lookup("2001:db9::1") is None
+
+
+class TestMMDBFormat:
+    """MMDB format edge cases: signed int32, a v4 lookup that meets a
+    data record inside the ::/96 walk, and nested networks."""
+
+    def test_int32_sign_extended(self, tmp_path):
+        from rsyslog_spark.mmdb import MMDBReader, write_mmdb
+
+        p = tmp_path / "x.mmdb"
+        write_mmdb(str(p), {"10.0.0.0/8": {"a": "b"}})
+        r = MMDBReader.open(str(p))
+        # extended type byte 1 (7 + 1 = int32), size 4, payload -1
+        assert r._decode(bytes([0x04, 0x01, 0xFF, 0xFF, 0xFF, 0xFF]), 0) \
+            == (-1, 6)
+        assert r._decode(bytes([0x04, 0x01, 0x80, 0, 0, 0]), 0) \
+            == (-(2 ** 31), 6)
+        # shorter fields are always positive (libmaxminddb casts the
+        # decoded uint to int32)
+        assert r._decode(bytes([0x02, 0x01, 0xFF, 0x00]), 0) == (65280, 4)
+        assert r._decode(bytes([0x00, 0x01]), 0) == (0, 2)
+
+    def test_v4_in_v6_meets_data_record(self, tmp_path):
+        from rsyslog_spark.mmdb import MMDBReader, write_mmdb
+
+        p = tmp_path / "v6.mmdb"
+        write_mmdb(str(p), {"::/8": {"net": "low"}}, ip_version=6)
+        r = MMDBReader.open(str(p))
+        assert r.lookup("1.2.3.4") == {"net": "low"}
+        # the interval enumeration covers the same address (a v4
+        # address sits under ::/96, so its v6 value is its v4 value)
+        v = int(ipaddress.ip_address("1.2.3.4"))
+        assert any(
+            a <= v <= b and rec == {"net": "low"}
+            for a, b, rec in r.networks()
+        )
+
+    @pytest.mark.parametrize("order", ["outer_first", "inner_first"])
+    def test_nested_networks_either_order(self, tmp_path, order):
+        from rsyslog_spark.mmdb import MMDBReader, write_mmdb
+
+        nets = [
+            ("10.0.0.0/8", {"net": "eight"}),
+            ("10.1.0.0/16", {"net": "sixteen"}),
+        ]
+        if order == "inner_first":
+            nets.reverse()
+        p = tmp_path / "nested.mmdb"
+        write_mmdb(str(p), dict(nets))
+        r = MMDBReader.open(str(p))
+        assert r.lookup("10.2.3.4") == {"net": "eight"}
+        assert r.lookup("10.255.0.1") == {"net": "eight"}
+        assert r.lookup("10.1.2.3") == {"net": "sixteen"}
+        assert r.lookup("11.0.0.1") is None
+        # lookup() and the interval enumeration agree on every probe
+        ivals = r.networks()
+        for ip in ("10.0.0.1", "10.1.0.0", "10.1.255.255", "10.2.3.4"):
+            v = int(ipaddress.ip_address(ip))
+            hits = [rec for a, b, rec in ivals if a <= v <= b]
+            assert hits == [r.lookup(ip)]
+
+
+# omprog child for the PREVIOUS_COMMITTED case: every in-transaction
+# line is deferred except msgnum:...03, which reports that everything
+# before it was committed; the final COMMIT fails
+_PROG_PREV_COMMITTED = """\
+import sys
+print("OK"); sys.stdout.flush()
+for line in sys.stdin:
+    msg = line.rstrip("\\n")
+    if msg == "BEGIN TRANSACTION":
+        status = "OK"
+    elif msg == "COMMIT TRANSACTION":
+        status = "Error: could not commit"
+    elif msg.endswith("03"):
+        status = "PREVIOUS_COMMITTED"
+    else:
+        status = "DEFER_COMMIT"
+    print(status); sys.stdout.flush()
+"""
+
+
+class TestOmProgPreviousCommitted:
+    def test_previous_committed_resolves_earlier_rows(self, spark, tmp_path):
+        """PREVIOUS_COMMITTED (plugins/external/INTERFACE.md): the
+        records before the current one are committed, so a later
+        failed COMMIT marks only the current and later rows."""
+        script = tmp_path / "prev.py"
+        script.write_text(_PROG_PREV_COMMITTED)
+        df = spark.createDataFrame(
+            [(f"msgnum:{i:08d}",) for i in range(6)], "line string"
+        )
+        out = external_mod.om_prog(
+            df, "line", f"python3 {script}",
+            confirm_messages=True, use_transactions=True,
+            force_single_instance=True,
+        ).collect()
+        st = {r["line"]: r["prog_status"] for r in out}
+        for i in range(3):
+            assert st[f"msgnum:{i:08d}"] == "ok"
+        for i in range(3, 6):
+            assert st[f"msgnum:{i:08d}"].startswith("error:commit:")
+
+
+def _split_top(s: str) -> list[str]:
+    """Split at the commas outside any parentheses or brackets."""
+    parts, depth, cur = [], 0, ""
+    for c in s:
+        depth += (c in "([") - (c in ")]")
+        if c == "," and depth == 0:
+            parts.append(cur.strip())
+            cur = ""
+        else:
+            cur += c
+    return parts + [cur.strip()]
+
+
+def _udf_args(plan: str) -> list[str]:
+    """Every argument of every Python UDF call in the executed plan's
+    ``ArrowEvalPython [f(a, b)#1, g(c)#2], ...`` nodes."""
+    args = []
+    for line in plan.splitlines():
+        at = line.find("ArrowEvalPython [")
+        if at < 0:
+            continue
+        body, depth = line[at + len("ArrowEvalPython ["):], 1
+        for end, c in enumerate(body):
+            depth += (c in "([") - (c in ")]")
+            if depth == 0:
+                break
+        for call in _split_top(body[:end]):
+            args += _split_top(call[call.index("(") + 1:call.rindex(")")])
+    return args
+
+
+class TestGatedUDFs:
+    """A routed mm* action's Python UDFs see only the rows on its
+    path: off-path rows cross the Arrow boundary as nulls and keep
+    every column; on-path rows get exactly the ungated function's
+    output."""
+
+    AUDIT = "type=1100 audit(1700000000.123:42): pid=7 addr=10.1.2.3 res=1"
+
+    def _raws(self):
+        on = f"<38>1 2024-01-01T00:00:00Z h1 audispd 9 - - {self.AUDIT}"
+        off = [
+            # same audit body under another app: the ungated walk would
+            # parse it, the gated one must not
+            f"<38>1 2024-01-01T00:00:{i % 60:02d}Z h{i} auditd {i} - - "
+            f"{self.AUDIT.replace(':42', f':{i}')}"
+            for i in range(60)
+        ] + [
+            f"<46>Mar  3 16:09:{i % 60:02d} h{i} sshd[{i}]: "
+            f"Accepted key from 10.9.{i}.1"
+            for i in range(39)
+        ]
+        return [on] + off
+
+    def _conf(self, mmdb):
+        return f"""
+ruleset(name="r") {{
+    if $programname == "audispd" then {{
+        action(type="mmaudit")
+        action(type="mmrfc5424addhmac" key="k" hashfunction="sha256"
+               sd_id="hmac@1")
+        action(type="mmdblookup" mmdbfile="{mmdb}"
+               key="$!audit!data!addr" fields=["city"])
+    }}
+}}
+"""
+
+    def _mmdb(self, tmp_path):
+        from rsyslog_spark.mmdb import write_mmdb
+
+        p = tmp_path / "gate.mmdb"
+        write_mmdb(str(p), {"10.0.0.0/8": {"city": "Ten"}})
+        return str(p)
+
+    def test_plan_gates_every_python_udf(self, spark, tmp_path):
+        base = _parsed_df(spark, self._raws())
+        ann, _ = compile_config(base, self._conf(self._mmdb(tmp_path)),
+                                entry="r")
+        ann.collect()
+        plan = ann._jdf.queryExecution().executedPlan().toString()
+        args = _udf_args(plan)
+        # mmaudit: 1 argument, hmac: 2, dblookup: 2 — each one is null
+        # unless the row is on the if's path (hmac: and RFC5424)
+        assert len(args) == 5, plan
+        gate = re.compile(
+            r"CASE WHEN (_cond_\d+#\d+|\(_cond_\d+#\d+ AND "
+            r"\(protocol_version#\d+ = 1\)\)) THEN "
+        )
+        assert all(gate.match(a) for a in args), args
+
+    def test_rows_off_path_unchanged_on_path_ungated(
+        self, spark, tmp_path
+    ):
+        from rsyslog_spark.mods import mm_dblookup
+
+        mmdb = self._mmdb(tmp_path)
+        base = _parsed_df(spark, self._raws()).withColumn(
+            "vars", F.create_map().cast("map<string,string>")
+        )
+        cols = base.columns  # the parser's columns, parse_success, vars
+        ann, _ = compile_config(base, self._conf(mmdb), entry="r")
+        got = {r["rawmsg"]: r for r in ann.select(*cols).collect()}
+        on = F.col("programname") == "audispd"
+        before = {
+            r["rawmsg"]: r for r in base.filter(~on).collect()
+        }
+        assert len(before) == 99 and len(got) == 100
+        for k, row in before.items():
+            assert got[k].asDict() == row.asDict(), k
+        ungated = mm_dblookup(
+            mm_rfc5424addhmac(
+                mm_audit(base.filter(on)), key="k",
+                hashfunction="sha256", sd_id="hmac@1",
+            ),
+            key="$!audit!data!addr", mmdbfile=mmdb, fields=["city"],
+        ).select(*cols).collect()
+        assert len(ungated) == 1
+        exp = ungated[0]
+        assert exp["vars"]["iplocation!city"] == "Ten"
+        assert exp["parse_success"] is True
+        assert got[exp["rawmsg"]].asDict() == exp.asDict()
+
+    @pytest.mark.parametrize(
+        "action",
+        ["taghostname", "audit", "addhmac", "grok", "dblookup",
+         "snmptrapd"],
+    )
+    def test_false_gate_keeps_every_column(self, spark, tmp_path, action):
+        from rsyslog_spark.mods import mm_dblookup, mm_grok, mm_snmptrapd
+
+        mmdb = self._mmdb(tmp_path)
+        raws = self._raws()[:3] + [
+            "<165>Mar  3 16:09:56 c snmptrapd/warning/h.example: trap"
+        ]
+        base = _parsed_df(spark, raws).withColumn(
+            "vars", F.create_map(F.lit("audit!data!addr"), F.lit("10.1.2.3"))
+        ).withColumn("parse_success", F.lit(False))
+        fn = {
+            "taghostname": lambda df, a: mm_taghostname(
+                df, tag="new[1]:", force_localhostname=True, active=a),
+            "audit": lambda df, a: mm_audit(df, active=a),
+            "addhmac": lambda df, a: mm_rfc5424addhmac(
+                df, key="k", sd_id="hmac@1", active=a),
+            "grok": lambda df, a: mm_grok(
+                df, "%{WORD:w}", target="!g", active=a),
+            "dblookup": lambda df, a: mm_dblookup(
+                df, key="$!audit!data!addr", mmdbfile=mmdb,
+                fields=["city"], active=a),
+            "snmptrapd": lambda df, a: mm_snmptrapd(
+                df, severity_mapping="warning/4", active=a),
+        }[action]
+        want = base.collect()
+        off = fn(base, F.lit(False))
+        assert off.columns == base.columns
+        assert off.collect() == want
+        # a true gate gives the ungated output
+        assert fn(base, F.lit(True)).collect() == fn(base, None).collect()
+        assert fn(base, None).collect() != want
