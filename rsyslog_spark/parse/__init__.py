@@ -2,6 +2,6 @@
 message-modification transforms, and the parser-chain driver."""
 
 from rsyslog_spark.parse.pri import with_pri
-from rsyslog_spark.parse.chain import parse_chain, with_parsed
+from rsyslog_spark.parse.chain import with_parsed
 
-__all__ = ["with_pri", "parse_chain", "with_parsed"]
+__all__ = ["with_pri", "with_parsed"]

@@ -1,21 +1,23 @@
-"""Arrow-native parser chain: the zero-object-churn fast path.
+"""The parser chain over Arrow arrays: the one runtime of ParseMsg.
 
-Same semantics as parse_chain_pd (runtime/parser.c chain over
-tools/pmrfc5424.c + tools/pmrfc3164.c — see pm3164.py/pm5424.py for the
-per-rule citations); different execution strategy: every string stays a
-pyarrow Array end-to-end (RE2 extracts, C++ if_else merges), so no
-PyObject is allocated per row. Only the timestamp component math drops
-to numpy (integer arrays, vectorized).
+Semantics per parser are cited in pm3164.py/pm5424.py (tools/pmrfc3164.c,
+tools/pmrfc5424.c, plugins/pmlastmsg/pmlastmsg.c); the execution keeps
+every string a pyarrow Array end-to-end (RE2 extracts, C++ if_else
+merges), so no PyObject is allocated per row. Only the timestamp
+component math drops to numpy (integer arrays, vectorized).
 
-Control flow is subset-scatter: each parser runs its regexes only on the
-rows it owns — pmlastmsg's match, then the 5424 version guard, then
-3164 on the rest (parser.c:654-672) — and the parts are concatenated
-and ``take``n back into input order. Running every parser's cascade on
-every row and merging by masks wasted most of the RE2 work: a 3164
-header cascade is five extracts, which the 5424 rows never need.
+Control flow is ParseMsg's walk (runtime/parser.c:617-694): each parser
+of the list, in order, gets the rows no earlier parser owns and returns
+its accept mask plus its columns for the rows it took; the rows left at
+the end take the discard shape in one place (parser.c:679-687). Each
+parser runs its regexes only on rows still unowned, and the parts are
+concatenated and ``take``n back into input order.
 
-Validated against the pandas reference chain row-for-row
-(tests/test_arrow_chain.py) and by the DuckDB oracle gate.
+The default chain's pmrfc3164 is the options-off instance parser
+(pmrfc3164.c:104-110): ``pm3164.parse_3164_opts(..., Pm3164Options())``
+is its semantic reference, checked row-for-row by the differential fuzz
+(tests/test_chain_fuzz.py against tests/parse_reference.py) and by the
+DuckDB oracle gate.
 """
 
 from __future__ import annotations
@@ -27,11 +29,14 @@ import pyarrow.compute as pc
 from rsyslog_spark.parse.pm3164 import (
     _RE_HOST,
     _RE_TAG,
-    _RE_TS3164_HEAD,
-    _RE_TS3164_HP,
     _RE_TS3339_HEAD,
+    _ts3164_re_ext,
 )
-from rsyslog_spark.parse.pm5424 import _RE_5424
+from rsyslog_spark.parse.pm5424 import _RE_5424, _RE_TS3339
+
+# the default chain's pmrfc3164 timestamp: every instance option off
+_RE_TS3164 = _ts3164_re_ext(False, False)
+_RE_TS3164_HP = _ts3164_re_ext(True, False)
 
 _EMPTY = pa.scalar("", pa.string())
 
@@ -54,6 +59,10 @@ def _nz(arr: pa.Array) -> pa.Array:
     )
 
 
+def _np(arr: pa.Array) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False)
+
+
 def _fill(arr: pa.Array, value="") -> pa.Array:
     return pc.fill_null(arr, value)
 
@@ -66,15 +75,6 @@ def _ints(arr: pa.Array, default: int = 0) -> np.ndarray:
     a = pc.fill_null(arr, str(default))
     a = pc.if_else(pc.equal(a, _EMPTY), pa.scalar(str(default)), a)
     return pc.cast(a, pa.int64()).to_numpy(zero_copy_only=False)
-
-
-_MONTH_NUM = {
-    m: i + 1
-    for i, m in enumerate(
-        ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-         "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
-    )
-}
 
 
 def _epoch_us(y, mo, d, hh, mi, ss) -> np.ndarray:
@@ -102,11 +102,10 @@ def _calendar_ok(y, mo, d, hh, mi, ss, ss_max=59) -> np.ndarray:
     """Field-range + calendar validation. The reference checks ranges
     only (month 1-12, day 1-31, hour 0-23, min 0-59, sec 0-60 —
     datetime.c:329-358) and lets mktime normalize; we additionally
-    reject non-calendar dates (Feb 31) so both chain engines agree
-    deterministically. Leap second 60 is accepted on the 3164 path
-    (ss_max=60, rolls into the next minute like mktime — the pandas
-    reference path does the same) and rejected on the 3339 path (ISO
-    parsing rejects it)."""
+    reject non-calendar dates (Feb 31), as pandas' datetime assembly in
+    the instance parser does. Leap second 60 is accepted on the 3164
+    path (ss_max=60, rolls into the next minute like mktime) and
+    rejected on the 3339 path (ISO parsing rejects it)."""
     mo_c = np.clip(mo, 1, 12).astype(np.int64)
     dim = _DIM[mo_c - 1]
     leap = ((y % 4 == 0) & (y % 100 != 0)) | (y % 400 == 0)
@@ -168,9 +167,18 @@ _MONTHS_ARR = pa.array(
 )
 
 
-def _ts3164_us(g: dict, recv_us: np.ndarray, ok: np.ndarray) -> np.ndarray:
-    """RFC3164 groups + year estimation (datetime.c:465,
-    rainerscript.c:2620-2633 Dec/Jan rollover) -> epoch µs."""
+def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """RFC3164 groups -> (match kept, epoch µs), as parse_3164_opts.
+
+    A stated year is range-checked and voids the match when out of
+    range: prepended 1970..2100 (datetime.c:497-507), in the hour
+    position 1971..2099 and never next to a prepended one (:678-690).
+    Otherwise the year comes from reception time (datetime.c:465,
+    rainerscript.c:2620-2633 Dec/Jan rollover). A kept match whose
+    fields fail the calendar falls back to reception time."""
+    has_py = _np(_nz(g["pyear"]))
+    has_my = _np(_nz(g["myear"]))
+    kept = _np(g["_ok"]) & ~(has_py & has_my)
     mo_idx = pc.index_in(_fill(g["mon"], "Jan"), value_set=_MONTHS_ARR)
     mo = pc.fill_null(mo_idx, 0).cast(pa.int64()).to_numpy(
         zero_copy_only=False
@@ -183,16 +191,21 @@ def _ts3164_us(g: dict, recv_us: np.ndarray, ok: np.ndarray) -> np.ndarray:
     y = ry.copy()
     y[(mo == 12) & (rm == 1)] -= 1
     y[(mo == 1) & (rm == 12)] += 1
-    ok = ok & _calendar_ok(y, mo, d, hh, mi, ss, ss_max=60)
-    out = _epoch_us(y, mo, d, hh, mi, ss)
-    return np.where(ok, out, recv_us)
+    # the year groups are parsed only in a batch where a row states one
+    if has_py.any():
+        # a digit run too long for int64 is out of range anyway
+        py = pc.utf8_ltrim(_fill(g["pyear"]), "0")
+        py = _ints(pc.if_else(pc.greater(pc.utf8_length(py), 4), "9999", py))
+        kept &= ~has_py | ((py >= 1970) & (py <= 2100))
+        y = np.where(has_py, py, y)
+    if has_my.any():
+        my = _ints(g["myear"])
+        kept &= ~has_my | ((my > 1970) & (my < 2100))
+        y = np.where(has_my, my, y)
+    ok = kept & _calendar_ok(y, mo, d, hh, mi, ss, ss_max=60)
+    return kept, np.where(ok, _epoch_us(y, mo, d, hh, mi, ss), recv_us)
 
 
-_RE_TS5424 = (
-    r"^(?P<y>\d{4})-(?P<mo>\d{2})-(?P<d>\d{2})"
-    r"[Tt](?P<hh>\d{2}):(?P<mi>\d{2}):(?P<sec>\d{2})"
-    r"(?P<frac>\.\d+)?(?P<zone>[Zz]|[+-]\d{2}:\d{2})$"
-)
 _RE_LASTMSG = r"(?i)^ *last message repeated \d+ times$"
 
 # PARSED_STRUCT column -> arrow type (timereported travels as epoch µs)
@@ -212,24 +225,44 @@ _OUT_TYPES = {
 }
 
 
-def _lastmsg(s: pa.Array, fromhost: pa.Array, recv_us: np.ndarray) -> dict:
-    """pmlastmsg accept (pmlastmsg.c:90-130): legacy protocol, TS =
-    received time, MSG = the whole after-PRI text, TAG ''."""
+def _rows(cols: dict, keep: np.ndarray) -> dict:
+    """``cols`` cut to the rows ``keep`` marks: arrays are filtered,
+    constants stay."""
+    if keep.all():
+        return cols
+    mask = pa.array(keep)
     return {
-        "protocol_version": 0,
-        "hostname": fromhost,
-        "syslogtag": "",
-        "msg": s,
-        "parse_success": True,
-        "parser": "lastmsg",
-        "timereported": recv_us,
+        k: v.filter(mask) if isinstance(v, pa.Array)
+        else v[keep] if isinstance(v, np.ndarray) else v
+        for k, v in cols.items()
     }
 
 
-def _rfc5424(s: pa.Array, recv_us: np.ndarray) -> dict:
-    """pmrfc5424 over rows that passed the '1 ' version guard, which is
-    the accept decision (pmrfc5424.c:224-226): a row whose header does
-    not match keeps '-' fields and MSG = the text after the guard."""
+def _lastmsg(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
+    """pmlastmsg (pmlastmsg.c:90-130): accepts exactly 'last message
+    repeated N times' after optional spaces, case-insensitive; legacy
+    protocol, TS = received time, MSG = the whole after-PRI text, TAG
+    ''."""
+    own = _np(pc.match_substring_regex(r["s"], _RE_LASTMSG))
+    o = _rows(r, own)
+    return own, {
+        "protocol_version": 0,
+        "hostname": o["fromhost"],
+        "syslogtag": "",
+        "msg": o["s"],
+        "parse_success": True,
+        "parser": "lastmsg",
+        "timereported": o["recv_us"],
+    }
+
+
+def _rfc5424(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
+    """pmrfc5424: the '1 ' version guard is the accept decision
+    (pmrfc5424.c:224-226); an owned row whose header does not match
+    keeps '-' fields and MSG = the text after the guard."""
+    own = _np(pc.starts_with(r["s"], "1 "))
+    o = _rows(r, own)
+    s, recv_us = o["s"], o["recv_us"]
     g5 = _extract(s, _RE_5424)
     ok = g5["_ok"]
     dash = pa.scalar("-", pa.string())
@@ -245,8 +278,8 @@ def _rfc5424(s: pa.Array, recv_us: np.ndarray) -> dict:
         app,
         pc.binary_join_element_wise(app, "[", procid, "]", ""),
     )
-    gt = _extract(ts_txt, _RE_TS5424)
-    return {
+    gt = _extract(ts_txt, _RE_TS3339)
+    return own, {
         "protocol_version": 1,
         "timestamp_text": ts_txt,
         "hostname": field("host"),
@@ -260,26 +293,16 @@ def _rfc5424(s: pa.Array, recv_us: np.ndarray) -> dict:
         ),
         "parse_success": True,
         "parser": "rfc5424",
-        "timereported": _ts3339_us(
-            gt, recv_us, gt["_ok"].to_numpy(zero_copy_only=False)
-        ),
+        "timereported": _ts3339_us(gt, recv_us, _np(gt["_ok"])),
     }
 
 
-def _rfc3164(
-    s: pa.Array,
-    facility: pa.Array,
-    fromhost: pa.Array,
-    has_pri: pa.Array,
-    recv_us: np.ndarray,
-    require_header: bool,
-) -> dict:
-    """pmrfc3164 over the rows no earlier parser took. With
-    ``require_header`` a row with no PRI and no timestamp is declined;
-    such rows exhaust the chain and take the discard shape
-    (parser.c:679-687): success false, MSG = the whole text, TAG null."""
-    n = len(s)
-    fac_invld = pc.equal(facility, 24)
+def _rfc3164(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
+    """pmrfc3164 with every option off. It accepts every row, except
+    that with ``require_header`` it declines a row with no PRI, no
+    timestamp and no headerless shape."""
+    s, fromhost, recv_us = r["s"], r["fromhost"], r["recv_us"]
+    fac_invld = pc.equal(r["facility"], 24)
     headerless = pc.and_(
         pc.invert(fac_invld),
         pc.match_substring_regex(s, r"^[ \t]*[\{\[]"),
@@ -287,14 +310,18 @@ def _rfc3164(
     noheader = pc.or_(fac_invld, headerless)
     header = pc.invert(noheader)
 
+    # timestamp cascade: 3339, then 3164, then the HP-Procurve retry
+    # with a leading space, each on the rows the steps before missed
     g39 = _extract(s, _RE_TS3339_HEAD)
     ok39 = g39["_ok"]
     rest1 = pc.if_else(ok39, _fill(g39["rest"]), s)
-    g64 = _extract(rest1, _RE_TS3164_HEAD)
-    ok64 = pc.and_(g64["_ok"], pc.invert(ok39))
+    g64 = _extract(rest1, _RE_TS3164)
+    kept64, us64 = _ts3164(g64, recv_us)
+    ok64 = pc.and_(pa.array(kept64), pc.invert(ok39))
     rest2 = pc.if_else(ok64, _fill(g64["rest"]), rest1)
     ghp = _extract(rest2, _RE_TS3164_HP)
-    okhp = pc.and_(ghp["_ok"], pc.invert(pc.or_(ok39, ok64)))
+    kepthp, ushp = _ts3164(ghp, recv_us)
+    okhp = pc.and_(pa.array(kepthp), pc.invert(pc.or_(ok39, ok64)))
     rest3 = pc.if_else(okhp, _fill(ghp["rest"]), rest2)
 
     gh = _extract(rest3, _RE_HOST)
@@ -317,7 +344,7 @@ def _rfc3164(
     tag = pc.if_else(noheader, _EMPTY, tag)
     host = pc.if_else(noheader, fromhost, host)
 
-    # timestamp text + value
+    # timestamp text (a stated year is not part of it) + value
     ts64_txt = pc.binary_join_element_wise(
         _fill(g64["mon"]), " ", _fill(g64["day"]), " ",
         _fill(g64["h"]), ":", _fill(g64["mi"]), ":", _fill(g64["s"]), "",
@@ -326,47 +353,48 @@ def _rfc3164(
         _fill(ghp["mon"]), " ", _fill(ghp["day"]), " ",
         _fill(ghp["h"]), ":", _fill(ghp["mi"]), ":", _fill(ghp["s"]), "",
     )
-    null_str = pa.nulls(n, pa.string())
     use39 = pc.and_(ok39, header)
     use64 = pc.and_(ok64, header)
     usehp = pc.and_(okhp, header)
     ts_txt = pc.if_else(
         use39, _fill(g39["all"]),
-        pc.if_else(use64, ts64_txt, pc.if_else(usehp, tshp_txt, null_str)),
+        pc.if_else(use64, ts64_txt, pc.if_else(
+            usehp, tshp_txt, pa.nulls(len(s), pa.string()))),
     )
-    np39 = use39.to_numpy(zero_copy_only=False)
-    np64 = use64.to_numpy(zero_copy_only=False)
-    nphp = usehp.to_numpy(zero_copy_only=False)
+    np39 = _np(use39)
     us39 = _ts3339_us(g39, recv_us, np39)
-    us64 = _ts3164_us(g64, recv_us, np64)
-    ushp = _ts3164_us(ghp, recv_us, nphp)
-    ts_us = np.where(np39, us39, np.where(np64, us64,
-                     np.where(nphp, ushp, recv_us)))
+    ts_us = np.where(np39, us39, np.where(_np(use64), us64,
+                     np.where(_np(usehp), ushp, recv_us)))
 
-    if not require_header:
-        acc = pa.array(np.ones(n, dtype=bool))
-    else:
-        acc = pc.or_(
-            pc.or_(noheader, has_pri), pc.or_(ok39, pc.or_(ok64, okhp))
-        )
-    return {
+    acc = np.ones(len(s), dtype=bool)
+    if require_header:
+        acc = _np(pc.or_(
+            pc.or_(noheader, r["has_pri"]), pc.or_(ok39, pc.or_(ok64, okhp))
+        ))
+    # no APP-NAME/PROCID/MSGID/SD fields: null at chain level; the
+    # legacy TAG-based PROCID emulation (msg.c:1495-1542) runs natively
+    # after the chain
+    return acc, _rows({
         "protocol_version": 0,
-        "timestamp_text": pc.if_else(acc, ts_txt, null_str),
-        "hostname": pc.if_else(acc, host, fromhost),
-        "syslogtag": pc.if_else(acc, tag, null_str),
-        # no APP-NAME/PROCID/MSGID/SD fields: null at chain level; the
-        # legacy TAG-based PROCID emulation (msg.c:1495-1542) runs
-        # natively after the chain
-        "msg": pc.if_else(acc, msg, s),
-        "parse_success": acc,
-        "parser": pc.if_else(
-            acc, pa.scalar("rfc3164", pa.string()),
-            pa.scalar("none", pa.string()),
-        ),
-        "timereported": np.where(
-            acc.to_numpy(zero_copy_only=False), ts_us, recv_us
-        ),
-    }
+        "timestamp_text": ts_txt,
+        "hostname": host,
+        "syslogtag": tag,
+        "msg": msg,
+        "parse_success": True,
+        "parser": "rfc3164",
+        "timereported": ts_us,
+    }, acc)
+
+
+_STEPS = {"lastmsg": _lastmsg, "rfc5424": _rfc5424, "rfc3164": _rfc3164}
+
+
+def check_parsers(parsers) -> tuple[str, ...]:
+    """``parsers`` as a tuple; ValueError on an unknown parser name."""
+    bad = [p for p in parsers if p not in _STEPS]
+    if bad:
+        raise ValueError(f"unknown parser(s) {bad}; known: {list(_STEPS)}")
+    return tuple(parsers)
 
 
 def _column(value, n: int, typ: pa.DataType) -> pa.Array:
@@ -386,57 +414,51 @@ def parse_chain_arrow(
     recv_ts: pa.Array,
     fromhost: pa.Array,
     has_pri: pa.Array,
+    parsers: tuple[str, ...] = ("rfc5424", "rfc3164"),
     require_header: bool = False,
-    with_lastmsg: bool = False,
 ) -> dict[str, pa.Array]:
-    """Full chain over arrow arrays; returns the PARSED_STRUCT columns
-    in input row order.
+    """The parser chain over arrow arrays; returns the PARSED_STRUCT
+    columns in input row order.
 
-    ``with_lastmsg`` puts pmlastmsg on top of the parser stack
-    (plugins/pmlastmsg/pmlastmsg.c:90-130 — 'should be placed on top'):
-    rows matching 'last message repeated N times' take MSG = the whole
-    after-PRI text, TAG '', TS = received time, legacy protocol."""
-    s = _fill(after_pri.cast(pa.string()))
-    fromhost = _fill(fromhost.cast(pa.string()))
-    has_pri = pc.fill_null(has_pri.cast(pa.bool_()), False)
-    facility = facility.cast(pa.int64())
-    n = len(s)
-    recv_us = recv_ts.cast(pa.timestamp("us")).cast(pa.int64()).to_numpy(
-        zero_copy_only=False
-    )
-
+    ``parsers`` is any order of any subset of lastmsg / rfc5424 /
+    rfc3164; pmlastmsg belongs on top of the stack (pmlastmsg.c: 'should
+    be placed on top'). ``require_header`` lets pmrfc3164 decline rows,
+    an extension of this engine (see pm3164.py)."""
+    parsers = check_parsers(parsers)
+    n = len(after_pri)
+    rows = {
+        "s": _fill(after_pri.cast(pa.string())),
+        "facility": facility.cast(pa.int64()),
+        "fromhost": _fill(fromhost.cast(pa.string())),
+        "has_pri": pc.fill_null(has_pri.cast(pa.bool_()), False),
+        "recv_us": _np(recv_ts.cast(pa.timestamp("us")).cast(pa.int64())),
+        "at": np.arange(n),
+    }
     # first parser that accepts a row owns it (parser.c:654-672); each
     # part is (row indices, that parser's columns for those rows)
     parts = []
-    rest = np.arange(n)
-    if with_lastmsg:
-        own = pc.match_substring_regex(s, _RE_LASTMSG).to_numpy(
-            zero_copy_only=False
-        )
-        idx = rest[own]
-        if len(idx):
-            parts.append(
-                (idx, _lastmsg(s.take(idx), fromhost.take(idx), recv_us[idx]))
-            )
-        rest = rest[~own]
-    own = pc.starts_with(s.take(rest), "1 ").to_numpy(zero_copy_only=False)
-    idx = rest[own]
-    if len(idx):
-        parts.append((idx, _rfc5424(s.take(idx), recv_us[idx])))
-    idx = rest[~own]
-    if len(idx):
-        parts.append((idx, _rfc3164(
-            s.take(idx), facility.take(idx), fromhost.take(idx),
-            has_pri.take(idx), recv_us[idx], require_header,
-        )))
+    for p in parsers:
+        if not len(rows["at"]):
+            break
+        own, cols = _STEPS[p](rows, require_header)
+        parts.append((rows["at"][own], cols))
+        rows = _rows(rows, ~own)
+    # chain exhausted -> discard shape (parser.c:679-687): success
+    # false, MSG = the whole text, the received host, TAG null
+    parts.append((rows["at"], {
+        "protocol_version": 0,
+        "hostname": rows["fromhost"],
+        "msg": rows["s"],
+        "parse_success": False,
+        "parser": "none",
+        "timereported": rows["recv_us"],
+    }))
 
-    order = np.concatenate([idx for idx, _ in parts] or [rest])
     back = np.empty(n, dtype=np.int64)
-    back[order] = np.arange(n)
+    back[np.concatenate([idx for idx, _ in parts])] = np.arange(n)
     return {
         f: pa.concat_arrays(
             [_column(cols.get(f), len(idx), typ) for idx, cols in parts]
-            or [pa.array([], typ)]
         ).take(back)
         for f, typ in _OUT_TYPES.items()
     }

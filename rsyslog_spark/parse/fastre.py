@@ -3,8 +3,8 @@
 pandas ``.str.extract`` compiles the pattern once but then runs a Python
 function per row (object_array.py _str_extract) — ~4µs/row. Arrow's
 ``extract_regex`` is RE2 in C++ over the whole array (~0.2µs/row). The
-parsers call through these helpers so the hot path stays in native code;
-if pyarrow lacks a function (or a pattern falls outside RE2's regular
+pandas parsers (the pmrfc3164 instance parser, ``parse_ts3339``) call
+through these helpers so their regexes run in native code; if pyarrow lacks a function (or a pattern falls outside RE2's regular
 subset) we fall back to pandas transparently.
 
 RE2 notes: no lookaround/backrefs — the parser patterns avoid both.
@@ -68,9 +68,3 @@ def matches(s: pd.Series, pattern: str) -> pd.Series:
             return res.to_pandas().set_axis(s.index).fillna(False)
     return s.str.match(pattern).fillna(False)
 
-
-def startswith(s: pd.Series, prefix: str) -> pd.Series:
-    if _HAVE_ARROW and len(s):
-        res = pc.starts_with(_to_arrow(s), prefix)
-        return res.to_pandas().set_axis(s.index).fillna(False)
-    return s.str.startswith(prefix).fillna(False)

@@ -28,8 +28,10 @@ RFC3164 timestamps carry no year: the year comes from reception time with
 Dec/Jan boundary correction (runtime/datetime.c:465 ff.; same rule as
 estimateYear, grammar/rainerscript.c:2620-2633).
 
-Options (pmrfc3164.c:63-70) default off. The DEFAULT chain runs with
-every option off; ``parser(type="pmrfc3164" ...)`` instances (r5) take
+Options (pmrfc3164.c:63-70) default off. The default chain is the
+instance parser with every option off (``Pm3164Options()``,
+pmrfc3164.c:104-110), run by ``arrow_chain.parse_chain_arrow``;
+``parser(type="pmrfc3164" ...)`` instances run ``parse_3164_opts`` with
 the full option set via ``Pm3164Options``:
 
 - permit.squareBracketsInHostname / permit.slashesInHostname /
@@ -46,23 +48,20 @@ the full option set via ``Pm3164Options``:
 - detect.YearAfterTimestamp — ``Mmm dd hh:mm:ss YYYY`` with
   2000<=YYYY<2100 followed by SP-or-end (datetime.c:744-759).
 
-The instance path also models ParseTIMESTAMP3164's UNGATED year forms
-(datetime.c:497-507 prepended ``YYYY Mmm dd ...`` for 1970..2100,
-:678-690 year-in-hour-position ``Mmm dd YYYY hh:mm:ss`` for 1971..2099)
-and the tolerated extra ':' right after the timestamp (:761-768). The
-DEFAULT chain's regexes predate these forms and are pinned by the
-chain/arrow differential fuzz — the year forms are a documented default
--chain gap, covered by the instance path.
+Both model ParseTIMESTAMP3164's UNGATED year forms (datetime.c:497-507
+prepended ``YYYY Mmm dd ...`` for 1970..2100, :678-690
+year-in-hour-position ``Mmm dd YYYY hh:mm:ss`` for 1971..2099) and the
+tolerated extra ':' right after the timestamp (:761-768).
 
-``require_header`` is an EXTENSION of this engine (not in the
+``require_header`` is an EXTENSION of the default chain (not in the
 reference): when set, a message with neither a PRI ``<`` prefix nor a
 parsable timestamp nor a headerless-JSON shape is REJECTED
 (COULD_NOT_PARSE), so the chain's discard path (runtime/parser.c:
 679-687) is exercisable; the stock reference pmrfc3164 never returns
 COULD_NOT_PARSE.
 
-Everything is pandas-vectorized (str.match / str.extract / str.replace);
-no per-row Python.
+``parse_3164_opts`` is pandas-vectorized (str.match / str.extract /
+str.replace); no per-row Python.
 """
 
 from __future__ import annotations
@@ -81,17 +80,6 @@ _MONTH_NUM = {
          "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
     )
 }
-
-# 'Mmm dd hh:mm:ss' with single-digit day padded as 'Mmm  d'
-_TS3164_BODY = (
-    rf"(?P<mon>{_MONTHS}) (?P<day> ?\d|\d\d) "
-    r"(?P<h>\d{2}):(?P<mi>\d{2}):(?P<s>\d{2})"
-)
-# each cascade step is ONE extract capturing both the timestamp and the
-# remainder ("consume ts + one SP delimiter", datetime.c behavior) —
-# a second strip pass over the same strings would double the regex cost.
-_RE_TS3164_HEAD = rf"^{_TS3164_BODY}(?:$| (?P<rest>[\s\S]*)$)"
-_RE_TS3164_HP = rf"^ {_TS3164_BODY}(?:$| (?P<rest>[\s\S]*)$)"
 
 _RE_TS3339_BODY = _RE_TS3339[1:-1]  # strip ^ $ anchors
 _RE_TS3339_HEAD = rf"^(?P<all>{_RE_TS3339_BODY})(?:$| (?P<rest>[\s\S]*)$)"
@@ -175,39 +163,37 @@ def _host_re_ext(opts: Pm3164Options) -> str:
     return "^(?:" + "|".join(alts) + ")"
 
 
-def _estimate_year(mon: pd.Series, recv_ts: pd.Series) -> pd.Series:
-    """Year from reception time with Dec/Jan rollover
-    (datetime.c:465 ff.; rainerscript.c:2620-2633)."""
+def _ts3164_values(g: pd.DataFrame, recv_ts: pd.Series) -> tuple[pd.Series, pd.Series]:
+    """(timestamp_text, timereported) for matched 3164 groups. The year
+    is ``g['year']`` where stated (datetime.c:783-784), else estimated
+    from reception time with Dec/Jan rollover (datetime.c:465 ff.;
+    rainerscript.c:2620-2633)."""
+    mon = g["mon"].map(_MONTH_NUM).astype(int)
     ry = recv_ts.dt.year.fillna(2024).astype(int)
     rm = recv_ts.dt.month.fillna(1).astype(int)
-    y = ry.copy()
-    y[(mon == 12) & (rm == 1)] = ry - 1
-    y[(mon == 1) & (rm == 12)] = ry + 1
-    return y
-
-
-def _ts3164_values(g: pd.DataFrame, recv_ts: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """(timestamp_text, timereported) for matched 3164 groups."""
-    mon = g["mon"].map(_MONTH_NUM).astype(int)
-    year = _estimate_year(mon, recv_ts)
-    sec = g["s"].astype(int)
+    est = ry.copy()
+    est[(mon == 12) & (rm == 1)] = ry - 1
+    est[(mon == 1) & (rm == 12)] = ry + 1
+    year = g["year"].fillna(est).astype(int)
+    hour, minute, sec = (g[c].astype(int) for c in ("h", "mi", "s"))
     t = pd.to_datetime(
         pd.DataFrame(
             {
                 "year": year.values,
                 "month": mon.values,
                 "day": g["day"].str.strip().astype(int).values,
-                "hour": g["h"].astype(int).values,
-                "minute": g["mi"].astype(int).values,
+                "hour": hour.values,
+                "minute": minute.values,
                 "second": sec.values,
             }
         ),
         errors="coerce",
     )
     t.index = g.index
-    # pandas normalizes ANY out-of-range second; the reference accepts
-    # only 0-60 (leap second, datetime.c:707) — reject 61+ like it does
-    t = t.where(sec <= 60)
+    # pandas rolls ANY out-of-range field over (24:00 -> next day); the
+    # reference accepts hour 0-23, minute 0-59 and second 0-60 (leap
+    # second, datetime.c:707) — reject the rest like it does
+    t = t.where((hour <= 23) & (minute <= 59) & (sec <= 60))
     txt = g["mon"] + " " + g["day"] + " " + g["h"] + ":" + g["mi"] + ":" + g["s"]
     return txt, t.where(t.notna(), recv_ts).astype("datetime64[us]")
 
@@ -223,7 +209,8 @@ def parse_3164_opts(
     """parser(type="pmrfc3164" ...) instance parse: the full pmrfc3164
     walk with the option set + ParseTIMESTAMP3164's ungated year forms
     (see module docstring). Always accepts (the stock module never
-    returns COULD_NOT_PARSE). Same output shape as parse_3164."""
+    returns COULD_NOT_PARSE). Returns the PARSED_STRUCT fields +
+    ``accepted`` + ``timereported``."""
     s = after_pri.fillna("")
     n = len(s)
     idx = s.index
@@ -239,7 +226,6 @@ def parse_3164_opts(
     timereported = pd.Series(recv_ts.values, index=idx).astype(
         "datetime64[us]"
     )
-    year_override = pd.Series([np.nan] * n, index=idx, dtype="float")
 
     fac_invld = facility == 24
     headerless = ~fac_invld & fastre.matches(s, r"^[ \t]*[\{\[]")
@@ -305,37 +291,7 @@ def parse_3164_opts(
         if not ok.any():
             return
         ix = g.index[ok]
-        gg = g.loc[ix]
-        txt, t = _ts3164_values(gg, recv_ts[ix])
-        yo = gg["year"]
-        if yo.notna().any():
-            # rebuild with the explicit year (datetime.c:783-784)
-            mon = gg["mon"].map(_MONTH_NUM).astype(int)
-            year = yo.where(
-                yo.notna(), _estimate_year(mon, recv_ts[ix])
-            ).astype(int)
-            sec = gg["s"].astype(int)
-            t2 = pd.to_datetime(
-                pd.DataFrame(
-                    {
-                        "year": year.values,
-                        "month": mon.values,
-                        "day": gg["day"].str.strip().astype(int).values,
-                        "hour": gg["h"].astype(int).values,
-                        "minute": gg["mi"].astype(int).values,
-                        "second": sec.values,
-                    }
-                ),
-                errors="coerce",
-            )
-            t2.index = ix
-            t2 = t2.where(sec <= 60)
-            t = t2.where(t2.notna(), recv_ts[ix]).astype(
-                "datetime64[us]"
-            )
-        ts_text[ix] = txt
-        timereported[ix] = t
-        year_override[ix] = gg["year"]
+        ts_text[ix], timereported[ix] = _ts3164_values(g.loc[ix], recv_ts[ix])
         rest.loc[ix] = g.loc[ix, "rest"].fillna("")
 
     re_head = _ts3164_re_ext(False, opts.detect_year_after_timestamp)
@@ -421,108 +377,3 @@ def parse_3164_opts(
         index=idx,
     )
 
-
-def parse_3164(
-    after_pri: pd.Series,
-    facility: pd.Series,
-    recv_ts: pd.Series,
-    fromhost: pd.Series | None = None,
-    has_pri: pd.Series | None = None,
-    require_header: bool = False,
-) -> pd.DataFrame:
-    """Vectorized legacy-syslog parse. Returns PARSED_STRUCT fields +
-    ``accepted`` + ``timereported``."""
-    s = after_pri.fillna("")
-    n = len(s)
-    idx = s.index
-    if fromhost is None:
-        fromhost = pd.Series([""] * n, index=idx, dtype="object")
-    if has_pri is None:
-        has_pri = pd.Series(True, index=idx)
-
-    hostname = fromhost.astype("object").copy()
-    tag = pd.Series([""] * n, index=idx, dtype="object")
-    msg = pd.Series([""] * n, index=idx, dtype="object")
-    ts_text = pd.Series([None] * n, index=idx, dtype="object")
-    timereported = pd.Series(recv_ts.values, index=idx).astype("datetime64[us]")
-
-    # 1 + 2: rows with no header to parse
-    fac_invld = facility == 24
-    headerless = ~fac_invld & fastre.matches(s, r"^[ \t]*[\{\[]")
-    noheader = fac_invld | headerless
-    msg[noheader] = s[noheader]
-
-    rest = s[~noheader].copy()
-
-    # 3. timestamp cascade: 3339 -> 3164 -> HP retry (one extract each,
-    # run only on the rows still unmatched)
-    g39 = fastre.extract(rest, _RE_TS3339_HEAD)
-    m39 = g39["all"].notna()
-    if m39.any():
-        i39 = g39.index[m39]
-        ts_text[i39] = g39.loc[i39, "all"]
-        t = parse_ts3339(g39.loc[i39, "all"])
-        timereported[i39] = t.where(t.notna(), recv_ts[i39]).astype("datetime64[us]")
-        rest.loc[i39] = g39.loc[i39, "rest"].fillna("")
-
-    un = rest.index[~m39]
-    g64 = fastre.extract(rest.loc[un], _RE_TS3164_HEAD)
-    m64 = g64["mon"].notna()
-    if m64.any():
-        i64 = g64.index[m64]
-        txt, t = _ts3164_values(g64.loc[i64], recv_ts[i64])
-        ts_text[i64] = txt
-        timereported[i64] = t
-        rest.loc[i64] = g64.loc[i64, "rest"].fillna("")
-
-    unhp = g64.index[~m64]
-    if len(unhp):
-        ghp = fastre.extract(rest.loc[unhp], _RE_TS3164_HP)
-        mhp = ghp["mon"].notna()
-        if mhp.any():
-            ihp = ghp.index[mhp]
-            txt, t = _ts3164_values(ghp.loc[ihp], recv_ts[ihp])
-            ts_text[ihp] = txt
-            timereported[ihp] = t
-            rest.loc[ihp] = ghp.loc[ihp, "rest"].fillna("")
-
-    # 4. hostname heuristic (one extract). Branch detection must be by
-    # NON-EMPTINESS: both host groups are 1+ chars when their branch
-    # matched, and RE2 reports non-participating groups as "" (fastre).
-    gh = fastre.extract(rest, _RE_HOST)
-    full = gh["hfull"].notna() & (gh["hfull"] != "")
-    sp = gh["hsp"].notna() & (gh["hsp"] != "")
-    if full.any():
-        hostname[gh.index[full]] = gh.loc[full, "hfull"]
-        rest.loc[gh.index[full]] = ""
-    if sp.any():
-        hostname[gh.index[sp]] = gh.loc[sp, "hsp"]
-        rest.loc[gh.index[sp]] = gh.loc[sp, "hrest"]
-
-    # 5. TAG: ':' is part of TAG and consumed; SP stays in MSG
-    # (one extract; when TAG ends at SP the SP lands in mrest -> MSG)
-    gt = fastre.extract(rest, _RE_TAG)
-    tag[rest.index] = (gt["tag"].fillna("") + gt["colon"].fillna("")).values
-    msg[rest.index] = gt["mrest"].fillna("").values
-
-    if require_header:
-        accepted = noheader | has_pri | ts_text.notna()
-    else:
-        accepted = pd.Series(True, index=idx)
-
-    return pd.DataFrame(
-        {
-            "accepted": accepted,
-            "protocol_version": np.zeros(n, dtype="int32"),
-            "timestamp_text": ts_text,
-            "hostname": hostname,
-            "syslogtag": tag,
-            "app_name": pd.Series([None] * n, index=idx, dtype="object"),
-            "procid": pd.Series([None] * n, index=idx, dtype="object"),
-            "msgid": pd.Series([None] * n, index=idx, dtype="object"),
-            "structured_data": pd.Series([None] * n, index=idx, dtype="object"),
-            "msg": msg,
-            "timereported": timereported,
-        },
-        index=idx,
-    )

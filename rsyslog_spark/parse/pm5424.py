@@ -17,8 +17,9 @@ Semantics:
 - TAG is emulated as ``APP-NAME[PROCID]``, or bare APP-NAME when PROCID
   is ``-`` (tryEmulateTAG, runtime/msg.c:2482-2514).
 
-All implemented as pandas vectorized ops (str.extract / masks) — no
-per-row Python on the happy path.
+The default chain runs these rules in ``arrow_chain._rfc5424`` with the
+patterns below; ``parse_ts3339`` is the pandas form of the timestamp
+rule, used by the pmrfc3164 instance parser.
 """
 
 from __future__ import annotations
@@ -73,66 +74,3 @@ def parse_ts3339(ts: pd.Series) -> pd.Series:
         out[ok] = (parsed - offs).astype("datetime64[us]")
     return out
 
-
-def parse_5424(after_pri: pd.Series, recv_ts: pd.Series) -> pd.DataFrame:
-    """Vectorized RFC5424 parse.
-
-    Returns a DataFrame with the PARSED_STRUCT fields plus ``accepted``
-    (bool: this parser claimed the row) and ``timereported``.
-    """
-    n = len(after_pri)
-    s = after_pri.fillna("")
-    accepted = fastre.startswith(s, "1 ")
-
-    out = pd.DataFrame(
-        {
-            "accepted": accepted,
-            "protocol_version": np.where(accepted, 1, 0),
-            "timestamp_text": pd.Series([None] * n, dtype="object"),
-            "hostname": pd.Series([None] * n, dtype="object"),
-            "syslogtag": pd.Series([None] * n, dtype="object"),
-            "app_name": pd.Series([None] * n, dtype="object"),
-            "procid": pd.Series([None] * n, dtype="object"),
-            "msgid": pd.Series([None] * n, dtype="object"),
-            "structured_data": pd.Series([None] * n, dtype="object"),
-            "msg": pd.Series([None] * n, dtype="object"),
-            "timereported": pd.Series(pd.NaT, index=s.index, dtype="datetime64[us]"),
-        },
-        index=s.index,
-    )
-    if not accepted.any():
-        return out
-
-    g = fastre.extract(s[accepted], _RE_5424)
-    matched = g["ts"].notna()
-    # Rows passing the "1 " guard but failing the full header regex are
-    # still owned by this parser (the guard decided, pmrfc5424.c:224-226);
-    # their fields stay empty and MSG gets the remainder after "1 ".
-    idx_ok = g.index[matched]
-    out.loc[idx_ok, "timestamp_text"] = g.loc[idx_ok, "ts"]
-    out.loc[idx_ok, "hostname"] = g.loc[idx_ok, "host"]
-    out.loc[idx_ok, "app_name"] = g.loc[idx_ok, "app"]
-    out.loc[idx_ok, "procid"] = g.loc[idx_ok, "procid"]
-    out.loc[idx_ok, "msgid"] = g.loc[idx_ok, "msgid"]
-    out.loc[idx_ok, "structured_data"] = g.loc[idx_ok, "sd"]
-    out.loc[idx_ok, "msg"] = g.loc[idx_ok, "msg"].fillna("")
-
-    idx_bad = g.index[~matched]
-    if len(idx_bad):
-        out.loc[idx_bad, "msg"] = s[idx_bad].str[2:]
-        for c in ("hostname", "app_name", "procid", "msgid",
-                  "structured_data", "timestamp_text"):
-            out.loc[idx_bad, c] = "-"
-
-    # TAG emulation (msg.c:2482-2514)
-    app = out.loc[accepted, "app_name"].fillna("-")
-    procid = out.loc[accepted, "procid"].fillna("-")
-    tag = np.where(procid == "-", app, app + "[" + procid + "]")
-    out.loc[accepted, "syslogtag"] = tag
-
-    # timereported: parse RFC3339, '-' or unparsable -> reception time
-    ts_txt = out.loc[accepted, "timestamp_text"].fillna("-")
-    parsed = parse_ts3339(ts_txt)
-    rec = recv_ts[accepted]
-    out.loc[accepted, "timereported"] = parsed.where(parsed.notna(), rec)
-    return out

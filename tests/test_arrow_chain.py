@@ -1,6 +1,6 @@
-"""Row-for-row equivalence: arrow-native chain vs the pandas reference
-chain, over the full generated corpus (all four text classes) plus the
-hand-golden edge cases from test_parse."""
+"""Row-for-row equivalence: the arrow chain vs the pandas reference
+chain (tests/parse_reference.py), over the full generated corpus (all
+four text classes) plus the hand-golden edge cases from test_parse."""
 
 from __future__ import annotations
 
@@ -9,8 +9,8 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from parse_reference import parse_chain_pd
 from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
-from rsyslog_spark.parse.chain import parse_chain_pd
 from rsyslog_spark.schema import PARSED_STRUCT
 from rsyslog_spark.sources.transcripts import transcripts_sql_duckdb
 
@@ -42,9 +42,12 @@ EDGE_CASES = [
 ]
 
 
+def _chain(with_lastmsg):
+    return ("lastmsg",) * with_lastmsg + ("rfc5424", "rfc3164")
+
+
 def _compare(after, fac, recv, fromhost, has_pri, require_header,
-             with_lastmsg=False):
-    parsers = (("lastmsg",) if with_lastmsg else ()) + ("rfc5424", "rfc3164")
+             parsers=("rfc5424", "rfc3164")):
     ref = parse_chain_pd(
         after, fac, recv, fromhost, has_pri, parsers=parsers,
         require_header=require_header,
@@ -55,8 +58,8 @@ def _compare(after, fac, recv, fromhost, has_pri, require_header,
         pa.Array.from_pandas(recv, type=pa.timestamp("us")),
         pa.Array.from_pandas(fromhost, type=pa.string()),
         pa.Array.from_pandas(has_pri, type=pa.bool_()),
+        parsers=parsers,
         require_header=require_header,
-        with_lastmsg=with_lastmsg,
     )
     got = pd.DataFrame({k: v.to_pandas() for k, v in got_arrays.items()})
     for col in ref.columns:
@@ -161,7 +164,7 @@ class TestOwnedRows:
         got = _compare(
             pd.Series(texts), pd.Series([1] * n), pd.Series([RECV] * n),
             pd.Series(["rx"] * n), pd.Series([i % 2 == 0 for i in range(n)]),
-            require_header, with_lastmsg=with_lastmsg,
+            require_header, parsers=_chain(with_lastmsg),
         )
         # 3164 may decline a row (require_header): it then fails
         fallback = {"rfc3164", "none"}
@@ -179,7 +182,7 @@ class TestOwnedRows:
         got = _compare(
             pd.Series(MIXED), pd.Series([1] * n), pd.Series([RECV] * n),
             pd.Series([f"rx{i}" for i in range(n)]), pd.Series([False] * n),
-            require_header, with_lastmsg=with_lastmsg,
+            require_header, parsers=_chain(with_lastmsg),
         )
         repeated = "lastmsg" if with_lastmsg else (
             "none" if require_header else "rfc3164")
@@ -205,7 +208,7 @@ class TestOwnedRows:
             pa.array([], pa.string()), pa.array([], pa.int64()),
             pa.array([], pa.timestamp("us")), pa.array([], pa.string()),
             pa.array([], pa.bool_()), require_header=True,
-            with_lastmsg=with_lastmsg,
+            parsers=_chain(with_lastmsg),
         )
         assert list(out) == [f.name for f in PARSED_STRUCT.fields]
         for f in PARSED_STRUCT.fields:
@@ -234,11 +237,13 @@ class TestOwnedRows:
 
     @pytest.mark.parametrize(
         "parsers",
-        [("rfc5424", "rfc3164"), ("lastmsg", "rfc5424", "rfc3164")],
+        [("rfc5424", "rfc3164"), ("lastmsg", "rfc5424", "rfc3164"),
+         ("rfc3164", "rfc5424")],
     )
     def test_with_parsed_rows_aligned(self, spark, parsers):
         # pass-through columns (i, ts) must stay on the row whose text
-        # each parser part parsed
+        # each parser part parsed; with 3164 first it owns every row
+        # with a PRI, the 5424 ones too
         def text(i):
             return [f"<13>1 - h a p m - tok{i}",
                     f"<13>Jan  5 10:00:00 h a: tok{i}",
@@ -260,7 +265,10 @@ class TestOwnedRows:
             i, kind = r["i"], r["i"] % 4
             assert r["timegenerated"] == ts(i)
             assert r["rawmsg"] == text(i)
-            if kind == 0:
+            if kind == 0 and parsers[0] == "rfc3164":
+                assert (r["parser"], r["hostname"], r["msg"]) == (
+                    "rfc3164", "1", f" h a p m - tok{i}")
+            elif kind == 0:
                 assert (r["parser"], r["msg"]) == ("rfc5424", f"tok{i}")
             elif kind == 1:
                 assert (r["parser"], r["msg"]) == ("rfc3164", f" tok{i}")

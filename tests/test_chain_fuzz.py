@@ -1,23 +1,26 @@
-"""Property-based differential test: arrow chain vs pandas chain.
+"""Property-based differential test: arrow chain vs pandas reference.
 
-The pandas chain (`parse_chain_pd`) is the readable reference
-implementation; the arrow chain is the production fast path. They must
-agree FIELD-FOR-FIELD on arbitrary sanitized inputs, not just the
-corpus classes — hypothesis drives structured header fragments and
-junk through both (the differential analog of the reference's
+The pandas chain (`parse_reference.parse_chain_pd`, whose 3164 step is
+the options-off pmrfc3164 instance parser) is the readable reference;
+the arrow chain is the one runtime. They must agree FIELD-FOR-FIELD on
+arbitrary sanitized inputs and every parser order, not just the corpus
+classes — hypothesis drives structured header fragments, year forms
+and junk through both (the differential analog of the reference's
 testbench fuzzing its parsers with tcpflood variants)."""
 
 from __future__ import annotations
 
-import numpy as np
+from itertools import permutations
+
 import pandas as pd
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from parse_reference import parse_chain_pd
 from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
-from rsyslog_spark.parse.chain import _FIELDS, parse_chain_pd
+from rsyslog_spark.parse.chain import _FIELDS
 
 _PRINTABLE = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126),
@@ -33,7 +36,7 @@ _MON = st.sampled_from(
 def _msg3164(draw):
     mon = draw(_MON)
     day = draw(st.integers(1, 31))
-    h, m, s = (draw(st.integers(0, 23)), draw(st.integers(0, 59)),
+    h, m, s = (draw(st.integers(0, 24)), draw(st.integers(0, 60)),
                draw(st.integers(0, 61)))
     host = draw(st.sampled_from(["host1", "h", "a.b.c", ""]))
     tag = draw(st.sampled_from(["app", "app[12]", "x:", ""]))
@@ -53,9 +56,34 @@ def _msg5424(draw):
     return f"1 {ts} host app 12 ID7 {sd} {body}"
 
 
+# ParseTIMESTAMP3164's year forms (datetime.c:497-507 prepended,
+# :678-690 in the hour position, :761-768 the tolerated ':'), with the
+# range edges, both forms at once, an int64-overflowing prefix, a
+# leading zero and the HP retry's leading space
+_YEAR = st.sampled_from([
+    "1969", "1970", "1971", "2025", "2099", "2100", "2101", "0000",
+    "02024", "12345678901234567890123",
+])
+
+
+@st.composite
+def _msg3164_year(draw):
+    day = draw(st.sampled_from([" 5", "29", "31"]))
+    mon = draw(st.sampled_from(["Jan", "Feb"]))
+    pyear = draw(st.sampled_from(["", draw(_YEAR) + " "]))
+    myear = draw(st.sampled_from(["", " " + draw(_YEAR)[:4]]))
+    lead = draw(st.sampled_from(["", " "]))
+    colon = draw(st.sampled_from(["", ":"]))
+    hms = draw(st.sampled_from(["10:00:00", "24:00:00", "10:60:00",
+                                "23:59:60"]))
+    rest = draw(st.sampled_from([" host app: x", "", " app[1]: m"]))
+    return f"{lead}{pyear}{mon} {day}{myear} {hms}{colon}{rest}"
+
+
 _ANY = st.one_of(
     _PRINTABLE,
     _msg3164(),
+    _msg3164_year(),
     _msg5424(),
     st.sampled_from([
         "", "1 ", "1", "{\"k\":1}", "[stuff",
@@ -67,17 +95,29 @@ _ANY = st.one_of(
         "Jan 32 10:00:00 host app: x",
         "Jan  1 23:59:60 host app: x",   # leap second rolls
         "1 2024-01-05T10:00:00+99:00 h a 1 I - x",
+        "Jan  1 24:00:00 host app: x",
+        "Jan  1 10:60:00 host app: x",
+        "Jan  5 2026 10:00:00 host app: x",
+        "2025 Jan  5 10:00:00 host app: x",
+        "Jan  5 10:00:00: host app: x",
+        "12345678901234567890123 Jan  5 10:00:00 host app: x",
+        "2025 Jan  5 2026 10:00:00 host app: x",
+        " 2025 Jan  5 10:00:00 host app: x",
+        "Feb 29 2100 10:00:00 host app: x",
     ]),
 )
 
 
-def _run_both(texts, require_header, with_lastmsg=False):
+_STOCK = ("rfc5424", "rfc3164")
+_LASTMSG_CHAIN = ("lastmsg", *_STOCK)
+
+
+def _run_both(texts, require_header, parsers=_STOCK):
     n = len(texts)
     recv = pd.Series(pd.to_datetime(["2024-06-01 12:00:00"] * n))
     fac = pd.Series([3] * n)
     fromhost = pd.Series([""] * n)
     has_pri = pd.Series([True if i % 2 else False for i in range(n)])
-    parsers = (("lastmsg",) if with_lastmsg else ()) + ("rfc5424", "rfc3164")
     pd_out = parse_chain_pd(
         pd.Series(texts), fac, recv, fromhost, has_pri,
         parsers=parsers, require_header=require_header,
@@ -88,8 +128,8 @@ def _run_both(texts, require_header, with_lastmsg=False):
         pa.array(recv, pa.timestamp("us")),
         pa.array([""] * n, pa.string()),
         pa.array(list(has_pri), pa.bool_()),
+        parsers=parsers,
         require_header=require_header,
-        with_lastmsg=with_lastmsg,
     )
     return pd_out, ar_out
 
@@ -134,7 +174,7 @@ def test_chain_differential(require_header, texts):
 @given(texts=st.lists(_ANY, min_size=1, max_size=12))
 @settings(max_examples=30, deadline=None)
 def test_chain_differential_lastmsg(texts):
-    pd_out, ar_out = _run_both(texts, False, with_lastmsg=True)
+    pd_out, ar_out = _run_both(texts, False, _LASTMSG_CHAIN)
     _assert_equal(pd_out, ar_out, texts)
 
 
@@ -157,5 +197,27 @@ _BATCHES = st.one_of(
 @given(texts=_BATCHES)
 @settings(max_examples=40, deadline=None)
 def test_chain_differential_owned_rows(require_header, with_lastmsg, texts):
-    pd_out, ar_out = _run_both(texts, require_header, with_lastmsg)
+    pd_out, ar_out = _run_both(
+        texts, require_header, _LASTMSG_CHAIN if with_lastmsg else _STOCK)
+    _assert_equal(pd_out, ar_out, texts)
+
+
+_ORDERS = [o for k in (1, 2, 3)
+           for o in permutations(("lastmsg", "rfc5424", "rfc3164"), k)]
+
+
+@pytest.mark.parametrize("require_header", [False, True])
+@pytest.mark.parametrize("parsers", _ORDERS, ids="-".join)
+@given(texts=st.lists(st.one_of(_ANY, _LASTMSG), min_size=1, max_size=12))
+@settings(max_examples=15, deadline=None)
+def test_chain_differential_every_order(parsers, require_header, texts):
+    pd_out, ar_out = _run_both(texts, require_header, parsers)
+    _assert_equal(pd_out, ar_out, texts)
+
+
+@pytest.mark.parametrize("require_header", [False, True])
+@given(texts=st.lists(_msg3164_year(), min_size=1, max_size=12))
+@settings(max_examples=60, deadline=None)
+def test_chain_differential_year_forms(require_header, texts):
+    pd_out, ar_out = _run_both(texts, require_header)
     _assert_equal(pd_out, ar_out, texts)

@@ -2020,6 +2020,37 @@ ruleset(name="customparser" parser=["custom.rfc3164"]) {{
         assert rows[0]["line"].startswith("2019-")
         assert rows[1]["line"] == "2021-03-10T01:00:00+00:00|h"
 
+    def test_out_of_range_time_takes_reception_time(self, spark):
+        """The reference accepts hour 0-23 and minute 0-59
+        (datetime.c:329-358); hour 24 or minute 60 must not roll over
+        into the next day or hour, on the estimated-year path and the
+        explicit-year path alike."""
+        from datetime import datetime
+
+        from rsyslog_spark.parse.chain_custom import build_custom_chain
+
+        raws = [
+            "<13>Jan  1 24:00:00 h tag: a",
+            "<13>Jan  1 10:60:00 h tag: b",
+            "<13>2021 Jan  1 24:00:00 h tag: c",
+            "<13>Jan  1 2021 10:60:00 h tag: d",
+            "<13>Jan  1 23:59:00 h tag: e",
+            "<13>2021 Jan  1 23:59:00 h tag: f",
+        ]
+        df = spark.createDataFrame(
+            [(i, r, "2019-03-15 00:00:00") for i, r in enumerate(raws)],
+            "i int, text string, ts_s string",
+        ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+        out = build_custom_chain(
+            df, [{"name": "custom.rfc3164", "type": "pmrfc3164"}]
+        )
+        got = [r["timereported"] for r in out.orderBy("i").collect()]
+        recv = datetime(2019, 3, 15)
+        assert got == [
+            recv, recv, recv, recv,
+            datetime(2019, 1, 1, 23, 59), datetime(2021, 1, 1, 23, 59),
+        ]
+
 
 class TestOmRulesetAndOmStdout:
     """omruleset legacy faces (plugins/omruleset/omruleset.c — the

@@ -5,27 +5,36 @@ test style is golden end-to-end checks (tests/rscript_*.sh, seq_check)."""
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from rsyslog_spark.parse.chain import parse_chain_pd
+from rsyslog_spark.parse import with_parsed
+from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
 
 
 RECV = pd.Timestamp("2024-06-15 12:00:00")
 
 
-def run(text, fac=1, has_pri=True, require_header=False, recv=RECV):
-    r = parse_chain_pd(
-        pd.Series([text]),
-        pd.Series([fac]),
-        pd.Series([recv]),
-        pd.Series(["rxhost"]),
-        pd.Series([has_pri]),
+def chain(texts, fac, recv, fromhost, has_pri, require_header=False):
+    """parse_chain_arrow over Python lists -> {field: list}."""
+    out = parse_chain_arrow(
+        pa.array(texts, pa.string()),
+        pa.array(fac, pa.int64()),
+        pa.array(recv, pa.timestamp("us")),
+        pa.array(fromhost, pa.string()),
+        pa.array(has_pri, pa.bool_()),
         require_header=require_header,
     )
-    return r.iloc[0].to_dict()
+    return {k: v.to_pylist() for k, v in out.items()}
+
+
+def run(text, fac=1, has_pri=True, require_header=False, recv=RECV):
+    r = chain([text], [fac], [recv], ["rxhost"], [has_pri],
+              require_header=require_header)
+    return {k: v[0] for k, v in r.items()}
 
 
 class TestRFC3164:
@@ -234,16 +243,69 @@ class TestChain:
         assert r["parser"] == "rfc3164"
 
     def test_batch_mixed(self):
-        texts = pd.Series(
-            ["1 - h a p m - x", "Jan  5 10:00:00 h a: m", "junk", ""]
-        )
-        r = parse_chain_pd(
-            texts,
-            pd.Series([1, 1, 1, 1]),
-            pd.Series([RECV] * 4),
-            pd.Series([""] * 4),
-            pd.Series([True, True, False, False]),
+        r = chain(
+            ["1 - h a p m - x", "Jan  5 10:00:00 h a: m", "junk", ""],
+            [1] * 4, [RECV] * 4, [""] * 4, [True, True, False, False],
             require_header=True,
         )
-        assert list(r["parser"]) == ["rfc5424", "rfc3164", "none", "none"]
-        assert list(r["parse_success"]) == [True, True, False, False]
+        assert r["parser"] == ["rfc5424", "rfc3164", "none", "none"]
+        assert r["parse_success"] == [True, True, False, False]
+
+    def test_unknown_parser_fails_before_any_job(self, spark):
+        df = spark.createDataFrame(
+            [(1, "<13>1 - h a p m - x", RECV.to_pydatetime())],
+            "i int, text string, ts timestamp")
+        sc = spark.sparkContext
+        sc.setJobGroup("unknown-parser", "parser name check")
+        try:
+            with pytest.raises(ValueError, match="nope"):
+                with_parsed(df, parsers=("rfc5424", "nope"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("unknown-parser")) == []
+
+
+class TestYearForms:
+    """ParseTIMESTAMP3164's ungated year forms through with_parsed: the
+    default chain's pmrfc3164 is the options-off instance parser, so a
+    stated year is used (datetime.c:497-507 prepended, :678-690 in the
+    hour position, :761-768 the tolerated ':' after the time) and an
+    out-of-range one voids the timestamp."""
+
+    GOLDEN = [
+        ("<13>Jan  5 2026 10:00:00 host app: x",
+         "host", "app:", " x", "2026-01-05 10:00:00"),
+        ("<13>2025 Jan  5 10:00:00 host app: x",
+         "host", "app:", " x", "2025-01-05 10:00:00"),
+        ("<13>Jan  5 10:00:00: host app: x",
+         "host", "app:", " x", "2024-01-05 10:00:00"),
+        ("<13> 2025 Jan  5 10:00:00 host app: x",
+         "host", "app:", " x", "2025-01-05 10:00:00"),
+        # prepended 1969 is out of range: no timestamp, the year is
+        # the hostname and the month the TAG
+        ("<13>1969 Jan  5 10:00:00 host app: x",
+         "1969", "Jan", "  5 10:00:00 host app: x", "2024-06-15 12:00:00"),
+        # a prepended run too long for int64 is out of range too
+        ("<13>12345678901234567890123 Jan  5 10:00:00 host app: x",
+         "12345678901234567890123", "Jan", "  5 10:00:00 host app: x",
+         "2024-06-15 12:00:00"),
+        # both forms at once void the match (datetime.c:678-690)
+        ("<13>2025 Jan  5 2026 10:00:00 host app: x",
+         "2025", "Jan", "  5 2026 10:00:00 host app: x",
+         "2024-06-15 12:00:00"),
+        # the stated year makes Feb 29 a non-date: reception time
+        ("<13>Feb 29 2023 10:00:00 host app: x",
+         "host", "app:", " x", "2024-06-15 12:00:00"),
+    ]
+
+    def test_goldens_through_with_parsed(self, spark):
+        df = spark.createDataFrame(
+            [(i, g[0], RECV.to_pydatetime()) for i, g in enumerate(self.GOLDEN)],
+            "i int, text string, ts timestamp",
+        )
+        rows = {r["i"]: r for r in with_parsed(df, require_header=True).collect()}
+        for i, (_, host, tag, msg, ts) in enumerate(self.GOLDEN):
+            r = rows[i]
+            assert (r["parser"], r["hostname"], r["syslogtag"], r["msg"]) == (
+                "rfc3164", host, tag, msg), self.GOLDEN[i][0]
+            assert r["timereported"] == pd.Timestamp(ts), self.GOLDEN[i][0]

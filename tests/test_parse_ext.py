@@ -60,18 +60,14 @@ class TestPmLastMsg:
         df = spark.createDataFrame(rows, "i int, text string").withColumn(
             "ts", F.lit("2024-01-05 10:00:00").cast("timestamp")
         )
-        for engine in ("arrow", "pandas"):
-            p = with_parsed(
-                df, parsers=("lastmsg", "rfc5424", "rfc3164"),
-                engine=engine,
-            )
-            got = {r["i"]: (r["parser"], r["msg"], r["syslogtag"])
-                   for r in p.collect()}
-            assert got[1] == ("lastmsg", "last message repeated 5 times", "")
-            assert got[2][0] == "lastmsg"
-            assert got[2][1] == "  LAST Message Repeated 12 TIMES"
-            assert got[3][0] == "rfc3164"  # trailing text -> not ours
-            assert got[4][0] == "rfc3164"
+        p = with_parsed(df, parsers=("lastmsg", "rfc5424", "rfc3164"))
+        got = {r["i"]: (r["parser"], r["msg"], r["syslogtag"])
+               for r in p.collect()}
+        assert got[1] == ("lastmsg", "last message repeated 5 times", "")
+        assert got[2][0] == "lastmsg"
+        assert got[2][1] == "  LAST Message Repeated 12 TIMES"
+        assert got[3][0] == "rfc3164"  # trailing text -> not ours
+        assert got[4][0] == "rfc3164"
 
 
 class TestUtf8Fix:
