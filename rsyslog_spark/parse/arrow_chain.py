@@ -13,30 +13,31 @@ the end take the discard shape in one place (parser.c:679-687). Each
 parser runs its regexes only on rows still unowned, and the parts are
 concatenated and ``take``n back into input order.
 
-The default chain's pmrfc3164 is the options-off instance parser
-(pmrfc3164.c:104-110): ``pm3164.parse_3164_opts(..., Pm3164Options())``
-is its semantic reference, checked row-for-row by the differential fuzz
-(tests/test_chain_fuzz.py against tests/parse_reference.py) and by the
-DuckDB oracle gate.
+``_rfc3164`` is the one pmrfc3164 runtime: the default chain runs it
+with every option off (pmrfc3164.c:104-110), and ``parser(type=
+"pmrfc3164" ...)`` instances run it with their ``Pm3164Options``
+(``chain_custom``). The pandas instance parser in
+tests/parse_reference.py is its semantic reference, checked row-for-row
+by the differential fuzz (tests/test_chain_fuzz.py) and by the DuckDB
+oracle gate.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from rsyslog_spark.parse.pm3164 import (
-    _RE_HOST,
     _RE_TAG,
     _RE_TS3339_HEAD,
+    Pm3164Options,
+    _host_re_ext,
     _ts3164_re_ext,
 )
 from rsyslog_spark.parse.pm5424 import _RE_5424, _RE_TS3339
-
-# the default chain's pmrfc3164 timestamp: every instance option off
-_RE_TS3164 = _ts3164_re_ext(False, False)
-_RE_TS3164_HP = _ts3164_re_ext(True, False)
 
 _EMPTY = pa.scalar("", pa.string())
 
@@ -167,12 +168,14 @@ _MONTHS_ARR = pa.array(
 )
 
 
-def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """RFC3164 groups -> (match kept, epoch µs), as parse_3164_opts.
+def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, ...]:
+    """RFC3164 groups -> (match kept, epoch µs, after-time year unused).
 
     A stated year is range-checked and voids the match when out of
     range: prepended 1970..2100 (datetime.c:497-507), in the hour
     position 1971..2099 and never next to a prepended one (:678-690).
+    A year after the time (detect.YearAfterTimestamp, :744-759) is used
+    only when no other year is stated and it is in 2000..2099.
     Otherwise the year comes from reception time (datetime.c:465,
     rainerscript.c:2620-2633 Dec/Jan rollover). A kept match whose
     fields fail the calendar falls back to reception time."""
@@ -187,7 +190,8 @@ def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     hh = _ints(g["h"])
     mi = _ints(g["mi"])
     ss = _ints(g["s"])
-    ry, rm = _civil_ym(recv_us // 86_400_000_000)
+    # a null reception time (NaN) estimates from 1970
+    ry, rm = _civil_ym(np.nan_to_num(recv_us) // 86_400_000_000)
     y = ry.copy()
     y[(mo == 12) & (rm == 1)] -= 1
     y[(mo == 1) & (rm == 12)] += 1
@@ -202,8 +206,28 @@ def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         my = _ints(g["myear"])
         kept &= ~has_my | ((my > 1970) & (my < 2100))
         y = np.where(has_my, my, y)
+    unused = np.zeros(len(kept), dtype=bool)
+    if "ayear" in g and (has_ay := _np(_nz(g["ayear"]))).any():
+        ay = _ints(pc.utf8_trim_whitespace(_fill(g["ayear"])))
+        use = has_ay & ~has_py & ~has_my & (ay >= 2000) & (ay < 2100)
+        y = np.where(use, ay, y)
+        unused = has_ay & ~use
     ok = kept & _calendar_ok(y, mo, d, hh, mi, ss, ss_max=60)
-    return kept, np.where(ok, _epoch_us(y, mo, d, hh, mi, ss), recv_us)
+    return kept, np.where(ok, _epoch_us(y, mo, d, hh, mi, ss), recv_us), unused
+
+
+def _after_ts(g: dict, unused: np.ndarray) -> pa.Array:
+    """The text after a kept 3164 timestamp. An unused after-time year
+    goes back into it (the C's pointer stays put, datetime.c:752-753):
+    the year text, then the colon, then a space and the rest."""
+    rest = _fill(g["rest"])
+    if not unused.any():
+        return rest
+    back = pc.binary_join_element_wise(
+        pc.utf8_slice_codeunits(_fill(g["ayear"]), 1), _fill(g["xcolon"]),
+        " ", rest, "",
+    )
+    return pc.if_else(pa.array(unused), back, rest)
 
 
 _RE_LASTMSG = r"(?i)^ *last message repeated \d+ times$"
@@ -297,10 +321,13 @@ def _rfc5424(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
     }
 
 
-def _rfc3164(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
-    """pmrfc3164 with every option off. It accepts every row, except
-    that with ``require_header`` it declines a row with no PRI, no
-    timestamp and no headerless shape."""
+def _rfc3164(
+    r: dict, require_header: bool, opts: Pm3164Options = Pm3164Options()
+) -> tuple[np.ndarray, dict]:
+    """pmrfc3164 with the instance options ``opts`` (all off in the
+    default chain). It accepts every row, except that with
+    ``require_header`` it declines a row with no PRI, no timestamp and
+    no headerless shape."""
     s, fromhost, recv_us = r["s"], r["fromhost"], r["recv_us"]
     fac_invld = pc.equal(r["facility"], 24)
     headerless = pc.and_(
@@ -315,34 +342,59 @@ def _rfc3164(r: dict, require_header: bool) -> tuple[np.ndarray, dict]:
     g39 = _extract(s, _RE_TS3339_HEAD)
     ok39 = g39["_ok"]
     rest1 = pc.if_else(ok39, _fill(g39["rest"]), s)
-    g64 = _extract(rest1, _RE_TS3164)
-    kept64, us64 = _ts3164(g64, recv_us)
+    ayear = opts.detect_year_after_timestamp
+    g64 = _extract(rest1, _ts3164_re_ext(False, ayear))
+    kept64, us64, unused64 = _ts3164(g64, recv_us)
     ok64 = pc.and_(pa.array(kept64), pc.invert(ok39))
-    rest2 = pc.if_else(ok64, _fill(g64["rest"]), rest1)
-    ghp = _extract(rest2, _RE_TS3164_HP)
-    kepthp, ushp = _ts3164(ghp, recv_us)
+    rest2 = pc.if_else(ok64, _after_ts(g64, unused64), rest1)
+    ghp = _extract(rest2, _ts3164_re_ext(True, ayear))
+    kepthp, ushp, unusedhp = _ts3164(ghp, recv_us)
     okhp = pc.and_(pa.array(kepthp), pc.invert(pc.or_(ok39, ok64)))
-    rest3 = pc.if_else(okhp, _fill(ghp["rest"]), rest2)
+    rest3 = pc.if_else(okhp, _after_ts(ghp, unusedhp), rest2)
 
-    gh = _extract(rest3, _RE_HOST)
-    hfull = _nz(gh["hfull"])
-    hsp = _nz(gh["hsp"])
-    host = pc.if_else(
-        hfull, _fill(gh["hfull"]),
-        pc.if_else(hsp, _fill(gh["hsp"]), fromhost),
-    )
-    rest4 = pc.if_else(
-        hfull, _EMPTY, pc.if_else(hsp, _fill(gh["hrest"]), rest3)
-    )
+    # hostname: one alternation branch matches at most; none -> fromhost
+    gh = _extract(rest3, _host_re_ext(opts))
+    host, rest4 = fromhost, rest3
+    for full, sp, after in (("hfull", "hsp", "hrest"),
+                            ("bfull", "bsp", "brest")):
+        if full in gh:
+            f, p = _nz(gh[full]), _nz(gh[sp])
+            host = pc.if_else(
+                f, _fill(gh[full]), pc.if_else(p, _fill(gh[sp]), host)
+            )
+            rest4 = pc.if_else(
+                f, _EMPTY, pc.if_else(p, _fill(gh[after]), rest4)
+            )
 
     gt = _extract(rest4, _RE_TAG)
-    tag = pc.binary_join_element_wise(
-        _fill(gt["tag"]), _fill(gt["colon"]), ""
-    )
+    colon = _fill(gt["colon"])
+    tag = pc.binary_join_element_wise(_fill(gt["tag"]), colon, "")
+    msg = _fill(gt["mrest"])
+    if opts.force_tag_ending_by_colon:
+        # pmrfc3164.c:350-360: a TAG not ended by ':' becomes '-', and
+        # p2parse -= (i+1) returns the scan text to MSG with the char
+        # before it: the delimiter the previous stage consumed, or '>'
+        # of the PRI when nothing was consumed (with no PRI the C reads
+        # outside the buffer; modeled as ''). Only these rows leave Arrow.
+        forced = pc.and_(header, pc.equal(colon, _EMPTY))
+        fi = np.flatnonzero(_np(forced))
+        if len(fi):
+            texts, rests, pris = (
+                a.take(fi).to_pylist() for a in (s, rest4, r["has_pri"])
+            )
+            msg = pc.replace_with_mask(msg, forced, pa.array([
+                (t[k - 1] if (k := len(t) - len(x)) > 0
+                 else ">" if hp else "") + x
+                for t, x, hp in zip(texts, rests, pris)
+            ], pa.string()))
+            tag = pc.if_else(forced, pa.scalar("-"), tag)
     # headerless/invalid-PRI rows: whole text is MSG (pmrfc3164.c:190-205)
-    msg = pc.if_else(noheader, s, _fill(gt["mrest"]))
+    msg = pc.if_else(noheader, s, msg)
     tag = pc.if_else(noheader, _EMPTY, tag)
     host = pc.if_else(noheader, fromhost, host)
+    if opts.remove_msg_first_space:
+        # finalize_it (:375-380) runs on every path, headerless included
+        msg = pc.replace_substring_regex(msg, "^ ", "", max_replacements=1)
 
     # timestamp text (a stated year is not part of it) + value
     ts64_txt = pc.binary_join_element_wise(
@@ -399,12 +451,13 @@ def check_parsers(parsers) -> tuple[str, ...]:
 
 def _column(value, n: int, typ: pa.DataType) -> pa.Array:
     """A part's field as an arrow array: arrays pass through, numpy
-    epoch µs is wrapped, a constant (None for a field the part does not
-    set) is repeated ``n`` times."""
+    epoch µs is wrapped (NaN, a null reception time, as null), a
+    constant (None for a field the part does not set) is repeated ``n``
+    times."""
     if isinstance(value, pa.Array):
         return value
     if isinstance(value, np.ndarray):
-        return pa.array(value, typ)
+        return pa.array(value, pa.int64(), from_pandas=True).cast(typ)
     return pa.repeat(pa.scalar(value, typ), n)
 
 
@@ -416,6 +469,7 @@ def parse_chain_arrow(
     has_pri: pa.Array,
     parsers: tuple[str, ...] = ("rfc5424", "rfc3164"),
     require_header: bool = False,
+    opts: Pm3164Options = Pm3164Options(),
 ) -> dict[str, pa.Array]:
     """The parser chain over arrow arrays; returns the PARSED_STRUCT
     columns in input row order.
@@ -423,24 +477,27 @@ def parse_chain_arrow(
     ``parsers`` is any order of any subset of lastmsg / rfc5424 /
     rfc3164; pmlastmsg belongs on top of the stack (pmlastmsg.c: 'should
     be placed on top'). ``require_header`` lets pmrfc3164 decline rows,
-    an extension of this engine (see pm3164.py)."""
+    an extension of this engine (see pm3164.py). ``opts`` are the
+    pmrfc3164 instance options. A row a parser gives no hostname takes
+    ``fromhost``, null included."""
     parsers = check_parsers(parsers)
     n = len(after_pri)
     rows = {
         "s": _fill(after_pri.cast(pa.string())),
         "facility": facility.cast(pa.int64()),
-        "fromhost": _fill(fromhost.cast(pa.string())),
+        "fromhost": fromhost.cast(pa.string()),
         "has_pri": pc.fill_null(has_pri.cast(pa.bool_()), False),
         "recv_us": _np(recv_ts.cast(pa.timestamp("us")).cast(pa.int64())),
         "at": np.arange(n),
     }
     # first parser that accepts a row owns it (parser.c:654-672); each
     # part is (row indices, that parser's columns for those rows)
+    steps = {**_STEPS, "rfc3164": partial(_rfc3164, opts=opts)}
     parts = []
     for p in parsers:
         if not len(rows["at"]):
             break
-        own, cols = _STEPS[p](rows, require_header)
+        own, cols = steps[p](rows, require_header)
         parts.append((rows["at"][own], cols))
         rows = _rows(rows, ~own)
     # chain exhausted -> discard shape (parser.c:679-687): success

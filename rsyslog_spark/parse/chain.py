@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rsyslog_spark.parse.arrow_chain import check_parsers, parse_chain_arrow
-from rsyslog_spark.parse.pri import _pri_len_sql, decode_pri_arrow
+from rsyslog_spark.parse.pri import after_pri_expr, decode_pri_arrow
 from rsyslog_spark.parse.sanitize import sanitize_arrow
 from rsyslog_spark.schema import PARSED_STRUCT
 
@@ -123,10 +123,7 @@ def with_parsed(
     if keep_raw:
         # rawmsg-after-pri property (msg.h:70 offAfterPRI) re-derived
         # natively — cheap JVM substring instead of an Arrow string column
-        df = df.withColumn(
-            "rawmsg_after_pri",
-            F.expr(f"substring(rawmsg, 1 + {_pri_len_sql('rawmsg')})"),
-        )
+        df = df.withColumn("rawmsg_after_pri", after_pri_expr(F.col("rawmsg")))
     df = df.withColumn("timegenerated", F.col(recv_ts_col))
     df = df.withColumn(
         "programname", F.regexp_extract(F.col("syslogtag"), _PROGNAME_RE, 1)

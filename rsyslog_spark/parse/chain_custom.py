@@ -43,9 +43,14 @@ null fields) — the reference discards it with a parse-error message.
 
 from __future__ import annotations
 
+from dataclasses import fields
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
+from rsyslog_spark.parse.pm3164 import Pm3164Options
 from rsyslog_spark.parse.pmcisco import parse_ciscoios
 from rsyslog_spark.parse.pri import (
     facility_expr,
@@ -54,6 +59,22 @@ from rsyslog_spark.parse.pri import (
 )
 
 _ON = {"on", "1", "yes", "true"}
+
+
+def _pm3164_udf(opts: Pm3164Options):
+    """One scalar Arrow UDF running the pmrfc3164 step with ``opts``;
+    a struct of the fields the fold reads."""
+    def run(after, fac, recv, fromhost, has_pri):
+        o = parse_chain_arrow(after, fac, recv, fromhost, has_pri,
+                              parsers=("rfc3164",), opts=opts)
+        return pa.StructArray.from_arrays(
+            [o["hostname"], o["syslogtag"], o["msg"], o["timereported"]],
+            names=["hostname", "tag", "msg", "ts"],
+        )
+
+    return F.arrow_udf(
+        run, "struct<hostname:string,tag:string,msg:string,ts:timestamp>"
+    )
 
 
 def build_custom_chain(
@@ -197,77 +218,36 @@ def build_custom_chain(
             # parser(type="pmrfc3164" ...) instance with the full
             # option set (tools/pmrfc3164.c:63-70; e2e goldens
             # pmrfc3164-AtSignsInHostname(_off)/-tagEndingByColon/
-            # -msgFirstSpace/hostname-with-slash). ALWAYS accepts
-            # (parse2 never returns COULD_NOT_PARSE) — instances after
-            # it in the chain are dead, like the reference.
-            import pandas as pd
-
-            from rsyslog_spark.parse.pm3164 import (
-                Pm3164Options,
-                parse_3164_opts,
-            )
-
-            def _flag(key: str) -> bool:
-                return str(inst.get(key, "off")).lower() in _ON
-
-            opts = Pm3164Options(
-                detect_year_after_timestamp=_flag(
-                    "detect.yearaftertimestamp"
-                ),
-                permit_square_brackets_in_hostname=_flag(
-                    "permit.squarebracketsinhostname"
-                ),
-                permit_slashes_in_hostname=_flag(
-                    "permit.slashesinhostname"
-                ),
-                permit_at_signs_in_hostname=_flag(
-                    "permit.atsignsinhostname"
-                ),
-                force_tag_ending_by_colon=_flag(
-                    "force.tagendingbycolon"
-                ),
-                remove_msg_first_space=_flag("remove.msgfirstspace"),
-            )
-            pfx = f"_cc{idx}_"
-
-            def _mk(o):
-                def _p3164(after, fac, recv, haspri):
-                    r = parse_3164_opts(
-                        after, fac, recv, o, has_pri=haspri
-                    )
-                    return pd.DataFrame(
-                        {
-                            "hostname": r["hostname"],
-                            "tag": r["syslogtag"],
-                            "msg": r["msg"],
-                            "ts": r["timereported"],
-                            "tstext": r["timestamp_text"],
-                        }
-                    )
-
-                return F.pandas_udf(
-                    _p3164,
-                    "struct<hostname:string,tag:string,msg:string,"
-                    "ts:timestamp,tstext:string>",
-                )
-
-            out = out.withColumn(
-                pfx + "r",
-                _mk(opts)(
-                    F.col("rawmsg_after_pri"),
-                    facility_expr(F.col("pri")),
-                    F.col(recv_ts_col),
-                    F.col("_pri_prefix") != "",
-                ),
-            )
+            # -msgFirstSpace/hostname-with-slash), option keys being
+            # the field names with the first '_' as '.', e.g.
+            # force.tagendingbycolon. ALWAYS accepts (parse2 never
+            # returns COULD_NOT_PARSE) — instances after it in the
+            # chain are dead, like the reference.
+            opts = Pm3164Options(**{
+                f.name: str(inst.get(
+                    f.name.replace("_", ".", 1).replace("_", ""), "off"
+                )).lower() in _ON
+                for f in fields(Pm3164Options)
+            })
+            r = f"_cc{idx}_r"
+            out = out.withColumn(r, _pm3164_udf(opts)(
+                F.col("rawmsg_after_pri"),
+                facility_expr(F.col("pri")),
+                F.col(recv_ts_col),
+                # no parsed hostname -> the received host (getHOSTNAME
+                # falls back to rcvFrom); null without one, so the fold
+                # keeps an input hostname
+                F.col("fromhost") if "fromhost" in df.columns else null_s,
+                F.col("_pri_prefix") != "",
+            ))
             branches.append({
                 "ok": F.lit(True),
                 "parser": F.lit(name),
-                "tag": F.col(pfx + "r.tag"),
+                "tag": F.col(r + ".tag"),
                 "pri": F.col("pri"),
-                "msg": F.col(pfx + "r.msg"),
-                "ts": F.col(pfx + "r.ts"),
-                "hostname": F.col(pfx + "r.hostname"),
+                "msg": F.col(r + ".msg"),
+                "ts": F.col(r + ".ts"),
+                "hostname": F.col(r + ".hostname"),
             })
         elif ptype in ("rfc5424", "rsyslog.rfc5424"):
             raise ValueError(

@@ -109,18 +109,10 @@ def with_pri(df: DataFrame, raw_col: str = "text") -> DataFrame:
         df.withColumn("pri", pri)
         .withColumn("syslogfacility", facility_expr(F.col("pri")))
         .withColumn("syslogseverity", severity_expr(F.col("pri")))
-        .withColumn(
-            "rawmsg_after_pri",
-            F.expr(f"substring({raw_col}, 1 + {_pri_len_sql(raw_col)})"),
-        )
+        .withColumn("rawmsg_after_pri", after_pri_expr(raw))
     )
 
 
-def _pri_len_sql(raw_col: str) -> str:
-    """SQL-text form of pri_len_expr so substring() stays one expression."""
-    return (
-        f"CASE WHEN {raw_col} LIKE '<%' "
-        f"AND {raw_col} RLIKE '{_PRI_RE}' "
-        f"AND CAST(coalesce(nullif(regexp_extract({raw_col}, '{_PRI_RE}', 1), ''), '0') AS INT) <= {LOG_MAXPRI} "
-        f"THEN length(regexp_extract({raw_col}, '{_PRI_RE}', 1)) + 2 ELSE 0 END"
-    )
+def after_pri_expr(raw: Column) -> Column:
+    """The message without the consumed PRI header (offAfterPRI)."""
+    return raw.substr(pri_len_expr(raw) + 1, F.length(raw))

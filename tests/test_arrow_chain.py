@@ -235,6 +235,33 @@ class TestOwnedRows:
                  pd.Series([RECV] * n), pd.Series(["rx"] * n),
                  pd.Series([False] * n), require_header)
 
+    def test_null_reception_time(self):
+        """A null reception time stays null where a row falls back to it
+        (discard, lastmsg, a '-' timestamp); stated dates are kept, the
+        instance after-time year included."""
+        from rsyslog_spark.parse.pm3164 import Pm3164Options
+
+        cases = [  # (text, parser, timereported)
+            ("x", "none", None),
+            ("last message repeated 2 times", "lastmsg", None),
+            ("1 - h a - - - m", "rfc5424", None),
+            ("1 2024-01-05T10:00:00Z h a - - - m", "rfc5424",
+             "2024-01-05 10:00"),
+            ("2021-01-05T10:00:00Z h a: x", "rfc3164", "2021-01-05 10:00"),
+            ("2022 Jan  5 10:00:00 h a: x", "rfc3164", "2022-01-05 10:00"),
+            ("Mar 10 01:00:00 2023 h tag: c", "rfc3164", "2023-03-10 01:00"),
+        ]
+        n = len(cases)
+        out = parse_chain_arrow(
+            pa.array([c[0] for c in cases]), pa.array([1] * n, pa.int64()),
+            pa.nulls(n, pa.timestamp("us")), pa.array(["rx"] * n),
+            pa.array([False] * n), parsers=("lastmsg", "rfc5424", "rfc3164"),
+            require_header=True, opts=Pm3164Options(True),
+        )
+        assert out["parser"].to_pylist() == [c[1] for c in cases]
+        assert out["timereported"].to_pylist() == [
+            c[2] and pd.Timestamp(c[2]) for c in cases]
+
     @pytest.mark.parametrize(
         "parsers",
         [("rfc5424", "rfc3164"), ("lastmsg", "rfc5424", "rfc3164"),

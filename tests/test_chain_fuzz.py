@@ -18,9 +18,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from parse_reference import parse_chain_pd
+from parse_reference import parse_3164_opts, parse_chain_pd
 from rsyslog_spark.parse.arrow_chain import parse_chain_arrow
 from rsyslog_spark.parse.chain import _FIELDS
+from rsyslog_spark.parse.pm3164 import Pm3164Options
 
 _PRINTABLE = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126),
@@ -221,3 +222,68 @@ def test_chain_differential_every_order(parsers, require_header, texts):
 def test_chain_differential_year_forms(require_header, texts):
     pd_out, ar_out = _run_both(texts, require_header)
     _assert_equal(pd_out, ar_out, texts)
+
+
+# every one of the 64 pmrfc3164 option combinations (pmrfc3164.c:63-70)
+_OPTS = st.builds(Pm3164Options, *[st.booleans()] * 6)
+# hostname, TAG and after-time-year shapes the options act on
+_OPT_FRAGMENTS = st.sampled_from([
+    "Mar 10 01:00:00 [192.168.0.1] tag: x",
+    "Mar 10 01:00:00 [192.168.0.1]",
+    "Mar 10 01:00:00 [10.0.0.1 tag: x",
+    "Mar 10 01:00:00 [] tag: x",
+    "Mar 10 01:00:00 [a@b/c] tag: x",
+    "Mar 10 01:00:00 Hostn@me2 tag:  msgnum:2",
+    "Mar 10 01:00:00 h@ tag: x",
+    "Mar 10 01:00:00 @",
+    "Mar  6 16:57:54 hostname1/hostname2 test: msgnum:0",
+    "Mar 10 01:00:00 Hostname3 tag3 msgnum:3",
+    "Mar 10 01:00:00 Hostname4 tag4 :",
+    "Mar 10 01:00:00 host notag",
+    "Mar 10 01:00:00 h tag:  two spaces",
+    "Mar 10 01:00:00 2025 h tag: c",
+    "Mar 10 01:00:00 1999 h tag: d",
+    "Mar 10 01:00:00 2025x h tag: e",
+    "Mar 10 01:00:00 2025: h tag: f",
+    "Mar 10 01:00:00 1999: h tag: f",
+    "Mar 10 01:00:00 2025",
+    "Mar 10 01:00:00 1999",
+    "Mar 10 01:00:00 1999:",
+    "Mar 10 2022 01:00:00 2025 h tag: g",
+    "2021 Mar 10 01:00:00 2099 h tag",
+    " Mar 10 01:00:00 2100 h tag: x",
+    "tag5 msg", "notag", " lead", "  two", ":", " ", "{\"k\": 1}", " [x] y",
+])
+
+
+@given(
+    opts=_OPTS,
+    texts=st.builds(
+        lambda a, b: a + b,
+        st.lists(_ANY, max_size=6),
+        st.lists(_OPT_FRAGMENTS, min_size=1, max_size=6),
+    ),
+)
+@settings(max_examples=150, deadline=None)
+def test_options_differential(opts, texts):
+    """The Arrow step with instance options equals the pandas instance
+    parser, with a received host and half the rows carrying a PRI (one
+    in five has an invalid facility)."""
+    n = len(texts)
+    recv = pd.Series(pd.to_datetime(["2024-06-01 12:00:00"] * n))
+    fac = [24 if i % 5 == 4 else 3 for i in range(n)]
+    has_pri = [i % 2 == 1 for i in range(n)]
+    ref = parse_3164_opts(
+        pd.Series(texts), pd.Series(fac), recv, opts,
+        fromhost=pd.Series(["relay1"] * n), has_pri=pd.Series(has_pri),
+    ).assign(parse_success=True, parser="rfc3164")
+    got = parse_chain_arrow(
+        pa.array(texts, pa.string()),
+        pa.array(fac, pa.int64()),
+        pa.array(recv, pa.timestamp("us")),
+        pa.array(["relay1"] * n, pa.string()),
+        pa.array(has_pri, pa.bool_()),
+        parsers=("rfc3164",),
+        opts=opts,
+    )
+    _assert_equal(ref, got, texts)

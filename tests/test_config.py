@@ -6,6 +6,8 @@ the exact per-sink counts of the hand-built pipeline (config parity =
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2050,6 +2052,43 @@ ruleset(name="customparser" parser=["custom.rfc3164"]) {{
             recv, recv, recv, recv,
             datetime(2019, 1, 1, 23, 59), datetime(2021, 1, 1, 23, 59),
         ]
+
+    @pytest.mark.parametrize("col", ["fromhost", "hostname"])
+    def test_no_parsed_hostname_takes_received_host(self, spark, col):
+        """A row with no hostname takes the input's ``fromhost`` (rsyslog's
+        getHOSTNAME falls back to rcvFrom); with no ``fromhost`` column
+        the fold keeps an input ``hostname``."""
+        from rsyslog_spark.parse.chain_custom import build_custom_chain
+
+        raws = ["<13>app: y", "<13>Mar 10 01:00:00 h tag: x", '{"k":1}']
+        df = spark.createDataFrame(
+            [(i, r, "relay1") for i, r in enumerate(raws)],
+            f"i int, text string, {col} string",
+        ).withColumn("ts", F.current_timestamp())
+        out = build_custom_chain(
+            df, [{"name": "custom.rfc3164", "type": "pmrfc3164"}]
+        ).orderBy("i").collect()
+        assert [r["hostname"] for r in out] == ["relay1", "h", "relay1"]
+
+    def test_one_python_eval_node(self, spark):
+        """The pmrfc3164 instance is one Arrow UDF returning a struct: the
+        executed plan of a pmnull + pmrfc3164 chain holds exactly one
+        ArrowEvalPython node (the struct is not evaluated once per field
+        the fold reads) and no other Python eval node."""
+        from rsyslog_spark.parse.chain_custom import build_custom_chain
+
+        df = spark.createDataFrame(
+            [("<13>Mar 10 01:00:00 h tag: x", "2019-03-15 00:00:00")],
+            "text string, ts_s string",
+        ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+        out = build_custom_chain(df, [
+            {"name": "custom.rfc3164", "type": "pmrfc3164"},
+            {"name": "custom.pmnull", "type": "pmnull", "tag": "t"},
+        ])
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        nodes = re.findall(r"\b(\w*(?:EvalPython|MapIn|InPandas)\w*)", plan)
+        assert nodes == ["ArrowEvalPython"], plan
 
 
 class TestOmRulesetAndOmStdout:

@@ -13,6 +13,7 @@ from rsyslog_spark.parse.pri import (
     pri_expr,
     pri_len_expr,
     severity_expr,
+    with_pri,
 )
 
 CASES = [
@@ -47,6 +48,26 @@ def test_pri_truth_table(spark):
     got = {r["raw"]: (r["pri"], r["fac"], r["sev"], r["plen"]) for r in rows}
     for raw, pri, fac, sev, plen in CASES:
         assert got[raw] == (pri, fac, sev, plen), (raw, got[raw])
+    # with_pri's rawmsg_after_pri is the message without those chars
+    after = {
+        r["raw"]: r["rawmsg_after_pri"]
+        for r in with_pri(df, raw_col="raw").collect()
+    }
+    assert after == {raw: raw[plen:] for raw, *_, plen in CASES}
+
+
+def test_with_parsed_after_pri_matches_arrow_decode(spark):
+    """with_parsed(keep_raw=True) re-derives rawmsg_after_pri in the JVM;
+    it equals the parse worker's after-PRI text."""
+    from rsyslog_spark.parse import with_parsed
+
+    raws = [c[0] for c in CASES]
+    df = spark.createDataFrame(
+        [(i, r) for i, r in enumerate(raws)], "i int, text string"
+    ).withColumn("ts", F.current_timestamp())
+    rows = with_parsed(df, keep_raw=True).orderBy("i").collect()
+    _, after = decode_pri_arrow(pa.array(raws))
+    assert [r["rawmsg_after_pri"] for r in rows] == after.to_pylist()
 
 
 def test_pri_truth_table_arrow():
