@@ -515,8 +515,11 @@ def om_prog(
             child.stdin.write(line + "\n")
             child.stdin.flush()
 
-        rows_out = []
+        pending = []  # batches not yielded yet, in input order
         deferred: list[dict] = []
+
+        def frame(rows):
+            return pd.DataFrame(rows, columns=col_names + [status_col])
 
         def flush_bracket(ok: bool, err: str) -> None:
             for r in deferred:
@@ -577,9 +580,11 @@ def om_prog(
                     except (BrokenPipeError, OSError):
                         row[status_col] = "error:program terminated"
                         startup_err = "error:program terminated"
-                # frames are built AFTER the bracket closes — deferred
-                # rows get their final status at commit time
-                rows_out.append(rows)
+                # a batch leaves once none of its rows awaits a commit
+                pending.append(rows)
+                waiting = {id(r) for r in deferred}
+                while pending and not waiting & {id(r) for r in pending[0]}:
+                    yield frame(pending.pop(0))
             # close the bracket (endTransaction, :1029-1046)
             if in_tx and startup_err is None:
                 try:
@@ -593,10 +598,8 @@ def om_prog(
                     flush_bracket(False, "program terminated")
             elif deferred:
                 flush_bracket(False, "transaction not committed")
-            for rows in rows_out:
-                yield pd.DataFrame(
-                    rows, columns=col_names + [status_col]
-                )
+            for rows in pending:
+                yield frame(rows)
         finally:
             if child is not None:
                 try:

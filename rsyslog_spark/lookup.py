@@ -174,9 +174,11 @@ def enrich_join(
     ``nomatch`` fills per-column defaults like the reference's per-table
     nomatch value (lookup.h:95)."""
     out = fact.join(broadcast(dim), on=on, how=how)
-    for col, default in (nomatch or {}).items():
-        out = out.withColumn(col, F.coalesce(F.col(col), F.lit(default)))
-    return out
+    if not nomatch:
+        return out
+    return out.withColumns(
+        {c: F.coalesce(F.col(c), F.lit(v)) for c, v in nomatch.items()}
+    )
 
 
 def asof_enrich(

@@ -219,13 +219,13 @@ def _ts3164(g: dict, recv_us: np.ndarray) -> tuple[np.ndarray, ...]:
 def _after_ts(g: dict, unused: np.ndarray) -> pa.Array:
     """The text after a kept 3164 timestamp. An unused after-time year
     goes back into it (the C's pointer stays put, datetime.c:752-753):
-    the year text, then the colon, then a space and the rest."""
+    the year text, colon and space as the input had them, then the rest."""
     rest = _fill(g["rest"])
     if not unused.any():
         return rest
     back = pc.binary_join_element_wise(
         pc.utf8_slice_codeunits(_fill(g["ayear"]), 1), _fill(g["xcolon"]),
-        " ", rest, "",
+        _fill(g["sp"]), rest, "",
     )
     return pc.if_else(pa.array(unused), back, rest)
 

@@ -18,8 +18,11 @@ of 128 messages (runtime/queue.c:1534).
 
 from __future__ import annotations
 
+import functools
+
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,11 +73,12 @@ def with_parsed(
     the sanitized text out of the RETURN batch too — only the parsed
     fields come back. ``parsers`` is any order of any subset of lastmsg
     / rfc5424 / rfc3164, checked here before any job runs (ValueError
-    on an unknown name) and run by ``parse_chain_arrow``. Two rejected
-    alternatives, both measured slower at 1M rows: a struct-returning
-    pandas UDF (projection collapse duplicates the UDF per extracted
-    field — observed 2x ArrowEvalPython), and mapInPandas (object-ifies
-    every pass-through column both ways ~2.7x the parse CPU itself).
+    on an unknown name) and run by ``parse_chain_arrow``. Rejected: a
+    scalar ``F.arrow_udf`` returning a struct plans one ArrowEvalPython
+    on Spark 4.1 but ran no faster on perfbench ``flagship_counts``
+    (scaled p50 1.89 vs 1.77 s over 12 alternating pairs, PERF.md
+    "Driver plan-build floor"); mapInPandas object-ifies every
+    pass-through column both ways (~2.7x the parse CPU itself).
     """
     pre = df.withColumn("_fromhost", F.col(fromhost_col)) if fromhost_col else df
     made = {text_col, "rawmsg", *_PRI_COLS}
@@ -119,23 +123,29 @@ def with_parsed(
             arrays += [out_a[f] for f in _FIELDS]
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    df = pre.mapInArrow(_run, out_schema)
-    if keep_raw:
-        # rawmsg-after-pri property (msg.h:70 offAfterPRI) re-derived
-        # natively — cheap JVM substring instead of an Arrow string column
-        df = df.withColumn("rawmsg_after_pri", after_pri_expr(F.col("rawmsg")))
-    df = df.withColumn("timegenerated", F.col(recv_ts_col))
-    df = df.withColumn(
-        "programname", F.regexp_extract(F.col("syslogtag"), _PROGNAME_RE, 1)
+    # a copy: the cache hands every caller the same dict
+    return pre.mapInArrow(_run, out_schema).withColumns(
+        dict(_tail(recv_ts_col, keep_raw, SparkContext._gateway))
     )
-    # legacy procid emulation only applies to protocol 0 rows with no
-    # explicit procid (msg.c:1505-1507 "only if legacy format")
-    df = df.withColumn(
-        "procid",
-        F.when(
+
+
+@functools.cache
+def _tail(recv_ts_col: str, keep_raw: bool, _gateway) -> dict:
+    """The native columns after the crossing (none reads another), built
+    once per py4j gateway: every Column op is a JVM round trip."""
+    tail = {
+        "timegenerated": F.col(recv_ts_col),
+        "programname": F.regexp_extract(F.col("syslogtag"), _PROGNAME_RE, 1),
+        # legacy procid emulation only applies to protocol 0 rows with
+        # no explicit procid (msg.c:1505-1507 "only if legacy format")
+        "procid": F.when(
             (F.col("protocol_version") == 0)
             & (F.coalesce(F.col("procid"), F.lit("")) == ""),
             F.regexp_extract(F.col("syslogtag"), _PROCID_RE, 1),
         ).otherwise(F.col("procid")),
-    )
-    return df
+    }
+    if keep_raw:
+        # rawmsg-after-pri property (msg.h:70 offAfterPRI) re-derived
+        # natively — cheap JVM substring instead of an Arrow string column
+        tail = {"rawmsg_after_pri": after_pri_expr(F.col("rawmsg")), **tail}
+    return tail

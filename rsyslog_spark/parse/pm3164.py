@@ -101,7 +101,7 @@ def _ts3164_re_ext(hp: bool, detect_year_after: bool) -> str:
     ``myear`` = 4 digits in the hour position (:678-690, 1971..2099,
     void if pyear also present); ``ayear``/``xcolon`` = optional
     ``SP YYYY`` after the time + the tolerated ':' (:744-768) — the
-    regex's own tail (``:`` / SP / end) enforces the C's
+    regex's own tail (``:`` / ``sp`` / end) enforces the C's
     followed-by-space-or-end gate without lookahead (RE2 has none)."""
     ayear = r"(?P<ayear> \d{4})?" if detect_year_after else ""
     return (
@@ -112,7 +112,7 @@ def _ts3164_re_ext(hp: bool, detect_year_after: bool) -> str:
         + r" (?P<h>\d{2}):(?P<mi>\d{2}):(?P<s>\d{2})"
         + ayear
         + r"(?P<xcolon>:?)"
-        + r"(?:$| (?P<rest>[\s\S]*)$)"
+        + r"(?:$|(?P<sp> )(?P<rest>[\s\S]*)$)"
     )
 
 

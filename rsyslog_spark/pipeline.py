@@ -19,6 +19,8 @@ runtime/ruleset.c:577-636):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +48,13 @@ ROLE_DIM = [
 ]
 
 
+# constant dimensions: one JVM-local table per session, not per build
+@functools.cache
 def tool_dim_df(spark: SparkSession) -> DataFrame:
     return local_table(spark, TOOL_DIM, "tool string, tool_class string, risk int")
 
 
+@functools.cache
 def role_dim_df(spark: SparkSession) -> DataFrame:
     return local_table(spark, ROLE_DIM, "role string, sink_group string")
 

@@ -70,7 +70,8 @@ from pyspark.sql import functions as F
 from rsyslog_spark import mods
 from rsyslog_spark.external import mm_external
 from rsyslog_spark.filters import prifilt_predicate, propfilt_predicate
-from rsyslog_spark.templates import compile_template
+from rsyslog_spark.templates import compile_template, resolve_property
+from rsyslog_spark.templates import var_key as _var_key
 
 
 # --- statement model --------------------------------------------------------
@@ -313,15 +314,6 @@ class CompiledAction:
 
 
 
-def _var_key(name: str) -> str:
-    """'$!a!b' -> 'a!b'; '$.x' -> '.x' (distinct LOCAL namespace, r5 —
-    the reference keeps separate trees, runtime/msg.c:681-684);
-    '$/g' -> 'g'."""
-    from rsyslog_spark.templates import var_key
-
-    return var_key(name)
-
-
 def _check_foreach_body(
     stmts: list,
     loop_vars: str | set,
@@ -434,6 +426,23 @@ def _mutated_cols(stmts: list) -> set:
     return out
 
 
+# mm* statement -> (its mods function, compiler state it takes too)
+_MM_ACTIONS = {
+    TagHostname: (mods.mm_taghostname, ("localhostname",)),
+    SnmpTrapd: (mods.mm_snmptrapd, ()),
+    DbLookup: (mods.mm_dblookup, ("vars_col",)),
+    External: (mm_external, ("vars_col",)),
+    Audit: (mods.mm_audit, ("vars_col",)),
+    AddHmac: (mods.mm_rfc5424addhmac, ()),
+    Grok: (mods.mm_grok, ("vars_col",)),
+}
+# statements that rewrite the frame -> the method applying one
+_FRAME_STMTS = {
+    Set: "_apply_set", Unset: "_apply_unset", Normalize: "_apply_normalize",
+    **dict.fromkeys(_MM_ACTIONS, "_apply_mm"),
+}
+
+
 class RouteCompiler:
     """Compiles rulesets over a DataFrame into (annotated_df, actions)."""
 
@@ -488,19 +497,38 @@ class RouteCompiler:
         for rs in self.rulesets.values():
             self._col_mut |= _mutated_cols(rs.stmts)
         self._col_mut &= set(df.columns)
-        true = F.lit(True)
-        false = F.lit(False)
+        self._true, self._false = F.lit(True), F.lit(False)
         # bPreviousSuspended analog: suspension is per-ACTION state in
         # the reference (not per message), so a compile-time boolean
         # threads through the statement walk in textual order
         self._prev_suspended = False
-        self._exec_block(self.rulesets[entry].stmts, true, false, {entry})
+        self._conds, self._preds = {}, {}  # queued columns, see _flush
+        self._exec_block(
+            self.rulesets[entry].stmts, self._true, self._false, {entry}
+        )
+        self._flush()
         return self._df, self._actions
 
     # -------------------------------------------------------------------
     def _fresh(self, prefix: str) -> str:
         self._n += 1
         return f"_{prefix}_{self._n}"
+
+    def _flush(self):
+        """Add the queued columns as one projection of conditions and one
+        of the predicates and template snapshots that read them."""
+        for queued in (self._conds, self._preds):
+            if queued:
+                self._df = self._df.withColumns(queued)
+                queued.clear()
+
+    def _and(self, path: Column, c: Column) -> Column:
+        # TRUE & c is c; each Column op is a py4j round trip to the JVM
+        return c if path is self._true else path & c
+
+    def _live(self, path: Column, stopped: Column) -> Column:
+        """path & ~stopped: the rows a statement here acts on."""
+        return path if stopped is self._false else self._and(path, ~stopped)
 
     def _cond_of(self, st) -> Column:
         if isinstance(st, If):
@@ -510,8 +538,6 @@ class RouteCompiler:
                 st.selector, F.col("syslogfacility"), F.col("syslogseverity")
             )
         if isinstance(st, PropFilt):
-            from rsyslog_spark.templates import resolve_property
-
             return propfilt_predicate(
                 resolve_property(st.prop), st.op, st.value, st.negate
             )
@@ -519,7 +545,7 @@ class RouteCompiler:
 
     def _emit_action(self, st: Action, pred: Column, df_override=None):
         pred_name = self._fresh(f"act_{st.sink}")
-        self._df = self._df.withColumn(pred_name, pred)
+        self._preds[pred_name] = pred
         out_name = out_expr = snap = None
         if st.template is not None:
             out_name = self._fresh(f"out_{st.sink}")
@@ -533,7 +559,7 @@ class RouteCompiler:
                 # later set/unset doesn't leak backwards into the
                 # lazily-rendered template (ruleset.c sequential exec)
                 snap = self._fresh("tplvars")
-                self._df = self._df.withColumn(snap, F.col(self._vars_col))
+                self._preds[snap] = F.col(self._vars_col)
         col_snaps = None
         if out_expr is not None and self._col_mut:
             # same pinning for message columns a later mmtaghostname /
@@ -541,7 +567,7 @@ class RouteCompiler:
             col_snaps = {}
             for col in sorted(self._col_mut):
                 sc = self._fresh(f"tplcol_{col}")
-                self._df = self._df.withColumn(sc, F.col(col))
+                self._preds[sc] = F.col(col)
                 col_snaps[col] = sc
         self._actions.append(
             CompiledAction(
@@ -555,6 +581,13 @@ class RouteCompiler:
     ) -> Column:
         """Walk a statement list; returns the updated ``stopped`` column
         (disjunction of stop conditions reachable so far)."""
+        memo: dict = {}  # path & ~stopped, built once per value of stopped
+
+        def live() -> Column:
+            if memo.get("stopped") is not stopped:
+                memo.update(stopped=stopped, col=self._live(path, stopped))
+            return memo["col"]
+
         for st in stmts:
             if isinstance(st, Continue):
                 continue
@@ -569,11 +602,7 @@ class RouteCompiler:
                     not st.exec_when_prev_suspended or self._prev_suspended
                 )
                 suspended = st.sink in self.suspended_sinks
-                pred = (
-                    (path & ~stopped)
-                    if attempts and not suspended
-                    else F.lit(False)
-                )
+                pred = live() if attempts and not suspended else self._false
                 self._emit_action(st, pred)
                 if attempts and suspended and st.errorfile:
                     # actionWriteErrorFile (action.c:1410-1466): one
@@ -595,41 +624,27 @@ class RouteCompiler:
                             tpl.alias("template0"),
                         )
                     )
-                    self._emit_action(
-                        Action(st.errorfile, err_line), path & ~stopped
-                    )
+                    self._emit_action(Action(st.errorfile, err_line), live())
                 if attempts:
                     self._prev_suspended = suspended
             elif isinstance(st, Stop):
                 # everything on this path is stopped from here on
-                stopped = stopped | path
+                stopped = path if stopped is self._false else stopped | path
             elif isinstance(st, (If, PriFilt, PropFilt)):
                 cname = self._fresh("cond")
-                self._df = self._df.withColumn(cname, self._cond_of(st))
+                self._conds[cname] = self._cond_of(st)
                 c = F.col(cname)
-                stopped = self._exec_block(st.then, path & c, stopped, calling)
+                stopped = self._exec_block(
+                    st.then, self._and(path, c), stopped, calling
+                )
                 if st.els:
-                    stopped = self._exec_block(st.els, path & ~c, stopped, calling)
-            elif isinstance(st, Set):
-                self._apply_set(st, path & ~stopped)
-            elif isinstance(st, Unset):
-                self._apply_unset(st, path & ~stopped)
-            elif isinstance(st, Normalize):
-                self._apply_normalize(st, path & ~stopped)
-            elif isinstance(st, TagHostname):
-                self._apply_taghostname(st, path & ~stopped)
-            elif isinstance(st, SnmpTrapd):
-                self._apply_snmptrapd(st, path & ~stopped)
-            elif isinstance(st, External):
-                self._apply_external(st, path & ~stopped)
-            elif isinstance(st, DbLookup):
-                self._apply_dblookup(st, path & ~stopped)
-            elif isinstance(st, Audit):
-                self._apply_audit(path & ~stopped)
-            elif isinstance(st, AddHmac):
-                self._apply_addhmac(st, path & ~stopped)
-            elif isinstance(st, Grok):
-                self._apply_grok(st, path & ~stopped)
+                    stopped = self._exec_block(
+                        st.els, self._and(path, ~c), stopped, calling
+                    )
+            elif type(st) in _FRAME_STMTS:
+                # the rewrite reads the queued columns: add them first
+                self._flush()
+                getattr(self, _FRAME_STMTS[type(st)])(st, live())
             elif isinstance(st, Call):
                 if st.ruleset in calling:
                     raise ValueError(f"recursive call to {st.ruleset}")
@@ -640,7 +655,8 @@ class RouteCompiler:
             elif isinstance(st, CallIndirect):
                 stopped = self._exec_call_indirect(st, path, stopped, calling)
             elif isinstance(st, Foreach):
-                self._exec_foreach(st, path & ~stopped, calling)
+                self._flush()
+                self._exec_foreach(st, live(), calling)
             else:
                 raise TypeError(f"unknown statement {st!r}")
         return stopped
@@ -666,8 +682,6 @@ class RouteCompiler:
         )
 
     def _apply_normalize(self, st: Normalize, active: Column):
-        from rsyslog_spark.templates import resolve_property
-
         if st.use_rawmsg:
             src = F.col("rawmsg")
         elif st.variable:
@@ -715,39 +729,12 @@ class RouteCompiler:
                 ),
             )
 
-    # -- mm* actions: each statement's fields are its mods function's
-    # parameters; the routing path is the function's ``active`` gate --
-    def _apply_taghostname(self, st: TagHostname, active: Column):
-        self._df = mods.mm_taghostname(
-            self._df, **vars(st), localhostname=self.localhostname,
-            active=active,
-        )
-
-    def _apply_snmptrapd(self, st: SnmpTrapd, active: Column):
-        self._df = mods.mm_snmptrapd(self._df, **vars(st), active=active)
-
-    def _apply_dblookup(self, st: DbLookup, active: Column):
-        self._df = mods.mm_dblookup(
-            self._df, **vars(st), vars_col=self._vars_col, active=active
-        )
-
-    def _apply_external(self, st: External, active: Column):
-        self._df = mm_external(
-            self._df, **vars(st), vars_col=self._vars_col, active=active
-        )
-
-    def _apply_audit(self, active: Column):
-        self._df = mods.mm_audit(
-            self._df, vars_col=self._vars_col, active=active
-        )
-
-    def _apply_addhmac(self, st: AddHmac, active: Column):
-        self._df = mods.mm_rfc5424addhmac(self._df, **vars(st), active=active)
-
-    def _apply_grok(self, st: Grok, active: Column):
-        self._df = mods.mm_grok(
-            self._df, **vars(st), vars_col=self._vars_col, active=active
-        )
+    def _apply_mm(self, st, active: Column):
+        # the routing path is the mods function's ``active`` gate
+        fn, takes = _MM_ACTIONS[type(st)]
+        state = {"localhostname": self.localhostname, "vars_col": self._vars_col}
+        self._df = fn(self._df, **vars(st), **{k: state[k] for k in takes},
+                      active=active)
 
     def _apply_unset(self, st: Unset, active: Column):
         v = self._vars_col
@@ -771,9 +758,13 @@ class RouteCompiler:
         # the caller's later statements, and its stop must not stop the
         # caller. Save/restore the vars column around the block and
         # discard the block's stop state.
+        self._flush()
         save = self._fresh("qsave")
         self._df = self._df.withColumn(save, F.col(self._vars_col))
-        self._exec_block(stmts, path & ~stopped, F.lit(False), calling)
+        self._exec_block(
+            stmts, self._live(path, stopped), self._false, calling
+        )
+        self._flush()
         self._df = self._df.withColumn(self._vars_col, F.col(save)).drop(save)
         return stopped
 
@@ -784,11 +775,11 @@ class RouteCompiler:
         stop state sequentially is exact; an unmatched name is a NOP
         (ruleset.c:258-262)."""
         name_col = self._fresh("callind")
-        self._df = self._df.withColumn(name_col, st.expr.cast("string"))
+        self._conds[name_col] = st.expr.cast("string")
         for name in self.rulesets:
             if name in calling:
                 continue
-            branch = path & (F.col(name_col) == F.lit(name))
+            branch = self._and(path, F.col(name_col) == F.lit(name))
             stopped = self._exec_call(
                 self.rulesets[name].stmts, branch, stopped,
                 calling | {name},
@@ -892,7 +883,8 @@ class RouteCompiler:
         # sharing the action list + name counter
         outer_df, outer_actions_len = self._df, len(self._actions)
         self._df = ex
-        self._exec_block(st.body, F.lit(True), F.lit(False), calling)
+        self._exec_block(st.body, self._true, self._false, calling)
+        self._flush()
         body_df = self._df
         # foreach-body actions carry the exploded frame
         for a in self._actions[outer_actions_len:]:

@@ -19,11 +19,13 @@ timestamp properties.
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from rsyslog_spark.schema import FACILITY_NAMES, SEVERITY_NAMES
@@ -597,16 +599,26 @@ def compile_template(spec) -> Column:
     ``spec`` may be a builtin name ('RSYSLOG_TraditionalFileFormat'), a
     template string with %prop:from:to:options% fields, or a
     ListTemplate from the config frontend.
+
+    A text or builtin spec is built once per py4j gateway and `$/` table
+    (as tplProcessCnf binds it at load); a spec that raises is not cached.
     """
     if isinstance(spec, ListTemplate):
         return compile_list_template(spec)
+    return _compile_text(
+        spec, tuple(sorted(GLOBAL_VARS.items())), SparkContext._gateway
+    )
+
+
+@functools.cache
+def _compile_text(spec: str, _globals: tuple, _gateway) -> Column:
+    # cache keys after ``spec``: resolve_property reads GLOBAL_VARS
     if spec in BUILTIN_TEMPLATES:
         spec = BUILTIN_TEMPLATES[spec]
     if spec.startswith("__subtree__"):
         # config frontend marker for template(type="subtree" ...)
         return subtree_template(spec[len("__subtree__"):])
     parts: list[Column] = []
-    pos = 0
     toggle_field = False
     for seg in spec.split("%"):
         if toggle_field:
@@ -628,10 +640,6 @@ def compile_template(spec) -> Column:
     if not parts:
         return F.lit("")
     return F.concat(*parts)
-
-
-def with_template(df: DataFrame, spec: str, out: str = "formatted") -> DataFrame:
-    return df.withColumn(out, compile_template(spec))
 
 
 # -- $! tree rendering + fmunflatten ----------------------------------------

@@ -231,11 +231,11 @@ def parse_3164_opts(
             back = has_ay & ~use
             if back.any():
                 bi = g.index[back]
-                restp = g.loc[bi, "rest"]
                 g.loc[bi, "rest"] = (
                     g.loc[bi, "ayear"].str[1:]
                     + g.loc[bi, "xcolon"].fillna("")
-                    + (" " + restp).where(restp.notna(), "")
+                    + g.loc[bi, "sp"].fillna("")
+                    + g.loc[bi, "rest"].fillna("")
                 )
             year = year.where(~use, ay)
         g["year"] = year

@@ -262,6 +262,30 @@ class TestOwnedRows:
         assert out["timereported"].to_pylist() == [
             c[2] and pd.Timestamp(c[2]) for c in cases]
 
+    @pytest.mark.parametrize("on", [False, True])
+    def test_unused_after_time_year_puts_back_only_its_text(self, on):
+        """An after-time year outside 2000..2099 goes back into the
+        remainder exactly as it was: nothing follows ``1999:`` in the
+        first text, so MSG is empty with detect.YearAfterTimestamp on,
+        as with it off; the reference parser agrees."""
+        from parse_reference import parse_3164_opts
+
+        from rsyslog_spark.parse.pm3164 import Pm3164Options
+
+        texts = ["Mar 10 01:00:00 1999:", "Mar 10 01:00:00 1999:  two"]
+        n, opts = len(texts), Pm3164Options(detect_year_after_timestamp=on)
+        out = parse_chain_arrow(
+            pa.array(texts), pa.array([1] * n, pa.int64()),
+            pa.array([RECV] * n, pa.timestamp("us")), pa.array(["rx"] * n),
+            pa.array([False] * n), parsers=("rfc3164",), opts=opts,
+        )
+        assert out["syslogtag"].to_pylist() == ["1999:", "1999:"]
+        assert out["msg"].to_pylist() == ["", "  two"]
+        ref = parse_3164_opts(pd.Series(texts), pd.Series([1] * n),
+                              pd.Series([RECV] * n), opts,
+                              fromhost=pd.Series(["rx"] * n))
+        assert ref["msg"].tolist() == ["", "  two"]
+
     @pytest.mark.parametrize(
         "parsers",
         [("rfc5424", "rfc3164"), ("lastmsg", "rfc5424", "rfc3164"),

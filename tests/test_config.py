@@ -331,6 +331,49 @@ class TestGlobalVars:
             parse_config('ruleset(name="g") { unset $/x; stop }')
 
 
+class TestTemplateBuiltOnce:
+    """compile_template builds a text or builtin spec once per py4j
+    gateway and `$/` table, like tplProcessCnf binding it at load."""
+
+    def test_spec_built_once(self, spark, monkeypatch):
+        from rsyslog_spark import templates
+
+        seen = []
+        real = templates.resolve_property
+
+        def counting(name):
+            seen.append(name)
+            return real(name)
+
+        monkeypatch.setattr(templates, "resolve_property", counting)
+        spec = "%hostname% built-once %msg:::uppercase%\n"
+        first = templates.compile_template(spec)
+        assert templates.compile_template(spec) is first
+        assert seen == ["hostname", "msg"]
+
+    def test_rebuilt_after_global_vars_change(self, spark):
+        from rsyslog_spark.templates import compile_template, set_global_vars
+
+        def render():
+            col = compile_template("site=%$/site%")
+            return spark.range(1).select(col.alias("x")).first()["x"]
+
+        try:
+            set_global_vars({"site": "a"})
+            assert render() == "site=a"
+            set_global_vars({"site": "b"})
+            assert render() == "site=b"
+        finally:
+            set_global_vars(None)
+
+    def test_invalid_option_raises_on_every_compile(self, spark):
+        from rsyslog_spark.templates import compile_template
+
+        for _ in range(2):
+            with pytest.raises(ValueError, match="unsupported template option"):
+                compile_template("%msg:::no-such-option%")
+
+
 class TestMMNormalizeConfig:
     """action(type="mmnormalize" ...) in config text -> Normalize
     statement in the routing walk (plugins/mmnormalize/mmnormalize.c

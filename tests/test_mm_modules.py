@@ -605,6 +605,40 @@ class TestOmProg:
         )
         assert all(v.startswith("error:commit:") for v in st.values())
 
+    def test_yields_each_batch_before_pulling_the_next(self, spark):
+        """Without transactions a row's status is final once its line is
+        sent, so each batch's frame leaves before the next batch is
+        pulled: the partition is never held whole in memory."""
+        import sys
+
+        import pandas as pd
+
+        class _Frame:  # what om_prog reads of its DataFrame
+            schema = spark.createDataFrame([], "line string").schema
+
+            def mapInPandas(self, fn, schema):
+                return fn
+
+        pulled = []
+
+        def batches():
+            for i in range(2):
+                pulled.append(i)
+                yield pd.DataFrame({"line": [f"msgnum:{i}"]})
+
+        proc = external_mod.om_prog(
+            _Frame(), "line", f"{sys.executable} -c 'import sys; sys.stdin.read()'"
+        )
+        frames = proc(batches())
+        first = next(frames)
+        assert pulled == [0]
+        assert first.to_dict("records") == [
+            {"line": "msgnum:0", "prog_status": "ok"}
+        ]
+        assert next(frames)["line"].tolist() == ["msgnum:1"]
+        assert pulled == [0, 1]
+        assert next(frames, None) is None
+
     def test_startup_failure_marks_partition(self, spark, tmp_path):
         bad = tmp_path / "bad.py"
         bad.write_text("print('Error: not ready')\n")

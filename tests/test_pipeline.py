@@ -287,6 +287,30 @@ class TestFlagshipPlanShape:
         assert plan.count("BroadcastNestedLoopJoin") == 0
         # raw text does not ride back through the barrier on this path
         assert "rawmsg" not in ann.columns
+        # the plan that ran, above the transcript generator's own
+        # shuffles: one crossing, the aggregate's one shuffle, the two
+        # dimension joins and no Python eval node
+        agg.collect()
+        final = agg._jdf.queryExecution().executedPlan().toString().split(
+            "== Initial Plan ==")[0]
+        (crossing,) = _subtrees(final, "MapInArrow")
+        names = _node_names(final.replace(crossing, crossing.splitlines()[0]))
+        assert [names.count(n) for n in (
+            "MapInArrow", "Exchange", "BroadcastHashJoin",
+        )] == [1, 1, 2], names
+        assert not [n for n in names if "EvalPython" in n], names
+
+    def test_one_projection_per_route_block(self, transcripts):
+        """Above the role join the analyzed plan holds one Project each
+        for the join's output, the nomatch defaults, the vars map, the
+        routing conditions and the action predicates: the route
+        compiler adds a straight-line run of statements as one
+        projection of conditions and one of predicates, not one per
+        statement."""
+        ann, _ = build_flagship(transcripts)
+        names = _node_names(ann._jdf.queryExecution().analyzed().toString())
+        above = names[:names.index("Join")]
+        assert set(above) == {"Project"} and len(above) <= 5, names
 
     def test_count_plan_one_python_pass(self, spark, transcripts, tmp_path):
         """build_flagship's per-sink count plan over a stored table: the
@@ -314,6 +338,13 @@ class TestFlagshipPlanShape:
 def _disk_counts(spark, base: str, sinks) -> dict[str, int]:
     """Rows on disk in each named sink table under ``base``."""
     return {s: spark.read.parquet(f"{base}/{s}").count() for s in sinks}
+
+
+def _node_names(plan: str) -> list[str]:
+    """Node names of a tree-string plan, root first."""
+    import re
+
+    return re.findall(r"^[\s:|+\-]*(?:\*\(\d+\)\s+)?(\w+)", plan, re.M)
 
 
 def _subtrees(plan: str, node: str) -> list[str]:
