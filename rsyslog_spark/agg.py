@@ -204,9 +204,3 @@ def impstats(
         rows.append((f"action.{sink}.processed", n))
     return spark.createDataFrame(rows, "counter string, value long")
 
-
-def per_sink_counts_sql(df: DataFrame, preds: dict[str, str]) -> DataFrame:
-    """Exact per-sink counts from predicate columns in one pass."""
-    return df.agg(
-        *[F.sum(F.col(p).cast("long")).alias(s) for s, p in preds.items()]
-    )

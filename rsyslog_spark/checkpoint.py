@@ -60,23 +60,18 @@ class LineageLog:
             .collect()
         ]
 
-    def remaining(self, df: DataFrame, run_id: str) -> DataFrame:
-        """Filter out rows of already-committed partitions (idempotent
-        resume: partitions re-run only if their commit row is absent)."""
-        done = self.committed_partitions(run_id)
-        if not done:
-            return df
-        return df.filter(~F.col("partition_id").isin(done))
-
     def commit(self, df: DataFrame, run_id: str) -> DataFrame:
-        """Append one committed row per partition with row counts and
-        parse-failure metrics (per-partition row counts + parse-failure
-        metrics are the north-rule lineage payload)."""
-        has_ps = "parse_success" in df.columns
+        """Append one committed row per partition with its row count and
+        parse-failure count (the north-rule lineage payload).
+
+        ``parse_failures`` is null (unknown) when ``df`` has no
+        ``parse_success``, as for ``run_with_resume``, which commits its
+        raw bucketed input: per-partition counts there need the commit
+        to see the annotated frame (ROADMAP direction 2)."""
         pf = (
             F.sum((~F.col("parse_success")).cast("long"))
-            if has_ps
-            else F.lit(0).cast("long")
+            if "parse_success" in df.columns
+            else F.lit(None).cast("long")
         )
         stats = (
             df.groupBy("partition_id")
@@ -114,10 +109,12 @@ def run_with_resume(
     belongs to one checkpoint."""
     log = LineageLog(spark, lineage_path)
     bucketed = with_partition_id(df, n_buckets=n_buckets)
-    before = set(log.committed_partitions(run_id))
-    todo = log.remaining(bucketed, run_id)
+    done = log.committed_partitions(run_id)
+    # resume: a partition re-runs only if its commit row is absent
+    todo = (bucketed.filter(~F.col("partition_id").isin(done)) if done
+            else bucketed)
     n_todo = todo.select("partition_id").distinct().count()
     if n_todo:
         process(todo)
         log.commit(todo, run_id)
-    return {"processed_partitions": n_todo, "skipped": len(before)}
+    return {"processed_partitions": n_todo, "skipped": len(done)}

@@ -116,18 +116,11 @@ def build_flagship(
 
 def run_flagship(
     transcripts: DataFrame,
-    base_path: str | None = None,
+    base_path: str,
     key: str | None = None,
 ) -> dict[str, int]:
-    """Execute the flagship pipeline; write sinks when base_path given,
-    idempotently per ``key`` value when set (see ``sinks.fan_out``).
-    Returns exact per-sink counts."""
+    """Execute the flagship pipeline: write each sink table under
+    ``base_path``, idempotently per ``key`` value when set (see
+    ``sinks.fan_out``). Returns the rows written per sink."""
     annotated, actions = build_flagship(transcripts)
-    return fan_out(
-        annotated,
-        actions,
-        base_path or "/tmp/rsyslog_spark_sinks",
-        SINK_SPECS,
-        write=base_path is not None,
-        key=key,
-    )
+    return fan_out(annotated, actions, base_path, SINK_SPECS, key=key)

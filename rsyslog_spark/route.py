@@ -9,9 +9,10 @@ ruleset compiles to STATIC per-sink algebra:
 
     P_k = AND(enclosing conditions)  AND  NOT(any reachable earlier stop)
 
-so rsyslog's multicast-with-stop becomes N parallel filtered writes over
-ONE annotated DataFrame — single scan, exact per-sink counts, fully
-declarative for Catalyst. Actions never stop the script (execAct,
+so rsyslog's multicast-with-stop becomes one filtered write per sink
+(the union of that sink's actions' rows, ``sinks.fan_out``) over ONE
+annotated DataFrame — single scan, each write counting its own rows,
+fully declarative for Catalyst. Actions never stop the script (execAct,
 ruleset.c:199-218: action errors don't abort), so actions contribute
 nothing to downstream predicates.
 
@@ -280,7 +281,9 @@ class Ruleset:
 
 @dataclass
 class CompiledAction:
-    """One sink write: filter predicate + lazily-rendered payload.
+    """One action's rows for its sink: filter predicate + lazily-rendered
+    payload. ``fan_out`` writes each sink once, the union of its
+    actions' rows.
 
     ``df`` is None for row-plane actions (use the compile() frame);
     foreach-body actions carry their own exploded frame."""

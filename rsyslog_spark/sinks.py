@@ -1,4 +1,4 @@
-"""Sink fan-out, the one sink writer: N filtered writes over one frame.
+"""Sink fan-out, the one sink writer: one write per sink over one frame.
 
 Reference machinery: action.c (2360 LoC) — per-action queues, the
 transaction interface beginTransaction/doAction/commitTransaction
@@ -12,9 +12,11 @@ Spark mapping (SURVEY §2.10):
 - **dynafile ≡ partitionBy**: rsyslog computes the FILE NAME from a
   template per message and caches open files; Spark computes the
   partition directory from columns — same semantics, vectorized.
-- per-sink counts (our north rule) are computed in ONE aggregation pass
-  over the annotated frame (sum of each action's predicate), not N
-  count() jobs.
+- several actions naming one sink append to one file in rsyslog; here
+  the sink's write is the union of those actions' rows.
+- per-sink counts (our north rule) are observed on the sink's own write
+  (``Observation``, SURVEY §2.9): the count is the rows that write
+  wrote, and no job runs only to count.
 
 Batch, resume and streaming all write through ``fan_out``. With ``key``
 (a micro-batch's ``batch_id`` or a lineage bucket's ``partition_id``)
@@ -23,17 +25,18 @@ partition overwrite: a replayed batch or bucket replaces exactly its own
 partitions, so replay + idempotent write = exactly-once sink tables.
 
 Scale notes: the annotated frame is persisted before fan-out so the
-source is scanned once for N sinks + metrics; each write is a pure
+source is scanned once for the N sink writes; each write is a pure
 filter+project (no shuffle) unless the sink declares partitionBy, in
 which case AQE handles the dynamic-partition shuffle.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -64,57 +67,50 @@ def fan_out(
     actions: list[CompiledAction],
     base_path: str,
     sink_specs: dict[str, SinkSpec] | None = None,
-    write: bool = True,
     key: str | None = None,
 ) -> dict[str, int]:
-    """Write every action's rows to its sink table; return per-sink counts.
+    """Write each sink once, the union of its actions' rows; return the
+    rows each write wrote.
 
-    Counts come from a single aggregation job (one pass), mirroring the
-    reference's per-action counters (statsobj, runtime/statsobj.c) but
-    exact-per-batch instead of sampled. ``key``: see the module doc.
+    A sink's count is an ``Observation`` on its own write, the analog of
+    the reference's per-action counters (statsobj, runtime/statsobj.c)
+    but exact per batch. ``key``: see the module doc.
     """
     sink_specs = sink_specs or {}
     annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # one-pass exact per-sink counts (per plane: row-plane actions
-        # aggregate over `annotated`; foreach-body actions carry their
-        # own exploded frame — one aggregation pass per distinct plane)
         counts: dict[str, int] = {}
-        planes: dict[int, tuple[DataFrame, list[CompiledAction]]] = {}
-        for a in actions:
-            src = a.df if a.df is not None else annotated
-            planes.setdefault(id(src), (src, []))[1].append(a)
-        for src, acts in planes.values():
-            agg = src.agg(
-                *[
-                    F.sum(F.col(a.pred_col).cast("long")).alias(f"{i}")
-                    for i, a in enumerate(acts)
-                ]
-            ).first()
-            for i, a in enumerate(acts):
-                counts[a.sink] = counts.get(a.sink, 0) + int(agg[f"{i}"] or 0)
-
-        if write:
-            for a in actions:
-                spec = sink_specs.get(a.sink, SinkSpec(a.sink))
-                # render AFTER the filter (CompiledAction.output): only
-                # matching rows pay the template cost and the persisted
-                # annotated frame holds no rendered strings
-                out = a.output(annotated)
-                parts = ([key] if key else []) + spec.partition_by
-                if a.out_col is not None:
-                    cols = [F.col(a.out_col).alias("line"), *parts]
-                else:
-                    cols = [c for c in DEFAULT_SINK_COLUMNS if c in out.columns]
-                    cols += [c for c in parts if c not in cols]
-                w = out.select(*cols).write.mode("overwrite").format(spec.format)
-                if key:
-                    w = w.option("partitionOverwriteMode", "dynamic")
-                if spec.compression:
-                    w = w.option("compression", spec.compression)
-                if parts:
-                    w = w.partitionBy(*parts)
-                w.save(os.path.join(base_path, a.sink))
+        for sink in dict.fromkeys(a.sink for a in actions):
+            spec = sink_specs.get(sink, SinkSpec(sink))
+            parts = ([key] if key else []) + spec.partition_by
+            rows = functools.reduce(
+                lambda x, y: x.unionByName(y, allowMissingColumns=True),
+                [_sink_rows(a, annotated, parts)
+                 for a in actions if a.sink == sink],
+            )
+            obs = Observation()
+            w = rows.observe(obs, F.count(F.lit(1)).alias("n")).write
+            w = w.mode("overwrite").format(spec.format)
+            if key:
+                w = w.option("partitionOverwriteMode", "dynamic")
+            if spec.compression:
+                w = w.option("compression", spec.compression)
+            if parts:
+                w = w.partitionBy(*parts)
+            w.save(os.path.join(base_path, sink))
+            counts[sink] = obs.get["n"]
         return counts
     finally:
         annotated.unpersist()
+
+
+def _sink_rows(a: CompiledAction, annotated: DataFrame,
+               parts: list[str]) -> DataFrame:
+    """One action's rows: the template's ``line`` (rendered after the
+    filter, so the persisted frame holds no rendered strings) or the
+    default message columns, plus ``parts``."""
+    out = a.output(annotated)
+    if a.out_col is not None:
+        return out.select(F.col(a.out_col).alias("line"), *parts)
+    cols = [c for c in DEFAULT_SINK_COLUMNS if c in out.columns]
+    return out.select(*cols, *[c for c in parts if c not in cols])

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from rsyslog_spark.checkpoint import LineageLog, run_with_resume, with_partition_id
 from rsyslog_spark.pipeline import SINK_SPECS, build_flagship, run_flagship
 from rsyslog_spark.route import Action, If, RouteCompiler, Ruleset, Set, Stop, Unset
+from rsyslog_spark.sinks import fan_out
 from rsyslog_spark.skew import repartition_salted, with_salt
 
 EXPECTED = {
@@ -26,8 +27,8 @@ EXPECTED = {
 
 
 class TestFlagship:
-    def test_per_sink_counts(self, transcripts):
-        counts = run_flagship(transcripts)
+    def test_per_sink_counts(self, transcripts, tmp_path):
+        counts = run_flagship(transcripts, str(tmp_path / "sinks"))
         assert counts["parse_errors"] == EXPECTED["parse_errors"]
         assert counts["archive"] == EXPECTED["archive"]
         assert counts["by_app"] == EXPECTED["by_app"]
@@ -45,15 +46,16 @@ class TestFlagship:
     def test_fan_out_writes_match_counts(self, transcripts, tmp_path, spark):
         base = str(tmp_path / "sinks")
         counts = run_flagship(transcripts, base_path=base)
-        for sink in ("archive", "parse_errors", "exec_audit"):
-            n = spark.read.parquet(f"{base}/{sink}").count()
-            assert n == counts[sink], sink
+        assert sorted(counts) == sorted(SINK_SPECS)
+        assert _disk_counts(spark, base, counts) == counts
         # dynafile sink partitions by programname (omfile dynafile ≡
-        # partitionBy, tools/omfile.c:671)
-        import os
-
-        parts = os.listdir(f"{base}/by_app")
-        assert any(p.startswith("programname=") for p in parts)
+        # partitionBy, tools/omfile.c:671): its count is the sum over
+        # its partition directories
+        parts = [p for p in os.listdir(f"{base}/by_app")
+                 if p.startswith("programname=")]
+        assert parts
+        assert sum(spark.read.parquet(f"{base}/by_app/{p}").count()
+                   for p in parts) == counts["by_app"]
 
     def test_stop_excludes_failed_rows_downstream(self, transcripts):
         annotated, actions = build_flagship(transcripts)
@@ -62,6 +64,53 @@ class TestFlagship:
             F.col(archive.pred_col) & ~F.col("parse_success")
         ).count()
         assert bad == 0
+
+
+class TestFanOut:
+    """fan_out writes each sink once, the union of its actions' rows,
+    and returns the rows each write wrote."""
+
+    def test_two_actions_one_sink(self, transcripts, tmp_path, spark):
+        even = F.col("turn_idx") % 2 == 0
+        odd = F.col("turn_idx") % 2 == 1
+        rs = Ruleset("two", [If(even, then=[Action("same")]),
+                             If(odd, then=[Action("same")])])
+        ann, actions = RouteCompiler().add(rs).compile(transcripts, "two")
+        base = str(tmp_path / "sinks")
+        counts = fan_out(ann, actions, base)
+        want = transcripts.agg(F.sum(even.cast("long") + odd.cast("long"))
+                               ).first()[0]
+        assert counts == {"same": want}
+        assert _disk_counts(spark, base, counts) == counts
+
+    def test_templated_and_raw_action_one_sink(self, parsed, tmp_path,
+                                                spark):
+        first = F.col("turn_idx") == 0
+        rs = Ruleset("mix", [
+            If(first, then=[Action("mixed", "RSYSLOG_TraditionalFileFormat")]),
+            If(~first, then=[Action("mixed")]),
+        ])
+        ann, actions = RouteCompiler().add(rs).compile(parsed, "mix")
+        base = str(tmp_path / "sinks")
+        counts = fan_out(ann, actions, base)
+        out = spark.read.parquet(f"{base}/mixed")
+        assert {"line", "conv_id", "msg", "parse_success"} <= set(out.columns)
+        n_line = parsed.filter(first).count()
+        assert 0 < n_line < counts["mixed"] == parsed.count() == out.count()
+        assert out.filter(F.col("line").isNotNull()).count() == n_line
+        assert out.filter(F.col("conv_id").isNotNull()).count() == (
+            counts["mixed"] - n_line)
+
+    def test_suspended_sink_writes_empty_table(self, transcripts, tmp_path,
+                                               spark):
+        rs = Ruleset("fo", [Action("pri"),
+                            Action("alt", exec_when_prev_suspended=True)])
+        ann, actions = RouteCompiler(suspended_sinks={"pri"}).add(rs).compile(
+            transcripts, "fo")
+        base = str(tmp_path / "sinks")
+        counts = fan_out(ann, actions, base)
+        assert counts == {"pri": 0, "alt": transcripts.count()}
+        assert _disk_counts(spark, base, counts) == counts
 
 
 class TestRouteSemantics:
@@ -152,6 +201,36 @@ class TestCheckpoint:
         # all 16 buckets now committed -> full resume is a no-op
         assert sorted(log.committed_partitions("runP")) == list(range(16))
 
+    def test_resume_reads_lineage_once(self, transcripts, tmp_path, spark,
+                                       monkeypatch):
+        calls = []
+        read = LineageLog.committed_partitions
+
+        def counted(self, run_id):
+            calls.append(run_id)
+            return read(self, run_id)
+
+        monkeypatch.setattr(LineageLog, "committed_partitions", counted)
+        run_with_resume(spark, transcripts, "runO", str(tmp_path / "lineage"),
+                        lambda df: None, n_buckets=4)
+        assert calls == ["runO"]
+
+    def test_resume_lineage_parse_failures_unknown(self, transcripts,
+                                                   tmp_path, spark):
+        """run_with_resume commits its raw bucketed input, which has no
+        parse_success: the lineage says unknown (null), not a false 0,
+        while the parse_errors sink holds the run's failures."""
+        base = str(tmp_path / "sinks")
+        lineage = str(tmp_path / "lineage")
+        run_with_resume(
+            spark, transcripts, "runU", lineage,
+            lambda df: run_flagship(df, base, key="partition_id"),
+            n_buckets=4,
+        )
+        assert spark.read.parquet(f"{base}/parse_errors").count() == 100
+        pf = [r["parse_failures"] for r in spark.read.parquet(lineage).collect()]
+        assert pf and all(v is None for v in pf)
+
     def test_resume_keeps_committed_sink_rows(self, transcripts, tmp_path,
                                               spark):
         """Buckets 0-7 of 16 written and committed, then a resume: every
@@ -168,7 +247,7 @@ class TestCheckpoint:
             n_buckets=16,
         )
         assert r == {"processed_partitions": 8, "skipped": 8}
-        full = run_flagship(transcripts)
+        full = run_flagship(transcripts, str(tmp_path / "full"))
         assert _disk_counts(spark, base, full) == full
 
     def test_crash_before_commit_does_not_duplicate(self, transcripts,
@@ -196,7 +275,7 @@ class TestCheckpoint:
             n_buckets=16,
         )
         assert r == {"processed_partitions": 8, "skipped": 8}
-        full = run_flagship(transcripts)
+        full = run_flagship(transcripts, str(tmp_path / "full"))
         assert _disk_counts(spark, base, full) == full
 
     def test_lineage_carries_parse_failures(self, parsed, tmp_path, spark):
@@ -230,7 +309,7 @@ class TestFlagshipJob:
         for _ in range(2):
             assert job.main(argv) == 0
             reports.append(json.loads(capsys.readouterr().out.splitlines()[-1]))
-        full = run_flagship(transcripts)
+        full = run_flagship(transcripts, str(tmp_path / "full"))
         assert {k: full[k] for k in EXPECTED} == EXPECTED
         assert reports[0]["run"] == {"processed_partitions": 16, "skipped": 0}
         assert reports[0]["sink_counts"] == full
