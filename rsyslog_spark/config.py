@@ -179,24 +179,10 @@ class ParsedConfig:
             rc.add(rs)
         if self.main:
             rc.add(Ruleset("main", self.main))
+        # `call X` where X has a queue = queued call, decided by the
+        # compiler (the ruleset may be declared after the call)
         rc.queued = set(self.queued)
-        # `call X` where X has a queue = queued call (the grammar can't
-        # know at parse time: the ruleset may be declared later)
-        _mark_queued_calls(rc.rulesets.values(), self.queued)
         return rc
-
-
-def _mark_queued_calls(rulesets, queued: set):
-    def walk(stmts):
-        for st in stmts:
-            if isinstance(st, Call) and st.ruleset in queued:
-                st.queued = True
-            for sub in ("then", "els", "body"):
-                if hasattr(st, sub):
-                    walk(getattr(st, sub))
-
-    for rs in rulesets:
-        walk(rs.stmts)
 
 
 # functions callable in config expressions (registry parity:
@@ -799,13 +785,7 @@ class _Parser:
                 == "on",
             )
             tpl = p.get("template", "RSYSLOG_FileFormat")
-            tpl_text = self.cfg.templates.get(
-                tpl, BUILTIN_TEMPLATES.get(tpl)
-            )
-            if tpl_text is None:
-                raise ValueError(f"unknown template {tpl!r}")
-            self.cfg.sink_templates[sink] = tpl
-            return Action(sink, compile_template(tpl_text))
+            return Action(sink, self._template(tpl, sink))
         if typ == "omstdout":
             # plugins/omstdout/omstdout.c:79-82 param block (template,
             # ensurelfending). A console write is a sink table named
@@ -814,13 +794,7 @@ class _Parser:
             # default template RSYSLOG_FileFormat like the C's
             # newActInst fallback.
             tpl = p.get("template", "RSYSLOG_FileFormat")
-            tpl_text = self.cfg.templates.get(
-                tpl, BUILTIN_TEMPLATES.get(tpl)
-            )
-            if tpl_text is None:
-                raise ValueError(f"unknown template {tpl!r}")
-            self.cfg.sink_templates["stdout"] = tpl
-            return Action("stdout", compile_template(tpl_text))
+            return Action("stdout", self._template(tpl, "stdout"))
         if typ != "omfile":
             raise ValueError(f"unsupported action type {typ!r}")
         path = p.get("file") or p.get("dynafile") or p.get("dynfile")
@@ -841,16 +815,20 @@ class _Parser:
             os.path.splitext(os.path.basename(errf))[0] if errf else None
         )
         tpl = p.get("template")
-        if tpl:
-            tpl_text = self.cfg.templates.get(tpl, BUILTIN_TEMPLATES.get(tpl))
-            if tpl_text is None:
-                raise ValueError(f"unknown template {tpl!r}")
-            self.cfg.sink_templates[sink] = tpl
-            return Action(
-                sink, compile_template(tpl_text),
-                exec_when_prev_suspended=eowps, errorfile=errf,
-            )
-        return Action(sink, exec_when_prev_suspended=eowps, errorfile=errf)
+        return Action(
+            sink, self._template(tpl, sink) if tpl else None,
+            exec_when_prev_suspended=eowps, errorfile=errf,
+        )
+
+    def _template(self, name: str, sink: str | None = None) -> Column:
+        """The named template (config-declared or built-in) compiled to
+        a Column; an action's ``sink`` records it in sink_templates."""
+        text = self.cfg.templates.get(name, BUILTIN_TEMPLATES.get(name))
+        if text is None:
+            raise ValueError(f"unknown template {name!r}")
+        if sink is not None:
+            self.cfg.sink_templates[sink] = name
+        return compile_template(text)
 
     def _mmnormalize_action(self, p: dict) -> Normalize:
         """action(type="mmnormalize" ...) -> Normalize statement.
@@ -1363,13 +1341,7 @@ class _Parser:
             d = chr(delim) if isinstance(delim, int) else str(delim)
             return rf.rs_field(cs[0], d, c[2]), "s"
         if name == "exec_template":
-            tname = str(lit_or(0, ""))
-            tpl_text = self.cfg.templates.get(
-                tname, BUILTIN_TEMPLATES.get(tname)
-            )
-            if tpl_text is None:
-                raise ValueError(f"unknown template {tname!r}")
-            return compile_template(tpl_text), "s"
+            return self._template(str(lit_or(0, ""))), "s"
         if name == "lookup":
             tname = str(lit_or(0, ""))
             tbl = self.cfg.lookups.get(tname)

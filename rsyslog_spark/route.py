@@ -49,16 +49,20 @@ rainerscript.h:140; msgSetJSONFromVar semantics) — replicated via
 map_contains_key guard.
 
 Template rendering is LAZY: compile() annotates the frame with predicate
-(and vars-state) columns only; the rendered output line is attached by
+columns only; the rendered output line is attached by
 ``CompiledAction.output(df)`` AFTER the sink filter. Two scale effects:
 only matching rows pay the render cost (the reference renders per
 action submission too, tplToString tools/omfile.c path), and the hot
 predicate projection stays small enough for whole-stage codegen (a
 multi-sink eager render collapsed into one Project used to overflow
-janino's 64 KB method limit — PERF.md r01). Position-correct semantics
-(a template sees vars as of ITS statement, ruleset.c sequential exec)
-are preserved by snapshotting the vars map column at the action's
-position whenever the program contains any set/unset.
+janino's 64 KB method limit — PERF.md r01).
+
+Every action reads the message as of its position (ruleset.c
+sequential exec), templated or raw. ``_WRITES`` is the one table of
+which statements rewrite which columns; when the program holds any such
+statement, each action pins those columns at its position and
+``output`` restores them after the filter. A program without rewrites
+pins nothing.
 """
 
 from __future__ import annotations
@@ -286,19 +290,17 @@ class CompiledAction:
     actions' rows.
 
     ``df`` is None for row-plane actions (use the compile() frame);
-    foreach-body actions carry their own exploded frame."""
+    foreach-body actions carry their own exploded frame. ``pins`` maps
+    each column a statement of the program may rewrite (``_WRITES``) to
+    the column holding its value at this action's position; ``output``
+    restores them, so the action reads the message as of its position
+    whether it renders a template or routes the raw row."""
     sink: str
     pred_col: str
     out_col: str | None = None  # None -> whole row
     out_expr: Column | None = None
-    vars_snapshot: str | None = None
-    vars_col: str = "vars"
     df: DataFrame | None = None
-    # message-column snapshots {col: snapshot_col} — pinned when a
-    # later statement mutates message columns (mmtaghostname /
-    # mmrfc5424addhmac / parse_success writers), same discipline as
-    # vars_snapshot
-    col_snapshots: dict | None = None
+    pins: dict = field(default_factory=dict)
 
     def output(self, annotated: DataFrame | None = None) -> DataFrame:
         """This action's rows, with the template rendered AFTER the
@@ -306,15 +308,13 @@ class CompiledAction:
         frame's projection stays codegen-small)."""
         src = self.df if self.df is not None else annotated
         out = src.filter(F.col(self.pred_col))
+        if self.pins:
+            out = out.withColumns(
+                {c: F.col(p) for c, p in self.pins.items()}
+            )
         if self.out_col is None:
             return out
-        if self.vars_snapshot is not None:
-            # restore the vars state this statement position saw
-            out = out.withColumn(self.vars_col, F.col(self.vars_snapshot))
-        for col, snap in (self.col_snapshots or {}).items():
-            out = out.withColumn(col, F.col(snap))
         return out.withColumn(self.out_col, self.out_expr)
-
 
 
 def _check_foreach_body(
@@ -325,8 +325,8 @@ def _check_foreach_body(
 ) -> None:
     """Reject foreach bodies whose effects cannot survive the exploded
     plane: Set/Unset of anything but a loop variable (or its subkeys),
-    and Stop.  execForeach mutates the real message (ruleset.c:392-418);
-    this engine's loop body is a branched frame whose var mutations and
+    Stop, and every other ``_WRITES`` statement.  execForeach mutates
+    the real message (ruleset.c:392-418); this engine's loop body is a branched frame whose var mutations and
     stop state are discarded after the loop, so such configs must be
     rejected rather than silently diverge."""
     if isinstance(loop_vars, str):
@@ -348,19 +348,7 @@ def _check_foreach_body(
                 "in this engine (the loop runs on a branched exploded "
                 "frame); restructure as an if around the loop"
             )
-        elif isinstance(
-            st,
-            (
-                Normalize,
-                Audit,
-                TagHostname,
-                AddHmac,
-                Grok,
-                SnmpTrapd,
-                External,
-                DbLookup,
-            ),
-        ):
+        elif type(st) in _WRITES:
             raise ValueError(
                 f"{type(st).__name__} inside a foreach body mutates "
                 "message state outside the loop variable, which does "
@@ -383,49 +371,40 @@ def _check_foreach_body(
                 )
 
 
-def _has_mutation(stmts: list) -> bool:
-    for st in stmts:
-        if isinstance(
-            st,
-            (Set, Unset, Foreach, Normalize, Audit, Grok, External,
-             DbLookup),
-        ):
-            return True
-        for sub in ("then", "els", "body"):
-            if hasattr(st, sub) and _has_mutation(getattr(st, sub)):
-                return True
-    return False
-
-
-# message columns each statement type may overwrite — a template
-# emitted BEFORE such a statement must snapshot them (ruleset.c
-# sequential exec: the render sees the state at its own position)
-_COL_MUTATORS = (
-    (TagHostname, ("syslogtag", "programname", "hostname")),
-    (SnmpTrapd, (
+# statement type -> the columns it may rewrite ("vars" = the compiler's
+# vars column). This one table decides which statements rewrite the
+# frame, which a foreach body rejects, and which columns every action
+# pins at its position (ruleset.c sequential exec: an action sees the
+# message as it is at its own statement).
+_WRITES = {
+    Set: ("vars",),
+    Unset: ("vars",),
+    Normalize: ("vars", "parse_success"),
+    Audit: ("vars", "parse_success"),
+    Grok: ("vars",),
+    DbLookup: ("vars",),
+    TagHostname: ("syslogtag", "programname", "hostname"),
+    SnmpTrapd: (
         "syslogtag", "programname", "hostname", "syslogseverity", "pri",
-    )),
+    ),
     # mmexternal replies may set any msgSetPropViaJSON well-known name
-    (External, (
-        "msg", "rawmsg", "syslogtag", "programname", "hostname",
+    External: (
+        "vars", "msg", "rawmsg", "syslogtag", "programname", "hostname",
         "procid", "msgid", "structured_data", "syslogseverity",
         "syslogfacility", "pri",
-    )),
-    (AddHmac, ("structured_data",)),
-    (Audit, ("parse_success",)),
-    (Normalize, ("parse_success",)),
-)
+    ),
+    AddHmac: ("structured_data",),
+}
 
 
-def _mutated_cols(stmts: list) -> set:
+def _written(stmts: list) -> set:
+    """The ``_WRITES`` columns of every statement in ``stmts``, nested
+    blocks included."""
     out: set = set()
     for st in stmts:
-        for typ, cols in _COL_MUTATORS:
-            if isinstance(st, typ):
-                out.update(cols)
+        out.update(_WRITES.get(type(st), ()))
         for sub in ("then", "els", "body"):
-            if hasattr(st, sub):
-                out |= _mutated_cols(getattr(st, sub))
+            out |= _written(getattr(st, sub, ()))
     return out
 
 
@@ -438,11 +417,6 @@ _MM_ACTIONS = {
     Audit: (mods.mm_audit, ("vars_col",)),
     AddHmac: (mods.mm_rfc5424addhmac, ()),
     Grok: (mods.mm_grok, ("vars_col",)),
-}
-# statements that rewrite the frame -> the method applying one
-_FRAME_STMTS = {
-    Set: "_apply_set", Unset: "_apply_unset", Normalize: "_apply_normalize",
-    **dict.fromkeys(_MM_ACTIONS, "_apply_mm"),
 }
 
 
@@ -488,18 +462,16 @@ class RouteCompiler:
         self._vars_col = vars_col
         self._actions: list[CompiledAction] = []
         self._df = df
-        # templates snapshot vars state only when some statement mutates
-        # it — a mutation-free program (the common case) renders against
-        # the live column with zero extra columns
-        self._need_snapshots = any(
-            _has_mutation(rs.stmts) for rs in self.rulesets.values()
+        # the columns every action pins: those some statement may
+        # rewrite — none for a program without rewrites (the common
+        # case), which adds no extra column
+        written = _written(
+            [st for rs in self.rulesets.values() for st in rs.stmts]
         )
-        # message columns some statement may overwrite: templates pin
-        # these per emit position (empty set for the common case)
-        self._col_mut: set = set()
-        for rs in self.rulesets.values():
-            self._col_mut |= _mutated_cols(rs.stmts)
-        self._col_mut &= set(df.columns)
+        self._pinned = sorted(
+            set(df.columns)
+            & {vars_col if c == "vars" else c for c in written}
+        )
         self._true, self._false = F.lit(True), F.lit(False)
         # bPreviousSuspended analog: suspension is per-ACTION state in
         # the reference (not per message), so a compile-time boolean
@@ -519,7 +491,7 @@ class RouteCompiler:
 
     def _flush(self):
         """Add the queued columns as one projection of conditions and one
-        of the predicates and template snapshots that read them."""
+        of the predicates and pins that read them."""
         for queued in (self._conds, self._preds):
             if queued:
                 self._df = self._df.withColumns(queued)
@@ -546,10 +518,15 @@ class RouteCompiler:
             )
         raise TypeError(st)
 
-    def _emit_action(self, st: Action, pred: Column, df_override=None):
+    def _emit_action(self, st: Action, pred: Column):
         pred_name = self._fresh(f"act_{st.sink}")
         self._preds[pred_name] = pred
-        out_name = out_expr = snap = None
+        # pin the rewritable columns at THIS statement position so a
+        # later rewrite doesn't leak backwards into the lazily-built
+        # output (ruleset.c sequential exec)
+        pins = {c: self._fresh(f"pin_{c}") for c in self._pinned}
+        self._preds.update({p: F.col(c) for c, p in pins.items()})
+        out_name = out_expr = None
         if st.template is not None:
             out_name = self._fresh(f"out_{st.sink}")
             out_expr = (
@@ -557,26 +534,8 @@ class RouteCompiler:
                 if isinstance(st.template, Column)
                 else compile_template(st.template)
             )
-            if self._need_snapshots:
-                # pin the vars state at THIS statement position so a
-                # later set/unset doesn't leak backwards into the
-                # lazily-rendered template (ruleset.c sequential exec)
-                snap = self._fresh("tplvars")
-                self._preds[snap] = F.col(self._vars_col)
-        col_snaps = None
-        if out_expr is not None and self._col_mut:
-            # same pinning for message columns a later mmtaghostname /
-            # mmrfc5424addhmac / parse_success writer may overwrite
-            col_snaps = {}
-            for col in sorted(self._col_mut):
-                sc = self._fresh(f"tplcol_{col}")
-                self._preds[sc] = F.col(col)
-                col_snaps[col] = sc
         self._actions.append(
-            CompiledAction(
-                st.sink, pred_name, out_name, out_expr, snap,
-                self._vars_col, df_override, col_snaps,
-            )
+            CompiledAction(st.sink, pred_name, out_name, out_expr, pins=pins)
         )
 
     def _exec_block(
@@ -644,16 +603,19 @@ class RouteCompiler:
                     stopped = self._exec_block(
                         st.els, self._and(path, ~c), stopped, calling
                     )
-            elif type(st) in _FRAME_STMTS:
+            elif type(st) in _WRITES:
                 # the rewrite reads the queued columns: add them first
                 self._flush()
-                getattr(self, _FRAME_STMTS[type(st)])(st, live())
+                name = f"_apply_{type(st).__name__.lower()}"
+                getattr(self, name, self._apply_mm)(st, live())
             elif isinstance(st, Call):
                 if st.ruleset in calling:
                     raise ValueError(f"recursive call to {st.ruleset}")
+                # the target's queue decides (execCall, ruleset.c:283-302)
                 stopped = self._exec_call(
                     self.rulesets[st.ruleset].stmts,
-                    path, stopped, calling | {st.ruleset}, st.queued,
+                    path, stopped, calling | {st.ruleset},
+                    st.queued or st.ruleset in self.queued,
                 )
             elif isinstance(st, CallIndirect):
                 stopped = self._exec_call_indirect(st, path, stopped, calling)
@@ -811,7 +773,10 @@ class RouteCompiler:
         must fail at compile time, not silently differ (ADVICE r02).
         """
         key = _var_key(st.var)
-        _check_foreach_body(st.body, st.var, self.rulesets)
+        # a queued target runs on a copy of the message: unchecked
+        _check_foreach_body(st.body, st.var, {
+            n: rs for n, rs in self.rulesets.items() if n not in self.queued
+        })
         col = st.collection
         if st.mode == "array":
             items = F.transform(

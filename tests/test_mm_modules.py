@@ -109,6 +109,54 @@ ruleset(name="r") {
         assert _render(ann, actions, "before") == ["app[123.4]/server"]
         assert _render(ann, actions, "after") == ["newtag/frontAPP"]
 
+    def test_raw_and_templated_actions_read_their_position(
+        self, spark, tmp_path
+    ):
+        """A raw action and a templated action above mmtaghostname and a
+        set both read the message as of their own position — through
+        output() and through the rows fan_out writes."""
+        conf = """
+global(localhostname="frontAPP")
+template(name="t" type="string" string="%syslogtag%/%hostname%/%$!x%")
+ruleset(name="r") {
+    set $!x = "pre";
+    action(type="omfile" file="/x/raw.log")
+    action(type="omfile" file="/x/tpl.log" template="t")
+    action(type="mmtaghostname" tag="newtag" forcelocalhostname="on")
+    reset $!x = "post";
+    action(type="omfile" file="/x/rawafter.log")
+    action(type="omfile" file="/x/tplafter.log" template="t")
+}
+"""
+        ann, actions = compile_config(
+            _parsed_df(spark, [RAW_5424]), conf, entry="r"
+        )
+        by = {a.sink: a for a in actions}
+        cols = ["syslogtag", "hostname", "vars"]
+        raw = by["raw"].output(ann).select(*cols).collect()
+        assert [tuple(r) for r in raw] == [
+            ("app[123.4]", "server", {"x": "pre"})
+        ]
+        after = by["rawafter"].output(ann).select(*cols).collect()
+        assert [tuple(r) for r in after] == [
+            ("newtag", "frontAPP", {"x": "post"})
+        ]
+        assert _render(ann, actions, "tpl") == ["app[123.4]/server/pre"]
+        assert _render(ann, actions, "tplafter") == ["newtag/frontAPP/post"]
+
+        from rsyslog_spark.sinks import fan_out
+
+        base = str(tmp_path / "out")
+        assert fan_out(ann, actions, base) == dict.fromkeys(by, 1)
+        disk = {s: spark.read.parquet(f"{base}/{s}").first() for s in by}
+        assert (disk["raw"]["syslogtag"], disk["raw"]["hostname"]) == (
+            "app[123.4]", "server"
+        )
+        assert (disk["rawafter"]["syslogtag"],
+                disk["rawafter"]["hostname"]) == ("newtag", "frontAPP")
+        assert disk["tpl"]["line"] == "app[123.4]/server/pre"
+        assert disk["tplafter"]["line"] == "newtag/frontAPP/post"
+
     def test_programname_rederived(self, spark):
         df = mm_taghostname(_parsed_df(spark, [RAW_5424]), tag="nginx[12]:")
         row = df.select("syslogtag", "programname").first()

@@ -391,6 +391,13 @@ class TestFlagshipPlanShape:
         above = names[:names.index("Join")]
         assert set(above) == {"Project"} and len(above) <= 5, names
 
+    def test_no_pins_without_rewrites(self, transcripts):
+        """The flagship runs no rewriting statement, so no action pins
+        a column and the annotated frame holds no pin column."""
+        ann, actions = build_flagship(transcripts)
+        assert not [c for c in ann.columns if c.startswith("_pin_")]
+        assert not any(a.pins for a in actions)
+
     def test_count_plan_one_python_pass(self, spark, transcripts, tmp_path):
         """build_flagship's per-sink count plan over a stored table: the
         parse worker is the only Python in it, the dimension tables are

@@ -20,15 +20,33 @@ from pyspark.sql import functions as F
 
 from rsyslog_spark.config import compile_config
 from rsyslog_spark.route import (
+    _WRITES,
     Action,
+    AddHmac,
+    Audit,
     Call,
     CallIndirect,
+    DbLookup,
+    External,
     Foreach,
+    Grok,
+    Normalize,
     RouteCompiler,
     Ruleset,
     Set,
+    SnmpTrapd,
     Stop,
+    TagHostname,
+    Unset,
 )
+
+# one instance of every rewriting statement but Set/Unset (the foreach
+# check rejects them before any body runs, so dummy arguments do)
+_REWRITERS = [
+    Normalize(rules=[]), Audit(), Grok("%{WORD:w}"), TagHostname("t"),
+    SnmpTrapd(), External("/bin/true"), AddHmac("k", "sha256", "id"),
+    DbLookup("$!ip", "/x.mmdb", ["city"]),
+]
 
 
 @pytest.fixture(scope="module")
@@ -113,6 +131,19 @@ class TestForeach:
         assert (1, "a=1") in rows and (2, "=p") in rows
         assert all(r[0] != 3 for r in rows)
 
+    def test_rewriters_cover_writes(self):
+        assert {type(st) for st in _REWRITERS} == set(_WRITES) - {Set, Unset}
+
+    @pytest.mark.parametrize(
+        "stmt", _REWRITERS, ids=lambda st: type(st).__name__
+    )
+    def test_rewriter_rejected_in_body(self, df, stmt):
+        rc = RouteCompiler().add(Ruleset("fe", [
+            Foreach("$.e", F.col("payload"), body=[stmt, Action("x")]),
+        ]))
+        with pytest.raises(ValueError, match="inside a foreach body"):
+            rc.compile(df, "fe")
+
 
 class TestCallForms:
     def test_call_indirect_with_nop(self, df):
@@ -151,6 +182,20 @@ class TestCallForms:
         # caller unaffected by target's set AND stop (MsgDup copy)
         after = _rows(by["after"], ann)
         assert len(after) == 4 and all(r[1] == "pre" for r in after)
+
+    def test_plain_call_to_queued_ruleset(self, df):
+        """The target's queue decides: a plain Call into a ruleset
+        listed in ``queued`` runs on a copy of the message."""
+        rc = RouteCompiler()
+        rc.queued = {"audit"}
+        rc.add(Ruleset("audit", [Unset("$!t"), Stop()]))
+        rc.add(Ruleset("main", [
+            Set("$!t", F.lit("pre"), force_reset=True),
+            Call("audit"),
+            Action("after", F.element_at(F.col("vars"), "t")),
+        ]))
+        ann, actions = rc.compile(df, "main")
+        assert _rows(actions[0], ann) == [(i, "pre") for i in (1, 2, 3, 4)]
 
     def test_config_text_queued_and_indirect(self, df):
         conf = """
